@@ -324,13 +324,15 @@ def _stopword_counts_udf(specs: tuple):
     @F.pandas_udf("array<int>")
     def counts(toks):
         nd = len(toks)
+        null = toks.isna().to_numpy()
         res = np.zeros((nd, n_langs), dtype=np.int32)
         if nd:
-            lens = np.fromiter((len(t) for t in toks), dtype=np.int64,
-                               count=nd)
+            lens = np.fromiter((0 if t is None else len(t) for t in toks),
+                               dtype=np.int64, count=nd)
             if int(lens.sum()):
                 flat = np.concatenate(
-                    [np.asarray(t, dtype=object) for t in toks])
+                    [np.asarray(t, dtype=object) for t in toks
+                     if t is not None])
                 idx = key_index.get_indexer(flat)
                 m = np.where(idx >= 0, mask_vals[idx], 0)
                 doc_idx = np.repeat(np.arange(nd), lens)
@@ -340,7 +342,10 @@ def _stopword_counts_udf(specs: tuple):
                     for j in range(n_langs):
                         hit = (mi >> j) & 1 != 0
                         res[:, j] = np.bincount(di[hit], minlength=nd)
-        return pd.Series(list(res))
+        out = pd.Series(list(res))
+        if null.any():
+            out[null] = None  # NULL tokens -> NULL counts, as langid_struct
+        return out
 
     return counts
 
@@ -363,6 +368,11 @@ def _script_max(script_cols: dict) -> Column:
     return cols[0] if len(cols) == 1 else F.greatest(*cols)
 
 
+def _blank(text: Column) -> Column:
+    """NULL, empty or whitespace-only text: language unknown."""
+    return F.coalesce(F.length(F.trim(text)), F.lit(0)) == 0
+
+
 def langid_struct(text: Column, pack: LangPack = BUILTIN_PACK, *,
                   prefix_chars: int = LANGID_PREFIX_CHARS,
                   min_tokens: int = 4, min_score: float = 0.05,
@@ -378,7 +388,7 @@ def langid_struct(text: Column, pack: LangPack = BUILTIN_PACK, *,
     best = F.array_max(F.array(*_scored_structs(pack, _tokens(head),
                                                 n_tokens_f, script_cols)))
     return F.when(
-        (F.length(F.trim(text)) == 0)
+        _blank(text)
         | ((n_tokens < min_tokens) & (_script_max(script_cols)
                                       < F.lit(min_script)))
         | (best["score"] < min_score),
@@ -469,7 +479,7 @@ def with_langid(df: DataFrame, text_col: str = "text",
         best_c,
         F.expr("array_max(array(" + ", ".join(struct_sqls) + "))"))
     final = F.when(
-        (F.length(F.trim(F.col(text_col))) == 0)
+        _blank(F.col(text_col))
         | ((F.col(nt_c) < min_tokens) & (_script_max(script_cols)
                                          < F.lit(min_script)))
         | (F.col(best_c)["score"] < min_score),

@@ -217,34 +217,6 @@ def scrub_series(s: pd.Series, rules: tuple[SpanRule, ...]) -> pd.Series:
     return out
 
 
-def count_series(s: pd.Series, rules: tuple[SpanRule, ...]) -> pd.DataFrame:
-    """Per-rule hit counts on the ORIGINAL text (pre-scrub), vectorized."""
-    data = {}
-    for rule in rules:
-        rx = _rx(rule.pattern)
-        c = s.str.count(rx)
-        if rule.validator is not None:
-            v = rule.validator
-            c = s.str.findall(rx).map(lambda ms: sum(1 for m in ms if v(m)))
-        data[rule.name] = c.fillna(0).astype("int64")
-    return pd.DataFrame(data)
-
-
-def scrub_udfs(rules: tuple[SpanRule, ...]):
-    """(scrubbed_text_udf, counts_udf) — Arrow-vectorized kernels."""
-    count_schema = ", ".join(f"`{r.name}` long" for r in rules)
-
-    @pandas_udf("string")
-    def scrubbed(s: pd.Series) -> pd.Series:
-        return scrub_series(s.fillna(""), rules)
-
-    @pandas_udf(f"struct<{count_schema}>")
-    def counts(s: pd.Series) -> pd.DataFrame:
-        return count_series(s.fillna(""), rules)
-
-    return scrubbed, counts
-
-
 def fused_scrub_udf(rules: tuple[SpanRule, ...]):
     """One kernel: scrub once, then count each rule's replacement token
     with a cheap literal scan of the scrubbed text — half the regex

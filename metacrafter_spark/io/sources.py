@@ -6,7 +6,13 @@ delimiter sniffing, bulk directory walks, SQL via SQLAlchemy.  Spark
 equivalents:
 
 - csv/tsv/json/jsonl/ndjson/parquet/orc: native ``spark.read`` (codecs
-  gz/bz2/lz4/zstd/snappy handled by Hadoop transparently);
+  gz/bz2/lz4/zstd/snappy handled by Hadoop transparently).  Hadoop reads
+  .lz4/.snappy only in its block layout — the one Spark writes — and
+  reads an LZ4 frame or raw snappy as 0 rows, so ``scan_file`` raises
+  ValueError on those instead;
+- zip/xz/br text: decompressed on the driver (not Hadoop codecs);
+- head bytes for sniffing: gz/bz2/xz/zip through the stdlib, zst/br/
+  lz4/snappy through pyarrow's bundled codecs;
 - avro: ``spark-avro`` package when present (import-try gated);
 - xml: record-tag discovery on the driver (xmltodict over head bytes),
   then driver-parse → createDataFrame for small files (spark-xml jar is
@@ -24,8 +30,10 @@ Every reader returns a DataFrame ready for ``scan_dataframe``.
 
 from __future__ import annotations
 
+import contextlib
 import glob as _glob
 import os
+import struct
 from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -72,80 +80,129 @@ def detect_delimiter(first_line: str) -> str:
     return max(counts, key=lambda d: (counts[d], d == ","))
 
 
+_LZ4_FRAME_MAGIC = b"\x04\x22\x4d\x18"
+# Header of a one-block LZ4 frame: magic, FLG (version 1, independent
+# blocks), BD (4 MiB max block) and its header-checksum byte.
+_LZ4_ONE_BLOCK_FRAME = _LZ4_FRAME_MAGIC + b"\x60\x70\x73"
+
+
+@contextlib.contextmanager
+def codec_errors(what: str):
+    """pyarrow reports corrupt or truncated compressed input as OSError
+    (its ArrowInvalid already is a ValueError); callers of the decoders
+    here catch ValueError, so translate it."""
+    try:
+        yield
+    except OSError as e:
+        raise ValueError(f"{what}: {e}") from e
+
+
+def _is_hadoop_block(lead: bytes, size: int, codec: str) -> bool:
+    """Does a .lz4/.snappy file of ``size`` bytes start (``lead``) in
+    Hadoop's BlockCompressorStream layout: BE32 raw length, BE32 chunk
+    length, chunk?  Spark writes that layout, and it is the only one
+    ``spark.read`` decodes.  An LZ4 frame starts with its magic.  Raw
+    snappy starts with a varint: from 128 bytes of payload up its high
+    bit makes the "raw length" negative as a Java int, and below that
+    the "chunk length" would need three zero bytes of literal text."""
+    if len(lead) < 8 or (codec == "lz4" and lead[:4] == _LZ4_FRAME_MAGIC):
+        return False
+    raw, clen = struct.unpack(">II", lead[:8])
+    return 0 < raw < 1 << 31 and 0 < clen <= size - 8
+
+
+def _snappy_block(block: bytes) -> bytes:
+    """One raw snappy block; its varint prefix is the decoded length."""
+    import pyarrow as pa
+
+    size = 0
+    for i, b in enumerate(block[:5]):
+        size |= (b & 0x7F) << (7 * i)
+        if b < 0x80:
+            return pa.Codec("snappy").decompress(
+                block, decompressed_size=size, asbytes=True)
+    raise ValueError("snappy: bad length prefix")
+
+
+def _lz4_block(block: bytes) -> bytes:
+    """One raw LZ4 block.  pyarrow's one-shot ``lz4_raw`` decode returns
+    as many bytes as it is told to expect, and a Hadoop chunk's decoded
+    size is recorded nowhere, so the block is read as a one-block LZ4
+    frame, whose stream ends where the block does."""
+    import pyarrow as pa
+
+    frame = (_LZ4_ONE_BLOCK_FRAME + struct.pack("<I", len(block)) + block
+             + b"\0\0\0\0")
+    return pa.CompressedInputStream(pa.BufferReader(frame), "lz4").read()
+
+
+def _hadoop_blocks(f, codec: str, n: int) -> bytes:
+    """First n bytes of Hadoop's block layout: each block is a BE32 raw
+    length, then BE32-length-prefixed chunks until that many raw bytes
+    are out."""
+    decode = _lz4_block if codec == "lz4" else _snappy_block
+
+    def take(k: int) -> bytes:
+        data = f.read(k)
+        if len(data) < k:
+            raise ValueError(f"truncated Hadoop {codec} block")
+        return data
+
+    def be32() -> int:
+        return struct.unpack(">I", take(4))[0]
+
+    out = bytearray()
+    while len(out) < n and f.peek(1):
+        end = len(out) + be32()
+        while len(out) < end:
+            out += decode(take(be32()))
+    return bytes(out[:n])
+
+
+def _arrow_head(f, codec: str, n: int) -> bytes:
+    """First n decoded bytes of a zst/br/lz4/snappy file, through
+    pyarrow's bundled codecs."""
+    import pyarrow as pa
+
+    if codec in ("zst", "br"):
+        return pa.CompressedInputStream(
+            f, "zstd" if codec == "zst" else "brotli").read(n)
+    lead = f.read(8)
+    f.seek(0)
+    if not lead:
+        return b""
+    if codec == "lz4" and lead[:4] == _LZ4_FRAME_MAGIC:
+        return pa.CompressedInputStream(f, "lz4").read(n)
+    if codec == "lz4" or _is_hadoop_block(
+            lead, os.fstat(f.fileno()).st_size, codec):
+        return _hadoop_blocks(f, codec, n)
+    return _snappy_block(f.read())[:n]  # raw snappy: one block, whole file
+
+
 def _head_bytes(path: str, n: int = 1 << 20) -> bytes:
     """First n DECOMPRESSED bytes — encoding/delimiter sniffing must see
-    plaintext, so every codec we can open locally is handled here; for
-    codecs with no stdlib/installed decoder (zst/lz4/br without their
-    libs) raise, so callers fall back to explicit options instead of
-    sniffing garbage from compressed bytes."""
+    plaintext.  gz/bz2/xz/zip decode through the stdlib, zst/br/lz4/
+    snappy through pyarrow's bundled codecs (LZ4 frame or Hadoop block
+    layout; Hadoop block layout or raw snappy).  Corrupt or truncated
+    input raises ValueError; an empty file is an empty head."""
     import bz2
     import gzip
     import lzma
     import zipfile
 
-    if path.endswith(".zip"):
+    _, codec = detect_format(path)
+    if codec == "zip":
         with zipfile.ZipFile(path) as z:
             names = z.namelist()
             if not names:
                 return b""
             with z.open(names[0]) as f:
                 return f.read(n)
-    if path.endswith(".zst"):
-        try:
-            import zstandard
-        except ImportError:
-            # round 5: clean-room RFC 8878 decoder (conformance vs
-            # pyarrow's bundled libzstd in tests) — the gate is gone.
-            # A bounded compressed prefix is plenty for a plaintext
-            # head; truncation mid-block just ends the head early.
-            from metacrafter_spark.io.zstd_codec import decompress
-
-            with open(path, "rb") as f:
-                prefix = f.read(max(4 * n, 1 << 23))
-            return decompress(prefix, max_out=n, allow_truncated=True)[:n]
-        with open(path, "rb") as f:
-            return zstandard.ZstdDecompressor().stream_reader(f).read(n)
-    if path.endswith(".lz4"):
-        try:
-            import lz4.frame
-        except ImportError:
-            # round 5: clean-room pure-Python frame decoder (conformance
-            # vs the JVM's lz4-java in tests) — the gate is gone
-            from metacrafter_spark.io.lz4_snappy import decompress_lz4_frame
-
-            with open(path, "rb") as f:
-                return decompress_lz4_frame(f.read(), max_out=n)
-        with lz4.frame.open(path, "rb") as f:
-            return f.read(n)
-    if path.endswith(".snappy"):
-        try:
-            import snappy as _snappy
-        except ImportError:
-            from metacrafter_spark.io.lz4_snappy import decompress_snappy
-
-            with open(path, "rb") as f:
-                return decompress_snappy(f.read())[:n]
-        with open(path, "rb") as f:
-            return _snappy.uncompress(f.read())[:n]
-    if path.endswith(".br"):
-        try:
-            import brotli
-        except ImportError:
-            # round 5: clean-room pure-Python RFC 7932 decoder
-            # (conformance vs pyarrow's libbrotli in tests) — gate gone
-            from metacrafter_spark.io.brotli_codec import decompress
-
-            with open(path, "rb") as f:
-                return decompress(f.read(), max_out=n)[:n]
-        with open(path, "rb") as f:
-            return brotli.decompress(f.read())[:n]
-    opener = open
-    if path.endswith(".gz"):
-        opener = gzip.open
-    elif path.endswith(".bz2"):
-        opener = bz2.open
-    elif path.endswith(".xz"):
-        opener = lzma.open
+    if codec in ("zst", "br", "lz4", "snappy"):
+        with open(path, "rb") as f, codec_errors(path):
+            return _arrow_head(f, codec, n)
+    opener = {"gz": gzip.open, "bz2": bz2.open, "xz": lzma.open}.get(
+        codec, open)
     with opener(path, "rb") as f:
         return f.read(n)
 
@@ -234,19 +291,27 @@ def scan_file(
             )
         pdf = pdf.astype(object).where(pdf.notna(), None)
         return spark.createDataFrame(pdf)
+    if codec in {"lz4", "snappy"} and fmt in TEXT_FORMATS and (
+            os.path.isfile(path)):
+        with open(path, "rb") as f:
+            lead = f.read(8)
+        if lead and not _is_hadoop_block(lead, os.path.getsize(path), codec):
+            raise ValueError(
+                f"{path}: .{codec} text sources must be in Hadoop's block "
+                "layout (what Spark writes with option('compression', "
+                f"'{codec}')); spark.read reads an "
+                f"{'LZ4 frame' if codec == 'lz4' else 'raw snappy'} file "
+                "as 0 rows. Re-compress it, or decode it first."
+            )
     if fmt in {"csv", "tsv"}:
         if encoding is None or delimiter is None:
-            try:
-                head = _head_bytes(path, 1 << 16)
-            except NotImplementedError:
-                head = None  # undecodable codec: don't sniff compressed bytes
-            if head is not None:
-                encoding = encoding or detect_encoding(head)
-                if delimiter is None:
-                    first = head.decode(encoding, "replace").splitlines()[:1]
-                    delimiter = "\t" if fmt == "tsv" else detect_delimiter(
-                        first[0] if first else ","
-                    )
+            head = _head_bytes(path, 1 << 16)
+            encoding = encoding or detect_encoding(head)
+            if delimiter is None:
+                first = head.decode(encoding, "replace").splitlines()[:1]
+                delimiter = "\t" if fmt == "tsv" else detect_delimiter(
+                    first[0] if first else ","
+                )
         encoding = encoding or "UTF-8"
         delimiter = delimiter or ("\t" if fmt == "tsv" else ",")
         return (

@@ -28,10 +28,9 @@ each shard group writes one ``.warc.gz`` (warcinfo head + one gzip
 member per response record, mtime pinned to 0 so bytes are
 deterministic) and its ``.cdx`` sidecar, atomically via rename.
 
-``Content-Encoding: br`` decodes through the in-repo clean-room
-RFC 7932 decoder (io/brotli_codec.py) when no native brotli wheel is
-installed; truncated members/records/chunks raise ``ValueError`` with
-offsets.
+``Content-Encoding: br`` decodes through pyarrow's bundled brotli; a
+corrupt or truncated br body, member, record or chunk raises
+``ValueError`` (with offsets where the container has them).
 """
 
 from __future__ import annotations
@@ -250,14 +249,13 @@ def parse_http_response(payload: bytes) -> tuple[int, dict, bytes]:
         except zlib.error:
             body = zlib.decompress(body, -15)   # raw-deflate servers
     elif ce == "br":
-        try:
-            import brotli
+        import pyarrow as pa
 
-            body = brotli.decompress(body)
-        except ImportError:
-            from metacrafter_spark.io.brotli_codec import decompress
+        from metacrafter_spark.io.sources import codec_errors
 
-            body = decompress(body)
+        with codec_errors("Content-Encoding: br"):
+            body = pa.CompressedInputStream(
+                pa.BufferReader(body), "brotli").read()
     elif ce not in ("", "identity"):
         raise NotImplementedError(f"Content-Encoding: {ce}")
     return status, headers, body

@@ -56,40 +56,13 @@ def _rx(pattern: str) -> "re.Pattern[str]":
     return re.compile(pattern)
 
 
-def _regex_flag_udf(pattern: str):
-    """Arrow-vectorized anchored-regex predicate; compiled once per
-    executor process via the lru_cache above."""
-
-    @pandas_udf("boolean")
-    def flag(s: pd.Series) -> pd.Series:
-        rx = _rx(pattern)
-        # fillna first: null rows are excluded by the agg gate anyway,
-        # and a NaN-free input keeps the result a clean bool array
-        return s.fillna("").str.match(rx)
-
-    return flag
-
-
-def _func_flag_udf(func_name: str):
-    @pandas_udf("boolean")
-    def flag(s: pd.Series) -> pd.Series:
-        fn = FUNC_REGISTRY[func_name]
-        rx = fn.PATTERN
-        base = s.fillna("")
-        if func_name == "validators.domain":
-            base = base.str.lower()
-        return base.str.match(rx)
-
-    return flag
-
-
 def _multi_flag_udf(specs: tuple):
     """One Arrow-batched pandas UDF evaluating EVERY Python-side rule
     predicate (ppr anchored regex / func validators) and returning the
     flags as one ``array<boolean>`` — a single serialization boundary
-    instead of one UDF column per rule.  Same kernels as the matcher's
-    per-rule UDFs (``str.match`` on the anchored pattern; the func
-    registry's PATTERN with its lowercase convention)."""
+    instead of one UDF column per rule: ``str.match`` on the anchored
+    pattern, or the func registry's PATTERN with its lowercase
+    convention."""
     @pandas_udf("array<boolean>")
     def flags(s: pd.Series) -> pd.Series:
         base = s.fillna("")

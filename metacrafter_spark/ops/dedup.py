@@ -168,25 +168,6 @@ def dup_span_stats(
     )
 
 
-def minhash_signature(shingles: Column, n_hashes: int = 64) -> Column:
-    """k seeded minima over the shingle set — array<long> (pure-Column
-    variant; kept for composition in Column-only contexts).
-
-    IMPORTANT: pass a MATERIALIZED column (an attribute), not a derived
-    expression — the ``shingles`` tree is embedded inside the per-seed
-    lambda, so a non-trivial expression would be re-evaluated n_hashes
-    times per row (observed 6× wall-clock).  Prefer :func:`with_minhash`
-    whose numpy kernel is ~10× faster (the 64-seed interpreted-HOF loop
-    is expression-eval-bound, not hash-bound)."""
-    base = F.transform(shingles, lambda s: F.xxhash64(s))
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
-        lambda seed: F.array_min(
-            F.transform(base, lambda h: F.xxhash64(h, seed))
-        ),
-    )
-
-
 def _minhash_consts(n_hashes: int):
     # multiply-shift universal-hash family over Z/2^64: odd multipliers
     # from golden-ratio multiples (deterministic, no RNG)

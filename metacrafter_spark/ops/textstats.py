@@ -96,19 +96,6 @@ def _fp_from(words: Column, gram_hashes: Column, window: int = 8) -> Column:
     ).otherwise(F.xxhash64(F.concat_ws(" ", words)))
 
 
-def fingerprint64(text: Column, gram: int = 4, window: int = 8,
-                  max_words: int = 2000) -> Column:
-    """Winnowing fingerprint: xxhash64 of the sorted set of per-window
-    minimum 4-gram hashes (robust to small edits; Schleimer et al.).
-
-    Single-expression form for Column-only contexts; prefer
-    :func:`with_text_stats`, which materializes the words/gram-hash
-    arrays as columns first (this inline form embeds the words tree in
-    each zip_with operand — correct, but the staged path is faster)."""
-    words = _fp_words(text, max_words)
-    return _fp_from(words, _fp_gram_hashes(words, gram), window)
-
-
 def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     t = F.col(text_col)
     w_c, gh_c = "__ts_words", "__ts_grams"

@@ -367,24 +367,6 @@ def labels_dataframe(spark: SparkSession, report: dict[str, Any]) -> DataFrame:
     )
 
 
-def stats_dataframe(spark: SparkSession, report: dict[str, Any]) -> DataFrame:
-    rows = []
-    for st in report["stats"].values():
-        rows.append(tuple(
-            ",".join(st[h]) if h == "tags"
-            else (",".join(st[h] or []) if h == "dictvalues" else st[h])
-            for h in STATS_HEADERS
-        ))
-    return spark.createDataFrame(
-        rows,
-        "key string, ftype string, is_dictkey boolean, is_uniq boolean, "
-        "n_uniq long, share_uniq double, minlen long, maxlen long, "
-        "avglen double, tags string, has_digit long, has_alphas long, "
-        "has_special long, minval double, maxval double, has_any_digit boolean, "
-        "has_any_alphas boolean, has_any_special boolean, dictvalues string",
-    )
-
-
 def scan_items(spark: SparkSession, items: list, **kwargs) -> dict[str, Any]:
     """scan_data parity entry for in-memory list-of-dicts (core.py:1157).
 

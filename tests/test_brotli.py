@@ -1,15 +1,15 @@
-"""Clean-room brotli decoder (io/brotli_codec.py) — conformance against
-pyarrow's bundled libbrotli encoder (an independent C implementation),
-across all quality levels, payload shapes (dictionary-transform-heavy
-English/HTML, incompressible, repetitive, UTF-8), multi-meta-block
-sizes, head reads, and the truncation/garbage error contract."""
+""".br head reads (io/sources.py ``_head_bytes``, pyarrow's bundled
+libbrotli) — round trips across all quality levels and payload shapes
+(dictionary-transform-heavy English/HTML, incompressible, repetitive,
+UTF-8), multi-meta-block sizes, bounded heads, the driver-side .br
+scan, and the ValueError contract for truncated or garbage input."""
 
 from __future__ import annotations
 
 import pyarrow as pa
 import pytest
 
-from metacrafter_spark.io.brotli_codec import _load_tables, decompress
+from metacrafter_spark.io.sources import _head_bytes
 
 
 def _bc(level):
@@ -62,64 +62,57 @@ PAYLOADS = {
 }
 
 
+def _head(tmp_path, comp: bytes, n: int = 1 << 23) -> bytes:
+    p = tmp_path / "data.csv.br"
+    p.write_bytes(comp)
+    return _head_bytes(str(p), n)
+
+
 @pytest.mark.parametrize("name", sorted(PAYLOADS))
 @pytest.mark.parametrize("level", [1, 2, 5, 9, 11])
-def test_roundtrip_vs_libbrotli(name, level):
+def test_roundtrip_vs_libbrotli(tmp_path, name, level):
     data = PAYLOADS[name]
-    comp = _bc(level).compress(data, asbytes=True)
-    assert decompress(comp) == data
+    assert _head(tmp_path, _bc(level).compress(data, asbytes=True)) == data
 
 
-def test_multi_metablock_large_input():
-    # > 4 MiB forces several meta-blocks and exercises cross-meta-block
-    # ring-buffer / context-byte continuity.
+def test_multi_metablock_large_input(tmp_path):
+    # > 4 MiB forces several meta-blocks
     big = b"the quick brown fox jumps over the lazy dog. " * 120000
     for level in (1, 9):
-        comp = _bc(level).compress(big, asbytes=True)
-        assert decompress(comp) == big
+        assert _head(tmp_path, _bc(level).compress(big, asbytes=True)) == big
 
 
-def test_max_out_stops_early_and_is_prefix_exact():
+def test_max_out_stops_early_and_is_prefix_exact(tmp_path):
     big = _english(2_000_000)
     comp = _bc(9).compress(big, asbytes=True)
-    head = decompress(comp, max_out=4096)
-    assert len(head) >= 4096
-    assert head == big[:len(head)]
+    assert _head(tmp_path, comp, 4096) == big[:4096]
 
 
-def test_truncation_raises():
+def test_truncation_raises(tmp_path):
     comp = _bc(5).compress(_english(50000), asbytes=True)
-    for cut in (0, 1, 3, len(comp) // 2, len(comp) - 1):
-        with pytest.raises(ValueError):
-            decompress(comp[:cut])
+    for cut in (1, 3, len(comp) // 2, len(comp) - 1):
+        with pytest.raises(ValueError, match="[Tt]runcated"):
+            _head(tmp_path, comp[:cut])
+    # an empty file is an empty head, as for .gz and .zst
+    assert _head(tmp_path, b"") == b""
 
 
-def test_garbage_raises_not_crashes():
+def test_garbage_raises_not_crashes(tmp_path):
     for junk in (b"xxxx", b"\xff" * 64, _semirandom(512, seed=7)):
-        try:
-            decompress(junk)
-        except ValueError:
-            pass  # BrotliError is a ValueError
+        with pytest.raises(ValueError):
+            _head(tmp_path, junk)
 
 
-def test_static_dictionary_matches_rfc_digest():
-    # _load_tables pins the dictionary to the SHA-256 that RFC 7932
-    # itself publishes and re-derives the computable context-LUT parts;
-    # a corrupt data file cannot load.
-    _load_tables()
-    from metacrafter_spark.io import brotli_codec
+def test_br_head_read_scan_gate(tmp_path, spark):
+    """A .csv.br source sniffs and scans through scan_file's driver-side
+    decompression."""
+    from metacrafter_spark.io.sources import scan_file
 
-    assert len(brotli_codec._DICTIONARY) == 122784
-    # spot words at known (length, index) slots resolve to real text
-    assert brotli_codec._DICTIONARY[:4] == b"time"
-
-
-def test_br_head_read_scan_gate(tmp_path):
-    # io/sources.py .br suffix path end-to-end without a brotli wheel.
-    from metacrafter_spark.io.sources import _head_bytes
-
-    text = _english(30000)
+    text = b"id;word\n" + b"\n".join(
+        b"%d;%s" % (i, w) for i, w in enumerate(_english(30000).split()))
     p = tmp_path / "docs.csv.br"
     p.write_bytes(_bc(5).compress(text, asbytes=True))
-    head = _head_bytes(str(p), 1000)
-    assert head == text[:1000]
+    assert _head_bytes(str(p), 1000) == text[:1000]
+    df = scan_file(spark, str(p))
+    assert df.columns == ["id", "word"]
+    assert df.count() == text.count(b"\n")

@@ -188,6 +188,11 @@ def test_with_langid_matches_single_expression(spark):
     from metacrafter_spark.corpus.langid import langid_struct, with_langid
 
     corpus = synth_webpages(spark, 400, seed=7, partitions=8)
+    # a NULL-text row must neither fail the stopword-count kernel nor
+    # diverge from the single-expression form
+    corpus = corpus.unionByName(
+        corpus.limit(1).withColumn("url", F.lit("https://null.example/"))
+        .withColumn("text", F.lit(None).cast("string")))
     staged = with_langid(corpus).select("url", "langid_lang", "langid_score")
     single = (
         corpus.withColumn("s", langid_struct(F.col("text")))
@@ -196,6 +201,7 @@ def test_with_langid_matches_single_expression(spark):
     )
     assert staged.exceptAll(single).count() == 0
     assert single.exceptAll(staged).count() == 0
+    assert staged.count() == 401
 
 
 def test_iceberg_tableio_gate(spark):
@@ -741,3 +747,19 @@ def test_repetition_pass_thresholds(spark):
     # thresholds for absent metrics are skipped
     stats = with_repetition_stats(df, top_ns=(2,), dup_ns=())
     assert "rep_pass" in repetition_pass(stats).columns
+
+
+def test_classify_corpus_null_text_row(spark):
+    """A NULL-text row flows through classification: every row comes
+    back and ``keep`` is never NULL."""
+    from pyspark.sql import functions as F
+
+    base = synth_webpages(spark, 30, seed=5)
+    corpus = base.unionByName(
+        base.limit(1).withColumn("url", F.lit("https://null.example/"))
+        .withColumn("text", F.lit(None).cast("string")))
+    rows = classify_corpus(corpus).select("url", "keep").collect()
+    assert len(rows) == 31
+    assert all(r["keep"] is not None for r in rows)
+    assert [r["keep"] for r in rows if r["url"] == "https://null.example/"] \
+        == [False]

@@ -250,16 +250,25 @@ def test_compact_parquet(spark, tmp_path):
         compact_parquet(spark, src, dst, target_file_mb=256)
 
 
-def test_lz4_snappy_pure_python_decoders(spark):
-    """Round-5: .lz4/.snappy head reads no longer gate — clean-room
-    pure-Python decoders, conformance-tested against the INDEPENDENT
-    encoders bundled with Spark's JVM (lz4-java block fast/HC + frame
-    writer, snappy-java), including overlap copies, incompressible
-    data, long runs, and the frame head-limit path."""
+def _hadoop_block_file(chunks) -> bytes:
+    """Hadoop's block layout: per block a BE32 raw length, then the
+    BE32-length-prefixed compressed chunks."""
+    import struct
+
+    return b"".join(
+        struct.pack(">I", raw) + b"".join(
+            struct.pack(">I", len(c)) + c for c in comp)
+        for raw, comp in chunks)
+
+
+def test_lz4_snappy_head_reads(spark, tmp_path):
+    """.lz4/.snappy head reads decode what the JVM's independent
+    encoders write (lz4-java fast/HC blocks and frame writer,
+    snappy-java), including overlap copies, incompressible data, long
+    runs, multi-chunk blocks and the frame head limit."""
     import numpy as np
-    from metacrafter_spark.io.lz4_snappy import (
-        decompress_lz4_block, decompress_lz4_frame, decompress_snappy,
-    )
+    import pytest as _pt
+
     from metacrafter_spark.io.sources import _head_bytes
 
     jvm = spark._jvm
@@ -271,14 +280,39 @@ def test_lz4_snappy_pure_python_decoders(spark):
                                                    dtype=np.uint8)),
         b"a" * 100000,
     ]
+
+    def head(name, data, n=1 << 20):
+        p = tmp_path / name
+        p.write_bytes(data)
+        return _head_bytes(str(p), n)
+
     Snappy = jvm.org.xerial.snappy.Snappy
-    for p in payloads:
-        assert decompress_snappy(bytes(Snappy.compress(bytearray(p)))) == p
     fac = jvm.net.jpountz.lz4.LZ4Factory.fastestInstance()
-    for compressor in (fac.fastCompressor(), fac.highCompressor()):
-        for p in payloads:
-            assert decompress_lz4_block(
-                bytes(compressor.compress(bytearray(p)))) == p
+    for p in payloads:
+        raw_snappy = bytes(Snappy.compress(bytearray(p)))
+        assert head("raw.snappy", raw_snappy) == p
+        assert head("block.snappy",
+                    _hadoop_block_file([(len(p), [raw_snappy])])) == p
+        for compressor in (fac.fastCompressor(), fac.highCompressor()):
+            block = bytes(compressor.compress(bytearray(p)))
+            assert head("block.lz4",
+                        _hadoop_block_file([(len(p), [block])])) == p
+    # a block split into several chunks (Hadoop does this for one write
+    # larger than its buffer), then a second block; heads stop early
+    a, b, c = payloads[0], payloads[3], payloads[2]
+    comp = fac.fastCompressor()
+    lz4 = _hadoop_block_file([
+        (len(a) + len(b), [bytes(comp.compress(bytearray(x))) for x in (a, b)]),
+        (len(c), [bytes(comp.compress(bytearray(c)))]),
+    ])
+    assert head("multi.lz4", lz4) == a + b + c
+    assert head("multi.lz4", lz4, 100) == a[:100]
+    snappy = _hadoop_block_file([
+        (len(a) + len(b), [bytes(Snappy.compress(bytearray(x)))
+                           for x in (a, b)]),
+        (len(c), [bytes(Snappy.compress(bytearray(c)))]),
+    ])
+    assert head("multi.snappy", snappy) == a + b + c
 
     baos = jvm.java.io.ByteArrayOutputStream()
     fos = jvm.net.jpountz.lz4.LZ4FrameOutputStream(baos)
@@ -287,26 +321,13 @@ def test_lz4_snappy_pure_python_decoders(spark):
     fos.write(bytearray(big))
     fos.close()
     frame = bytes(baos.toByteArray())
-    assert decompress_lz4_frame(frame) == big
-    assert decompress_lz4_frame(frame, max_out=100) == big[:100]
+    assert head("rows.jsonl.lz4", frame) == big
+    assert head("rows.jsonl.lz4", frame, 100) == big[:100]
 
-    # head-byte reads end-to-end through the source layer
-    import tempfile, os, json
-    d = tempfile.mkdtemp()
-    rows = "".join(json.dumps({"i": i}) + "\n" for i in range(500)).encode()
-    p_lz4 = os.path.join(d, "rows.jsonl.lz4")
-    baos = jvm.java.io.ByteArrayOutputStream()
-    fos = jvm.net.jpountz.lz4.LZ4FrameOutputStream(baos)
-    fos.write(bytearray(rows)); fos.close()
-    open(p_lz4, "wb").write(bytes(baos.toByteArray()))
-    assert _head_bytes(p_lz4, 200) == rows[:200]
-    p_sn = os.path.join(d, "rows.jsonl.snappy")
-    open(p_sn, "wb").write(bytes(Snappy.compress(bytearray(rows))))
-    assert _head_bytes(p_sn, 200) == rows[:200]
-
-    # malformed inputs raise, never hang
-    import pytest as _pt
-    with _pt.raises(ValueError, match="magic"):
-        decompress_lz4_frame(b"\x00\x01\x02\x03\x04\x05\x06\x07")
+    # malformed inputs raise ValueError, never hang
     with _pt.raises(ValueError):
-        decompress_snappy(b"\x0a\x01")   # declared 10, delivers junk
+        head("bad.lz4", b"\x00\x01\x02\x03\x04\x05\x06\x07")
+    with _pt.raises(ValueError):
+        head("bad.snappy", b"\x0a\x01")   # declared 10, delivers junk
+    with _pt.raises(ValueError, match="truncated"):
+        head("cut.lz4", lz4[:-3])

@@ -5,7 +5,7 @@ round-trips, HTTP payload decoding (chunked / gzip / deflate),
 member-per-record gzip splitting with CDX offset agreement, the two
 distributed scans (whole-file and CDX range-fetch) against the
 synthetic web corpus, determinism across partitionings, and the
-honest truncation/brotli gates.
+truncation and brotli-body errors.
 """
 
 import gzip
@@ -75,8 +75,7 @@ def test_http_raw_deflate_server():
 
 
 def test_http_brotli_body_decodes():
-    # round 5: the br gate is gone — bodies decode through the clean-room
-    # RFC 7932 decoder (io/brotli_codec.py).
+    # br bodies decode through pyarrow's bundled brotli
     import pyarrow as pa
 
     body = b"<html><body>brotli-encoded page body</body></html>" * 20

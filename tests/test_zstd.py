@@ -1,8 +1,7 @@
-"""Clean-room zstd decoder (io/zstd_codec.py) — conformance against
-pyarrow's bundled libzstd encoder (an independent C implementation),
-across compression levels (different literals/sequence modes), block
-boundaries, frame features, and the xxh64 primitive vs Spark's
-independent JVM xxhash64."""
+""".zst head reads (io/sources.py ``_head_bytes``, pyarrow's bundled
+libzstd) — round trips across compression levels, block boundaries and
+frame features, bounded heads, and the ValueError contract for
+malformed or truncated input."""
 
 from __future__ import annotations
 
@@ -11,7 +10,7 @@ import struct
 import pyarrow as pa
 import pytest
 
-from metacrafter_spark.io.zstd_codec import ZstdError, decompress, xxh64
+from metacrafter_spark.io.sources import _head_bytes
 
 
 def _zc(level=None):
@@ -58,110 +57,78 @@ PAYLOADS = {
 }
 
 
+def _head(tmp_path, comp: bytes, n: int = 1 << 20) -> bytes:
+    p = tmp_path / "data.csv.zst"
+    p.write_bytes(comp)
+    return _head_bytes(str(p), n)
+
+
 @pytest.mark.parametrize("name", sorted(PAYLOADS))
 @pytest.mark.parametrize("level", [1, 3, 19])
-def test_roundtrip_vs_libzstd(name, level):
+def test_roundtrip_vs_libzstd(tmp_path, name, level):
     data = PAYLOADS[name]
-    comp = _zc(level).compress(data, asbytes=True)
-    assert decompress(comp) == data
+    assert _head(tmp_path, _zc(level).compress(data, asbytes=True)) == data
 
 
-def test_multi_frame_concatenation():
+def test_multi_frame_concatenation(tmp_path):
     a, b = _words(3000), _html(3000)
     comp = _zc().compress(a, asbytes=True) + _zc().compress(b, asbytes=True)
-    assert decompress(comp) == a + b
+    assert _head(tmp_path, comp) == a + b
 
 
-def test_skippable_frame_is_skipped():
+def test_skippable_frame_is_skipped(tmp_path):
     a = _words(2000)
     skippable = struct.pack("<II", 0x184D2A50, 7) + b"sevenby"
-    comp = skippable + _zc().compress(a, asbytes=True)
-    assert decompress(comp) == a
+    assert _head(tmp_path, skippable + _zc().compress(a, asbytes=True)) == a
 
 
-def test_max_out_stops_early_and_is_prefix_exact():
+def test_max_out_stops_early_and_is_prefix_exact(tmp_path):
     data = _html(300000)
     comp = _zc(19).compress(data, asbytes=True)
-    head = decompress(comp, max_out=10000)
-    assert len(head) >= 10000
-    assert head == data[: len(head)]
+    assert _head(tmp_path, comp, 10000) == data[:10000]
 
 
-def test_truncated_prefix_head_read():
-    """A bounded compressed prefix decodes to an exact plaintext prefix
-    with allow_truncated (the sources.py head-sniff path)."""
+def test_truncated_prefix_head_read(tmp_path):
+    """A head that fits in a truncated file's decodable prefix reads
+    exactly; reading past it raises ValueError."""
     data = _html(400000)
     comp = _zc(3).compress(data, asbytes=True)
-    part = decompress(comp[: len(comp) // 2], allow_truncated=True)
-    assert part and part == data[: len(part)]
-    with pytest.raises((ZstdError, IndexError, struct.error)):
-        decompress(comp[: len(comp) // 2])
+    assert _head(tmp_path, comp[: len(comp) // 2], 1 << 16) == data[:1 << 16]
+    with pytest.raises(ValueError, match="[Tt]runcated"):
+        _head(tmp_path, comp[: len(comp) // 2])
 
 
-def test_bad_magic_raises():
-    with pytest.raises(ZstdError, match="magic"):
-        decompress(b"\x00\x01\x02\x03\x04\x05\x06\x07")
+def test_bad_magic_raises(tmp_path):
+    with pytest.raises(ValueError, match="frame descriptor"):
+        _head(tmp_path, b"\x00\x01\x02\x03\x04\x05\x06\x07")
 
 
 def test_checksummed_frame(tmp_path):
     """pyarrow doesn't emit checksums, so flip the frame-header bit and
-    append the xxh64 low word ourselves — the decoder must verify it
-    (and reject a corrupted one)."""
+    append a wrong xxh64 low word: the read must reject it."""
     data = _words(5000)
     comp = bytearray(_zc().compress(data, asbytes=True))
     assert comp[4] & 0x04 == 0  # no checksum flag from pyarrow
     comp[4] |= 0x04
-    good = bytes(comp) + struct.pack("<I", xxh64(data) & 0xFFFFFFFF)
-    assert decompress(good) == data
-    bad = bytes(comp) + struct.pack("<I", (xxh64(data) + 1) & 0xFFFFFFFF)
-    with pytest.raises(ZstdError, match="checksum"):
-        decompress(bad)
+    with pytest.raises(ValueError, match="checksum"):
+        _head(tmp_path, bytes(comp) + struct.pack("<I", 0x12345678))
 
 
-def test_dictionary_frames_gate():
-    """Dict-ID flag set → honest NotImplementedError, not garbage."""
+def test_dictionary_frames_gate(tmp_path):
+    """A frame that needs a dictionary raises ValueError, not garbage."""
     data = _words(500)
     comp = bytearray(_zc().compress(data, asbytes=True))
     comp[4] |= 0x01  # 1-byte dictionary ID flag
     # splice a fake 1-byte dict id after the window descriptor
-    with pytest.raises(NotImplementedError, match="dictionary"):
-        decompress(bytes(comp[:6]) + b"\x01" + bytes(comp[6:]))
+    with pytest.raises(ValueError, match="[Dd]ictionary"):
+        _head(tmp_path, bytes(comp[:6]) + b"\x01" + bytes(comp[6:]))
 
 
-def test_xxh64_known_vectors():
-    # published reference vectors for XXH64 seed 0
-    assert xxh64(b"") == 0xEF46DB3751D8E999
-    assert xxh64(b"\x00" * 100) != xxh64(b"\x00" * 101)
-
-
-def test_xxh64_matches_spark_jvm(spark):
-    """Cross-engine conformance: Spark's xxhash64(seed=42) over UTF-8
-    strings is the same XXH64 our checksum verifier computes."""
-    from pyspark.sql import functions as F
-
-    vals = ["", "a", "hello world", "héllo wörld ünïcode",
-            "x" * 100, "The quick brown fox jumps over the lazy dog"]
-    df = spark.createDataFrame([(v,) for v in vals], ["s"])
-    got = {r["s"]: r["h"] for r in
-           df.select("s", F.xxhash64("s").alias("h")).collect()}
-    for v in vals:
-        want = xxh64(v.encode("utf8"), seed=42)
-        # Spark returns a signed long
-        if want >= 1 << 63:
-            want -= 1 << 64
-        assert got[v] == want, v
-
-
-def test_scan_file_zst_head(tmp_path, spark):
-    """End-to-end: a .zst CSV scans through scan_file via the
-    pure-Python head read (no zstandard package in this sandbox)."""
-    with pytest.raises(ImportError):
-        import zstandard  # noqa: F401
+def test_scan_file_zst_head(tmp_path):
+    """The default sniff head of a .zst CSV is its plaintext prefix."""
     rows = "id,email\n" + "\n".join(
         f"{i},user{i}@example.com" for i in range(200))
     p = tmp_path / "people.csv.zst"
     p.write_bytes(_zc().compress(rows.encode(), asbytes=True))
-    from metacrafter_spark.io.sources import _head_bytes
-
     head = _head_bytes(str(p))
     assert head.startswith(b"id,email\n0,user0@example.com")
