@@ -112,13 +112,20 @@ def _is_hadoop_block(lead: bytes, size: int, codec: str) -> bool:
 
 
 def _snappy_block(block: bytes) -> bytes:
-    """One raw snappy block; its varint prefix is the decoded length."""
+    """One raw snappy block; its varint prefix is the decoded length.
+    pyarrow allocates that length before decoding, so a length no block
+    of this size can decode to (a 3-byte copy yields at most 64 bytes)
+    is rejected first."""
     import pyarrow as pa
 
     size = 0
     for i, b in enumerate(block[:5]):
         size |= (b & 0x7F) << (7 * i)
         if b < 0x80:
+            if size >= 1 << 32 or size > 22 * len(block) + 64:
+                raise ValueError(
+                    f"snappy: declared length {size} is more than "
+                    f"{len(block)} compressed bytes can hold")
             return pa.Codec("snappy").decompress(
                 block, decompressed_size=size, asbytes=True)
     raise ValueError("snappy: bad length prefix")
@@ -141,12 +148,12 @@ def _hadoop_blocks(f, codec: str, n: int) -> bytes:
     length, then BE32-length-prefixed chunks until that many raw bytes
     are out."""
     decode = _lz4_block if codec == "lz4" else _snappy_block
+    size = os.fstat(f.fileno()).st_size
 
     def take(k: int) -> bytes:
-        data = f.read(k)
-        if len(data) < k:
+        if k > size - f.tell():  # checked first: read(k) allocates k
             raise ValueError(f"truncated Hadoop {codec} block")
-        return data
+        return f.read(k)
 
     def be32() -> int:
         return struct.unpack(">I", take(4))[0]
@@ -159,20 +166,34 @@ def _hadoop_blocks(f, codec: str, n: int) -> bytes:
     return bytes(out[:n])
 
 
+def _read_upto(f, n: int) -> bytes:
+    """Up to n bytes of f, read in 1 MiB pieces: Python's and pyarrow's
+    ``read(n)`` allocate all n bytes up front, and scan_file asks for a
+    2 GiB head whatever the file's size."""
+    parts = []
+    while n > 0:
+        part = f.read(min(n, 1 << 20))
+        if not part:
+            break
+        parts.append(part)
+        n -= len(part)
+    return b"".join(parts)
+
+
 def _arrow_head(f, codec: str, n: int) -> bytes:
     """First n decoded bytes of a zst/br/lz4/snappy file, through
     pyarrow's bundled codecs."""
     import pyarrow as pa
 
     if codec in ("zst", "br"):
-        return pa.CompressedInputStream(
-            f, "zstd" if codec == "zst" else "brotli").read(n)
+        return _read_upto(pa.CompressedInputStream(
+            f, "zstd" if codec == "zst" else "brotli"), n)
     lead = f.read(8)
     f.seek(0)
     if not lead:
         return b""
     if codec == "lz4" and lead[:4] == _LZ4_FRAME_MAGIC:
-        return pa.CompressedInputStream(f, "lz4").read(n)
+        return _read_upto(pa.CompressedInputStream(f, "lz4"), n)
     if codec == "lz4" or _is_hadoop_block(
             lead, os.fstat(f.fileno()).st_size, codec):
         return _hadoop_blocks(f, codec, n)
@@ -197,14 +218,14 @@ def _head_bytes(path: str, n: int = 1 << 20) -> bytes:
             if not names:
                 return b""
             with z.open(names[0]) as f:
-                return f.read(n)
+                return _read_upto(f, n)
     if codec in ("zst", "br", "lz4", "snappy"):
         with open(path, "rb") as f, codec_errors(path):
             return _arrow_head(f, codec, n)
     opener = {"gz": gzip.open, "bz2": bz2.open, "xz": lzma.open}.get(
         codec, open)
     with opener(path, "rb") as f:
-        return f.read(n)
+        return _read_upto(f, n)
 
 
 def xml_record_tag(head: bytes) -> Optional[str]:

@@ -71,8 +71,11 @@ def _head(tmp_path, comp: bytes, n: int = 1 << 23) -> bytes:
 @pytest.mark.parametrize("name", sorted(PAYLOADS))
 @pytest.mark.parametrize("level", [1, 2, 5, 9, 11])
 def test_roundtrip_vs_libbrotli(tmp_path, name, level):
+    """Whole and half heads for every payload shape and quality level."""
     data = PAYLOADS[name]
-    assert _head(tmp_path, _bc(level).compress(data, asbytes=True)) == data
+    comp = _bc(level).compress(data, asbytes=True)
+    assert _head(tmp_path, comp) == data
+    assert _head(tmp_path, comp, len(data) // 2) == data[: len(data) // 2]
 
 
 def test_multi_metablock_large_input(tmp_path):

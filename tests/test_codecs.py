@@ -12,6 +12,9 @@ import glob
 import gzip
 import lzma
 import pathlib
+import struct
+import subprocess
+import sys
 import zipfile
 
 import pyarrow as pa
@@ -57,17 +60,71 @@ def test_head_bytes_round_trip(tmp_path, ext):
     assert _head_bytes(str(upper), 1000) == data[:1000]
 
 
+def _long_chunk(ext: str) -> bytes:
+    """Hadoop block layout whose second chunk claims ~4 GiB."""
+    x = b"abc" * 10
+    chunk = pa.Codec("lz4_raw" if ext == "lz4" else "snappy").compress(
+        x, asbytes=True)
+    return (struct.pack(">II", 2 * len(x), len(chunk)) + chunk
+            + struct.pack(">I", 0xFFFFFFF0) + b"\0" * 16)
+
+
 @pytest.mark.parametrize("ext", ["lz4", "snappy"])
 def test_head_bytes_malformed_raises_value_error(tmp_path, ext):
-    """Truncated or junk LZ4 frames and raw snappy raise ValueError
-    (test_zstd/test_brotli cover .zst/.br)."""
+    """Truncated or junk LZ4 frames and raw snappy, a Hadoop chunk
+    longer than the file, and a length prefix no block of its size can
+    decode to all raise ValueError (test_zstd/test_brotli cover
+    .zst/.br)."""
     comp = ENCODERS[ext](ROWS.encode())
     for name, bad in (("cut", comp[: len(comp) // 2]),
-                      ("junk", b"\xff" * 64)):
+                      ("junk", b"\xff" * 64),
+                      ("long_chunk", _long_chunk(ext)),
+                      ("huge_len", b"\xff\xff\xff\xff\x7f\x00")):
         p = tmp_path / f"{name}.csv.{ext}"
         p.write_bytes(bad)
         with pytest.raises(ValueError):
             _head_bytes(str(p), 1 << 20)
+
+
+HEAD_UNDER_RLIMIT = """
+import resource, sys
+from metacrafter_spark.io.sources import DRIVER_DECOMPRESS_CAP, _head_bytes
+vm = next(int(l.split()[1]) * 1024 for l in open("/proc/self/status")
+          if l.startswith("VmSize"))
+resource.setrlimit(resource.RLIMIT_AS, (vm + (1 << 30),) * 2)
+for path in sys.argv[1:]:
+    try:
+        print(len(_head_bytes(path, DRIVER_DECOMPRESS_CAP + 1)))
+    except ValueError:
+        print("ValueError")
+"""
+
+
+def test_head_bytes_reads_a_small_file_under_a_small_address_space(
+        tmp_path):
+    """scan_file asks zip/xz/br sources for a 2 GiB head, and a corrupt
+    length field can claim gigabytes: neither may be allocated up front,
+    so read every codec's small file, and the corrupt lengths, with
+    1 GiB of address space to spare."""
+    paths = []
+    for ext in sorted(CODEC_EXTS):
+        p = tmp_path / f"rows.csv.{ext}"
+        p.write_bytes(ENCODERS[ext](ROWS.encode()))
+        paths.append(str(p))
+    for ext in ("lz4", "snappy"):
+        p = tmp_path / f"long_chunk.csv.{ext}"
+        p.write_bytes(_long_chunk(ext))
+        paths.append(str(p))
+    p = tmp_path / "huge_len.csv.snappy"
+    p.write_bytes(b"\xff\xff\xff\xff\x7f\x00")
+    paths.append(str(p))
+    run = subprocess.run(
+        [sys.executable, "-c", HEAD_UNDER_RLIMIT, *paths],
+        cwd=pathlib.Path(metacrafter_spark.__file__).parents[1],
+        capture_output=True, text=True, timeout=120)
+    assert run.returncode == 0, run.stderr[-2000:]
+    assert run.stdout.split() == (
+        [str(len(ROWS))] * len(CODEC_EXTS) + ["ValueError"] * 3)
 
 
 @pytest.mark.parametrize("codec", ["lz4", "snappy"])

@@ -66,8 +66,11 @@ def _head(tmp_path, comp: bytes, n: int = 1 << 20) -> bytes:
 @pytest.mark.parametrize("name", sorted(PAYLOADS))
 @pytest.mark.parametrize("level", [1, 3, 19])
 def test_roundtrip_vs_libzstd(tmp_path, name, level):
+    """Whole and half heads for every payload shape and block layout."""
     data = PAYLOADS[name]
-    assert _head(tmp_path, _zc(level).compress(data, asbytes=True)) == data
+    comp = _zc(level).compress(data, asbytes=True)
+    assert _head(tmp_path, comp) == data
+    assert _head(tmp_path, comp, len(data) // 2) == data[: len(data) // 2]
 
 
 def test_multi_frame_concatenation(tmp_path):
@@ -103,15 +106,22 @@ def test_bad_magic_raises(tmp_path):
         _head(tmp_path, b"\x00\x01\x02\x03\x04\x05\x06\x07")
 
 
-def test_checksummed_frame(tmp_path):
-    """pyarrow doesn't emit checksums, so flip the frame-header bit and
-    append a wrong xxh64 low word: the read must reject it."""
+def test_checksummed_frame(tmp_path, spark):
+    """A frame with an XXH64 content checksum (zstd-jni from Spark's JVM;
+    the zstd CLI writes one by default) decodes, and one whose checksum
+    word is corrupted is rejected."""
     data = _words(5000)
-    comp = bytearray(_zc().compress(data, asbytes=True))
-    assert comp[4] & 0x04 == 0  # no checksum flag from pyarrow
-    comp[4] |= 0x04
+    ctx = spark._jvm.com.github.luben.zstd.ZstdCompressCtx()
+    try:
+        ctx.setChecksum(True)
+        comp = bytes(ctx.compress(data))
+    finally:
+        ctx.close()
+    assert comp[4] & 0x04  # Content_Checksum_flag
+    assert _head(tmp_path, comp) == data
+    bad = comp[:-4] + bytes(b ^ 0xFF for b in comp[-4:])
     with pytest.raises(ValueError, match="checksum"):
-        _head(tmp_path, bytes(comp) + struct.pack("<I", 0x12345678))
+        _head(tmp_path, bad)
 
 
 def test_dictionary_frames_gate(tmp_path):
