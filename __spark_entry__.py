@@ -57,8 +57,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
              else _glob.glob(f"{root}/**/*.parquet", recursive=True)
              or [root])
     total = sum(_os.path.getsize(p) for p in paths if _os.path.exists(p))
-    max_split = int(spark.conf.get("spark.sql.files.maxPartitionBytes",
-                                   str(128 * 1024 * 1024)).rstrip("b"))
+    # the session's own parse of the conf, so human forms ("128MB",
+    # "64m", "1g") read the same as the scan's split rule reads them
+    max_split = spark._jsparkSession.sessionState().conf() \
+        .filesMaxPartitionBytes()
     est_splits = max(len(paths), total // max(max_split, 1))
     if est_splits < max(2, target // 2):
         df = df.repartition(target)

@@ -642,12 +642,17 @@ def main(argv=None) -> int:
 
     preexisting = SparkSession.getActiveSession() is not None
     spark = get_spark(app_name=f"mcs-{args.cmd}", cores=args.cores)
+    # each phase below names its Spark jobs (the job description); the
+    # caller's own description comes back on exit
+    caller_job = spark.sparkContext.getLocalProperty("spark.job.description")
+    phase = spark.sparkContext.setJobDescription
     try:
         if args.cmd == "scan-file":
             from metacrafter_spark.io.sinks import report_rows, write_report
             from metacrafter_spark.io.sources import scan_file
             from metacrafter_spark.scanner import scan_dataframe
 
+            phase("scan-file: read")
             df = scan_file(spark, args.path, fmt=args.fmt,
                            delimiter=args.delimiter)
             llm_classifier = None
@@ -664,12 +669,14 @@ def main(argv=None) -> int:
                 llm_classifier = LLMClassifier(
                     args.llm_registry, index_path=args.llm_index,
                     provider=args.llm_provider, **pkw)
+            phase("scan-file: scan")
             rep = scan_dataframe(
                 df, limit=args.limit, contexts=args.contexts, langs=args.langs,
                 confidence=args.confidence, parse_dates=args.dates,
                 llm_classifier=llm_classifier, llm_mode=args.llm_mode,
                 llm_min_confidence=args.llm_min_confidence,
             )
+            phase("scan-file: report")
             if args.output:
                 write_report(rep, args.output, fmt=args.output_format,
                              short=args.short)
@@ -1202,9 +1209,7 @@ def main(argv=None) -> int:
             from pyspark.sql import functions as F
 
             from metacrafter_spark.corpus.html import with_extracted_text
-            from metacrafter_spark.corpus.pipeline import (
-                bucket_metrics, classify_corpus,
-            )
+            from metacrafter_spark.corpus.pipeline import classify_corpus
             from metacrafter_spark.corpus.resume import (
                 TableIO, pending_input, run_with_resume,
             )
@@ -1214,6 +1219,7 @@ def main(argv=None) -> int:
             pages = scan_warc_cdx(spark, args.cdx_glob, args.warc_dir)
             n_edges = None
             if args.outlinks:
+                phase("warc-ingest: outlinks")
                 # edge extraction runs on the RAW scan frame — before
                 # the mapInPandas text extraction attaches, so the
                 # edges write never re-executes that Python stage
@@ -1288,6 +1294,7 @@ def main(argv=None) -> int:
                 advance_key_store, read_key_store,
             )
 
+            phase("warc-ingest: read stores")
             bloom_prior = None
             if args.url_bloom_store:
                 from metacrafter_spark.ops.sketches import bloom_contains
@@ -1328,6 +1335,7 @@ def main(argv=None) -> int:
                 # one row per page: keep + dup provenance counts (the
                 # decisions frame is eagerly checkpointed, so the WARC
                 # scan behind it runs once here)
+                phase("warc-ingest: near-dup decisions")
                 dec = incremental_keep_decisions(src, prior, "url")
                 nd_counts = dec.agg(
                     F.count(F.lit(1)).alias("n"),
@@ -1356,6 +1364,7 @@ def main(argv=None) -> int:
                     incremental_para_dedup, para_keys,
                 )
 
+                phase("warc-ingest: read stores")
                 seen = read_key_store(spark, args.para_dedup_store)
                 # keys of the ORIGINAL batch text (everything this dump
                 # contributes to the store), captured before dedup
@@ -1378,39 +1387,37 @@ def main(argv=None) -> int:
                   else PyIcebergTableIO(spark))
             if args.resume:
                 classified = pending_input(classified, io, args.metrics)
-            metrics_df = bucket_metrics(classified)
             # the pure-Python Iceberg layer is scalar-typed: expand the
             # pii_hits struct to per-rule count columns for the write
-            # (metrics aggregate the struct, so they are built first)
             from metacrafter_spark.io.iceberg import flatten_struct_columns
             classified = flatten_struct_columns(classified)
-            n = classified.count()
-            run_with_resume(
+            totals = run_with_resume(
                 classified, io, args.output, args.metrics,
-                metrics_df=metrics_df,
-            )
-            kept = io.read(args.output).filter(F.col("keep")).count()
-            summary = {"processed": n, "kept_total": kept}
+                sums=("para_removed",) if store_update else (),
+                label="warc-ingest")
+            summary = {"processed": totals["processed"],
+                       "kept_total": totals["kept_total"]}
             if n_edges is not None:
                 summary["edges"] = n_edges
             if nd_counts is not None:
                 # near-dup store advances only after a successful
                 # ingest: a crashed run re-dedups against the OLD store
                 # and the resume anti-join prevents duplicate writes
+                phase("warc-ingest: advance minhash store")
                 advance_key_store(minhash_new_store, args.minhash_store)
                 summary["minhash_seen"] = int(nd_counts["n"] or 0)
                 summary["minhash_dropped"] = int(nd_counts["d"] or 0)
             if store_update is not None:
                 # same contract for the paragraph-key store
+                phase("warc-ingest: advance para store")
                 store_update()
-                summary["para_removed"] = int(
-                    io.read(args.output)
-                    .agg(F.sum("para_removed")).first()[0] or 0)
+                summary["para_removed"] = totals["para_removed"]
             if args.url_hll_store:
                 from metacrafter_spark.ops.sketches import (
                     hll_estimate, hll_merge, hll_registers)
                 from metacrafter_spark.ops.urls import canonicalize_url
 
+                phase("warc-ingest: hll")
                 # sketch from the WRITTEN table, not the lazy plan:
                 # once a store advanced (para/minhash above), the plan's
                 # lineage still references the REPLACED store files and
@@ -1442,6 +1449,7 @@ def main(argv=None) -> int:
                     bloom_merge, bloom_sketch)
                 from metacrafter_spark.ops.urls import canonicalize_url
 
+                phase("warc-ingest: bloom")
                 # from the WRITTEN table — same store-replacement
                 # lineage hazard as the HLL branch above
                 batch_bloom = bloom_sketch(
@@ -1465,11 +1473,7 @@ def main(argv=None) -> int:
                     .filter(F.col("drop_reason") == "url_revisit").count())
             print(json.dumps(summary))
         else:
-            from pyspark.sql import functions as F
-
-            from metacrafter_spark.corpus.pipeline import (
-                bucket_metrics, classify_corpus,
-            )
+            from metacrafter_spark.corpus.pipeline import classify_corpus
             from metacrafter_spark.corpus.resume import (
                 TableIO, pending_input, run_with_resume,
             )
@@ -1481,16 +1485,14 @@ def main(argv=None) -> int:
             io = TableIO(spark)
             if args.resume:
                 classified = pending_input(classified, io, args.metrics)
-            n = classified.count()
-            run_with_resume(
+            print(json.dumps(run_with_resume(
                 classified, io, args.output, args.metrics,
-                metrics_df=bucket_metrics(classified),
-            )
-            kept = spark.read.parquet(args.output).filter(F.col("keep")).count()
-            print(json.dumps({"processed": n, "kept_total": kept}))
+                label="corpus-run")))
         return 0
     finally:
-        if not preexisting:  # don't kill a caller-owned session
+        if preexisting:  # don't kill a caller-owned session
+            spark.sparkContext.setJobDescription(caller_job)
+        else:
             spark.stop()
 
 

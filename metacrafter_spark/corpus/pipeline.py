@@ -17,7 +17,8 @@ Scale design:
 - per-domain aggregations go through two-phase salted aggregation
   (``salted_domain_stats``) because web domains are zipfian-skewed;
 - metrics per bucket (docs, kept, per-rule hit sums) feed the
-  checkpoint-resume anti-join in :mod:`metacrafter_spark.corpus.resume`.
+  checkpoint-resume anti-join in :mod:`metacrafter_spark.corpus.resume`;
+  they are read off the written output, so the pipeline runs once.
 """
 
 from __future__ import annotations
@@ -332,8 +333,15 @@ def bucket_metrics(
     rules: Optional[tuple[SpanRule, ...]] = None,
     run_id: str = "run0",
 ) -> DataFrame:
-    """Per-bucket lineage + rule-hit metrics (the checkpoint unit)."""
+    """Per-bucket lineage + rule-hit metrics (the checkpoint unit).
+
+    Per-rule hits come from the ``pii_hits`` struct of a classified
+    frame, or from the ``pii_hits_<rule>`` columns
+    :func:`metacrafter_spark.io.iceberg.flatten_struct_columns` writes,
+    so the metrics can be read off a written table."""
     rules = rules if rules is not None else default_scrub_rules()
+    hits = ("pii_hits.`{}`" if "pii_hits" in classified.columns
+            else "`pii_hits_{}`")
     aggs = [
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.col("keep").cast("long")).alias("n_keep"),
@@ -342,7 +350,7 @@ def bucket_metrics(
         F.sum("pii_total").alias("pii_spans"),
     ]
     aggs += [
-        F.sum(F.col(f"pii_hits.`{r.name}`")).alias(f"hits_{r.name}") for r in rules
+        F.sum(F.col(hits.format(r.name))).alias(f"hits_{r.name}") for r in rules
     ]
     return (
         classified.groupBy("bucket_id")

@@ -5,6 +5,12 @@ The metrics table (one row per completed ``bucket_id``,
 checkpoint: a re-run anti-joins its input against completed buckets and
 processes only the remainder, then writes the new buckets' metrics.
 
+One pass: the classified frame is computed once, by the output write.
+That write observes (``DataFrame.observe``) the rows and the
+``bucket_id`` set it writes; the metrics are then aggregated from a
+narrow columnar read of those buckets in the written table, never by
+re-running the pipeline's lineage.
+
 Idempotency: both the data and the metrics writes use DYNAMIC PARTITION
 OVERWRITE on ``bucket_id`` — a crash between the data write and the
 metrics write (or a replayed streaming micro-batch) reprocesses those
@@ -18,9 +24,9 @@ the same layout runs on plain parquet behind the ``TableIO`` seam.
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Callable, Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 
 class TableIO:
@@ -135,22 +141,74 @@ def pending_input(
     return df_with_buckets.join(F.broadcast(done), on="bucket_id", how="left_anti")
 
 
+def observed_write(df: DataFrame,
+                   write: Callable[[DataFrame], None]) -> tuple[int, list]:
+    """Run ``write`` on ``df`` and return ``(rows, bucket_ids)`` it
+    wrote, observed during that same pass (no second action)."""
+    seen = Observation()
+    write(df.observe(seen, F.count(F.lit(1)).alias("rows"),
+                     F.collect_set("bucket_id").alias("buckets")))
+    # read only after the write ran: get blocks until an action on the
+    # observed frame has finished
+    got = seen.get
+    return got["rows"], sorted(got["buckets"])
+
+
 def run_with_resume(
     classified: DataFrame,
     io: TableIO,
     out_path: str,
     metrics_path: str,
     *,
-    metrics_df: DataFrame,
-) -> None:
+    rules: Optional[tuple] = None,
+    sums: tuple[str, ...] = (),
+    label: Optional[str] = None,
+) -> dict:
     """Write output partitioned by bucket, then mark buckets complete.
 
     Both writes are dynamic-partition-overwrites on ``bucket_id``: a
     crash between them leaves data written but buckets unmarked — the
     re-run reprocesses those buckets and overwrites their partitions
-    (idempotent), never appending duplicates."""
-    io.overwrite_partitions(classified, out_path, partition_by=["bucket_id"])
-    io.overwrite_partitions(metrics_df, metrics_path, partition_by=["bucket_id"])
+    (idempotent), never appending duplicates.
+
+    ``classified`` is computed once, by the output write.  The metrics
+    (:func:`~metacrafter_spark.corpus.pipeline.bucket_metrics` with
+    ``rules``) are aggregated from the written table, restricted to the
+    buckets this run wrote; the same read observes the whole-table
+    totals.  Returns ``processed`` (rows written), ``kept_total`` (kept
+    rows in the whole output table) and the whole-table sum of each
+    column in ``sums``.  ``label`` names the two writes' Spark jobs
+    ``"<label>: write output"`` and ``"<label>: metrics"``."""
+    from metacrafter_spark.corpus import pipeline
+    from metacrafter_spark.session import job_phase
+
+    spark = classified.sparkSession
+    with job_phase(spark, label and f"{label}: write output"):
+        processed, buckets = observed_write(
+            classified, lambda d: io.overwrite_partitions(
+                d, out_path, partition_by=["bucket_id"]))
+    out = {"processed": processed, "kept_total": 0, **dict.fromkeys(sums, 0)}
+    table = io.read(out_path)
+    if table is None:  # a parquet table no row was ever written to
+        return out
+    totals = [F.sum(F.col("keep").cast("long")).alias("kept_total"),
+              *[F.sum(c).alias(c) for c in sums]]
+    with job_phase(spark, label and f"{label}: metrics"):
+        if buckets:
+            seen = Observation()
+            written = table.observe(seen, *totals).filter(
+                F.col("bucket_id").isin(buckets))
+            io.overwrite_partitions(
+                pipeline.bucket_metrics(written, rules), metrics_path,
+                partition_by=["bucket_id"])
+            row = seen.get
+        else:
+            # nothing written, so no metrics; and isin() of no buckets
+            # would fold the filter, observed node included, away —
+            # leaving get blocked forever
+            row = table.agg(*totals).first().asDict()
+    out.update({k: int(v or 0) for k, v in row.items()})
+    return out
 
 
 #: bucket count for key-hashed stores (round-6).  Scale-parameterised:

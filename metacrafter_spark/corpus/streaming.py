@@ -6,8 +6,9 @@ extension: the per-document pipeline is stateless, so the same
 ``foreachBatch`` writes each micro-batch's output partitioned by
 ``(batch_id, bucket_id)`` with dynamic partition overwrite (replays
 overwrite their own partitions — no duplicate rows) plus the per-bucket
-metrics — giving the same lineage/resume table the batch path uses, on
-top of the streaming checkpoint directory.
+metrics, read off the partitions just written — giving the same
+lineage/resume table the batch path uses, on top of the streaming
+checkpoint directory.
 
 ``trigger(availableNow=True)`` drains whatever input exists and stops —
 the batch-friendly way to run (and test) a stream.
@@ -20,6 +21,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from metacrafter_spark.corpus.pipeline import bucket_metrics, classify_corpus
+from metacrafter_spark.corpus.resume import observed_write
 from metacrafter_spark.corpus.scrub import SpanRule, default_scrub_rules
 
 WEBPAGE_DDL = ("url string, warc_ts timestamp, html binary, "
@@ -67,21 +69,23 @@ def stream_classify(
         # bucket_id never clobber each other.
         from pyspark.sql import functions as F
 
-        out = batch_df.withColumn("batch_id", F.lit(batch_id)).persist()
-        try:
-            (out.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("batch_id", "bucket_id").parquet(output_path))
-            if fault_hook is not None:
-                fault_hook(batch_id)
-            (bucket_metrics(out.drop("batch_id"), rules,
-                            run_id=f"stream-{batch_id}")
-             .withColumn("batch_id", F.lit(batch_id))
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("batch_id", "bucket_id").parquet(metrics_path))
-        finally:
-            out.unpersist()
+        rows, _ = observed_write(
+            batch_df.withColumn("batch_id", F.lit(batch_id)),
+            lambda d: (d.write.mode("overwrite")
+                       .option("partitionOverwriteMode", "dynamic")
+                       .partitionBy("batch_id", "bucket_id")
+                       .parquet(output_path)))
+        if fault_hook is not None:
+            fault_hook(batch_id)
+        if not rows:  # an empty batch writes no partition to read
+            return
+        # metrics from this batch's written partitions, not a replay
+        written = spark.read.parquet(f"{output_path}/batch_id={batch_id}")
+        (bucket_metrics(written, rules, run_id=f"stream-{batch_id}")
+         .withColumn("batch_id", F.lit(batch_id))
+         .write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("batch_id", "bucket_id").parquet(metrics_path))
 
     writer = (
         classified.writeStream.foreachBatch(sink)
@@ -358,7 +362,7 @@ def stream_warc_ingest(
 
     from metacrafter_spark.corpus.html import with_extracted_text
     from metacrafter_spark.io.iceberg import (
-        PyIcebergTableIO, flatten_struct_columns)
+        IcebergTable, PyIcebergTableIO, flatten_struct_columns)
     from metacrafter_spark.io.warc import cdx_fetch, cdx_parse
 
     rules = default_scrub_rules()
@@ -403,20 +407,22 @@ def stream_warc_ingest(
         # batch's writes so foreachBatch no longer accumulates one
         # persisted frame per micro-batch
         score_cache = getattr(batch_df, "_mc_score_cache", None)
-        out = batch_df.withColumn("batch_id", F.lit(batch_id)).persist()
         try:
-            flat = flatten_struct_columns(out)
-            io.overwrite_partitions(flat, output_tbl,
-                                    partition_by=["batch_id", "bucket_id"])
+            io.overwrite_partitions(
+                flatten_struct_columns(
+                    batch_df.withColumn("batch_id", F.lit(batch_id))),
+                output_tbl, partition_by=["batch_id", "bucket_id"])
             if fault_hook is not None:
                 fault_hook(batch_id)
-            m = (bucket_metrics(out.drop("batch_id"), rules,
-                                run_id=f"stream-{batch_id}")
+            # metrics from this batch's written partitions (pruned on
+            # the driver from the manifests), not a replay of the batch
+            written = IcebergTable.load(output_tbl).read(
+                spark, partition_filter={"batch_id": batch_id})
+            m = (bucket_metrics(written, rules, run_id=f"stream-{batch_id}")
                  .withColumn("batch_id", F.lit(batch_id)))
             io.overwrite_partitions(m, metrics_tbl,
                                     partition_by=["batch_id", "bucket_id"])
         finally:
-            out.unpersist()
             if score_cache is not None:
                 score_cache.unpersist(blocking=False)
 

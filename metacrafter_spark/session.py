@@ -7,6 +7,7 @@ partition counts change via arguments / spark-submit conf.
 
 from __future__ import annotations
 
+import contextlib
 import os
 from typing import Optional
 
@@ -53,3 +54,22 @@ def get_spark(
         for k, v in extra_conf.items():
             builder = builder.config(k, str(v))
     return builder.getOrCreate()
+
+
+@contextlib.contextmanager
+def job_phase(spark: SparkSession, label: Optional[str]):
+    """Name the Spark jobs and SQL executions started inside the block
+    ``label`` (Spark's job description: the status store and the UI
+    show it instead of the call site).  The caller's description is
+    restored on exit, so a caller-owned session keeps its own labels.
+    No ``label`` leaves the description alone."""
+    if not label:
+        yield
+        return
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(prev)

@@ -73,3 +73,24 @@ def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
     assert {"field", "ruleid", "confidence"} <= set(df.columns)
+
+
+@pytest.mark.parametrize("max_bytes", ["128MB", "64m", "1g", "134217728"])
+def test_t_reads_human_form_max_partition_bytes(spark, tmp_path, max_bytes):
+    """``_t`` sizes splits with the session's own parse of
+    ``spark.sql.files.maxPartitionBytes``, so the human forms Spark
+    accepts do not fail the read."""
+    key = "spark.sql.files.maxPartitionBytes"
+    spark.range(10).write.parquet(str(tmp_path / "tiny.parquet"))
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, max_bytes)
+    try:
+        df = entry_mod._t(spark, str(tmp_path), "tiny")
+        # one small file: the estimate is one split, so _t repartitions
+        assert df.rdd.getNumPartitions() == \
+            spark.sparkContext.defaultParallelism
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)

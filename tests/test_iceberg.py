@@ -247,22 +247,22 @@ def test_tableio_bridge_resume_flow(spark, tmp_path):
     io_ = PyIcebergTableIO(spark)
     out = str(tmp_path / "out_tbl")
     met = str(tmp_path / "metrics_tbl")
-    df = _docs(spark, 0, 60).withColumn("kept", F.lit(True))
-    metrics = (df.groupBy("bucket_id")
-               .agg(F.count("*").alias("n_docs"))
-               .withColumn("completed", F.lit(True)))
+    df = (_docs(spark, 0, 60).withColumn("keep", F.lit(True))
+          .withColumn("warc_ts", F.current_timestamp())
+          .withColumn("pii_total", F.lit(0)))
     # first run: only buckets 0/1 "complete" (simulated partial run)
     part = df.filter(F.col("bucket_id") < 2)
-    run_with_resume(part, io_, out, met,
-                    metrics_df=metrics.filter(F.col("bucket_id") < 2))
+    assert run_with_resume(part, io_, out, met, rules=()) == {
+        "processed": 30, "kept_total": 30}
     pend = pending_input(df, io_, met)
     assert set(r.bucket_id for r in pend.select("bucket_id")
                .distinct().collect()) == {2, 3}
     # resumed run writes the remainder (replaying bucket 1 too — must
     # overwrite, not duplicate)
     rest = df.filter(F.col("bucket_id") >= 1)
-    run_with_resume(rest, io_, out, met,
-                    metrics_df=metrics.filter(F.col("bucket_id") >= 1))
+    # kept_total counts the whole table, not only this run's rows
+    assert run_with_resume(rest, io_, out, met, rules=()) == {
+        "processed": 45, "kept_total": 60}
     final = io_.read(out)
     assert final.count() == 60
     assert final.select("url").distinct().count() == 60

@@ -144,6 +144,50 @@ def test_cli_corpus_stream(spark, tmp_path):
     assert spark.read.parquet(str(tmp_path / "cout")).count() == 60
 
 
+def test_cli_corpus_run_metrics_and_resume(spark, tmp_path, capsys):
+    """corpus-run writes the classified table once: the summary counts
+    come from that write and the whole output table, the metrics from
+    the written partitions — equal to bucket_metrics over the lineage —
+    and a --resume over completed buckets processes nothing."""
+    from metacrafter_spark.cli import main
+    from metacrafter_spark.corpus.pipeline import (
+        bucket_metrics, classify_corpus,
+    )
+
+    src, out, met = (str(tmp_path / d) for d in ("in", "out", "met"))
+    synth_webpages(spark, 60, partitions=2).write.parquet(src)
+    argv = ["corpus-run", src, out, met]
+    assert main(argv) == 0
+    first = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    classified = classify_corpus(spark.read.parquet(src))
+    kept = classified.filter("keep").count()
+    assert first == {"processed": 60, "kept_total": kept}
+
+    def rows(df):
+        return sorted((r.asDict() for r in df.collect()),
+                      key=lambda r: r["bucket_id"])
+
+    assert rows(spark.read.parquet(met)) == rows(bucket_metrics(classified))
+    assert main(argv + ["--resume"]) == 0
+    again = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert again == {"processed": 0, "kept_total": kept}
+
+
+def test_cli_corpus_run_empty_input(spark, tmp_path, capsys):
+    """An input with no rows writes an output table with no files; the
+    summary reads zeros instead of failing on a schema it cannot
+    infer."""
+    from metacrafter_spark.cli import main
+    from metacrafter_spark.corpus.streaming import WEBPAGE_DDL
+
+    src = str(tmp_path / "in")
+    spark.createDataFrame([], WEBPAGE_DDL).write.parquet(src)
+    assert main(["corpus-run", src, str(tmp_path / "out"),
+                 str(tmp_path / "met")]) == 0
+    got = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert got == {"processed": 0, "kept_total": 0}
+
+
 def test_stream_enrich_domains_static_join(spark, tmp_path):
     """Stream-static broadcast join: blocked domains dropped, known
     domains enriched, unknown domains pass with null reputation."""
@@ -255,6 +299,20 @@ def test_cli_dedup_and_decontaminate(spark, tmp_path):
            for r in spark.read.parquet(out2).collect()}
     # every doc shares the long base prefix with the benchmark doc
     assert got[0] is True and all(got.values())
+
+
+def test_stream_classify_empty_batch(spark, tmp_path):
+    """A micro-batch of an input file with no rows writes no partition,
+    so there is nothing to read metrics from; the sink must still
+    commit the batch."""
+    from metacrafter_spark.corpus.streaming import WEBPAGE_DDL
+
+    src, out, met, ckpt = (str(tmp_path / d)
+                           for d in ("in", "out", "met", "ckpt"))
+    spark.createDataFrame([], WEBPAGE_DDL).write.parquet(src)
+    q = stream_classify(spark, src, out, met, ckpt)
+    assert q.lastProgress["numInputRows"] == 0
+    assert q.exception() is None
 
 
 def test_stream_classify_failure_injection_recovers_exactly(spark, tmp_path):

@@ -197,6 +197,118 @@ def test_warc_ingest_resume_idempotent(spark, warc_corpus, tmp_path,
     assert third["kept_total"] == first["kept_total"]
 
 
+def _metrics_rows(df):
+    return sorted((r.asDict() for r in df.collect()),
+                  key=lambda r: r["bucket_id"])
+
+
+@pytest.fixture(scope="module")
+def lineage_metrics(spark, warc_corpus):
+    """The per-bucket metrics of the fixture dump computed over the
+    classified lineage, as the ingest built them before it read them
+    off the written table."""
+    from metacrafter_spark.corpus.html import with_extracted_text
+    from metacrafter_spark.corpus.pipeline import (
+        bucket_metrics, classify_corpus,
+    )
+    from metacrafter_spark.io.warc import scan_warc_cdx
+
+    pages = with_extracted_text(
+        scan_warc_cdx(spark, warc_corpus + "/*.cdx", warc_corpus),
+        "html", "text")
+    src = pages.select("url", "warc_ts", "html", "text",
+                       F.lit("").alias("lang"))
+    return _metrics_rows(bucket_metrics(classify_corpus(src, n_buckets=8)))
+
+
+@pytest.mark.parametrize("plain", [False, True], ids=["iceberg", "parquet"])
+def test_warc_ingest_metrics_match_lineage(spark, warc_corpus, tmp_path,
+                                           capsys, lineage_metrics, plain):
+    """The metrics table read off the written output equals
+    bucket_metrics over the classified lineage, row for row and column
+    for column — after a full run, and after a --resume that redoes a
+    bucket whose metrics row was lost."""
+    import shutil
+
+    out = str(tmp_path / "docs_tbl")
+    met = str(tmp_path / "metrics_tbl")
+    argv = ["warc-ingest", warc_corpus + "/*.cdx", warc_corpus, out, met,
+            "--buckets", "8", *(["--plain-parquet"] if plain else [])]
+
+    def metrics():
+        m = (spark.read.parquet(met) if plain
+             else IcebergTable.load(met).read(spark))
+        return _metrics_rows(m)
+
+    assert main(argv) == 0
+    first = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert metrics() == lineage_metrics
+
+    lost = lineage_metrics[0]
+    if plain:
+        shutil.rmtree(f"{met}/bucket_id={lost['bucket_id']}")
+    else:
+        IcebergTable.load(met).delete_where(
+            spark, f"bucket_id = {lost['bucket_id']}")
+    assert len(metrics()) == len(lineage_metrics) - 1
+    assert main(argv + ["--resume"]) == 0
+    again = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert again == {"processed": lost["n_docs"],
+                     "kept_total": first["kept_total"]}
+    assert metrics() == lineage_metrics
+
+
+@pytest.fixture(scope="module")
+def traced_ingest(spark, warc_corpus, tmp_path_factory):
+    """One warc-ingest with the paragraph and URL stores, run under a
+    caller-set job description: the SQL executions it started (their
+    descriptions and physical plans) and the description left after."""
+    d = tmp_path_factory.mktemp("traced_ingest")
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    last = max((e.executionId() for e in executions()), default=-1)
+    sc.setJobDescription("caller phase")
+    try:
+        assert main(["warc-ingest", warc_corpus + "/*.cdx", warc_corpus,
+                     str(d / "out"), str(d / "met"), "--buckets", "8",
+                     "--para-dedup-store", str(d / "para"),
+                     "--url-hll-store", str(d / "hll")]) == 0
+        after = sc.getLocalProperty("spark.job.description")
+    finally:
+        sc.setJobDescription(None)
+    execs = [(e.description(), e.physicalPlanDescription() or "")
+             for e in executions() if e.executionId() > last]
+    return execs, after
+
+
+def test_warc_ingest_runs_the_pipeline_once(traced_ingest):
+    """The classified frame is computed by the output write alone: one
+    execution evaluates the scrub/langid Python UDFs, and no execution
+    counts the extracted pages."""
+    execs, _ = traced_ingest
+    passes = [desc for desc, plan in execs if "ArrowEvalPython" in plan]
+    assert passes == ["warc-ingest: write output"]
+    counts = [desc for desc, plan in execs
+              if "MapInPandas" in plan and "partial_count(1)" in plan]
+    assert counts == []
+
+
+def test_warc_ingest_names_jobs_by_phase(traced_ingest):
+    """Every SQL execution of the ingest carries its CLI phase, and the
+    caller's own job description is back once the CLI returns."""
+    execs, after = traced_ingest
+    descs = {desc for desc, _ in execs}
+    assert {"warc-ingest: write output", "warc-ingest: metrics",
+            "warc-ingest: advance para store", "warc-ingest: hll"} <= descs
+    assert all(desc.startswith("warc-ingest: ") for desc in descs), descs
+    assert after == "caller phase"
+
+
 def test_stream_warc_ingest_incremental_and_replay(spark, tmp_path):
     """Streaming CDX→WARC→pipeline→Iceberg: availableNow drains the
     backlog, new index shards process incrementally (file-source log),
