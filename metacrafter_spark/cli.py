@@ -1363,18 +1363,19 @@ def main(argv=None) -> int:
                 from metacrafter_spark.ops.dedup import (
                     incremental_para_dedup, para_keys,
                 )
+                from metacrafter_spark.util import with_sql_columns
 
                 phase("warc-ingest: read stores")
                 seen = read_key_store(spark, args.para_dedup_store)
                 # keys of the ORIGINAL batch text (everything this dump
                 # contributes to the store), captured before dedup
                 batch_keys = para_keys(src, "text")
-                src = (incremental_para_dedup(
-                           src, seen, id_col="url", text_col="text")
-                       .withColumn("text", F.col("text_dedup"))
-                       .drop("text_dedup")
-                       .withColumnRenamed("n_paras", "para_n")
-                       .withColumnRenamed("n_removed", "para_removed"))
+                src = with_sql_columns(
+                    incremental_para_dedup(
+                        src, seen, id_col="url", text_col="text"),
+                    {"text": "text_dedup"},
+                ).drop("text_dedup").withColumnsRenamed(
+                    {"n_paras": "para_n", "n_removed": "para_removed"})
                 para_new_store = (seen.unionByName(batch_keys).distinct()
                                   if seen is not None else batch_keys)
 
@@ -1383,6 +1384,9 @@ def main(argv=None) -> int:
                                       args.para_dedup_store)
 
             classified = classify_corpus(src, toxicity_wordlist=wl, **kw)
+            # persisted by the model stages (None without them); the
+            # written table is all that is read after the write
+            score_cache = classified.score_cache
             io = (TableIO(spark) if args.plain_parquet
                   else PyIcebergTableIO(spark))
             if args.resume:
@@ -1391,10 +1395,14 @@ def main(argv=None) -> int:
             # pii_hits struct to per-rule count columns for the write
             from metacrafter_spark.io.iceberg import flatten_struct_columns
             classified = flatten_struct_columns(classified)
-            totals = run_with_resume(
-                classified, io, args.output, args.metrics,
-                sums=("para_removed",) if store_update else (),
-                label="warc-ingest")
+            try:
+                totals = run_with_resume(
+                    classified, io, args.output, args.metrics,
+                    sums=("para_removed",) if store_update else (),
+                    label="warc-ingest")
+            finally:
+                if score_cache is not None:
+                    score_cache.unpersist(blocking=False)
             summary = {"processed": totals["processed"],
                        "kept_total": totals["kept_total"]}
             if n_edges is not None:

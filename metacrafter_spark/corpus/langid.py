@@ -42,9 +42,12 @@ Pure function of the text prefix → same label at any parallelism.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Optional
 
 from pyspark.sql import Column, DataFrame, functions as F
+
+from metacrafter_spark.util import (
+    sql_ident, sql_literal, sql_string, with_sql_columns,
+)
 
 LANGID_PREFIX_CHARS = 2000
 UNKNOWN = "und"
@@ -240,6 +243,7 @@ MIN_SCRIPT_RATIO = 0.10
 # strip leading/trailing punctuation from a token before the set lookup
 # (\p{L}/\p{N} are Unicode-portable: Java and RE2 agree, unlike \w/\b)
 _EDGE_PUNCT_RE = r"^[^\p{L}\p{N}]+|[^\p{L}\p{N}]+$"
+_WS_RE = r"\s+"
 
 
 def pack_scripts(pack: LangPack) -> list:
@@ -249,50 +253,69 @@ def pack_scripts(pack: LangPack) -> list:
     return [k for k in SCRIPTS if k in used]
 
 
-def _tokens(head: Column) -> Column:
-    """Lowercased, edge-punctuation-stripped tokens of the head."""
-    return F.transform(
-        F.filter(F.split(F.trim(head), r"\s+"), lambda w: F.length(w) > 0),
-        lambda w: F.lower(F.regexp_replace(w, _EDGE_PUNCT_RE, "")),
-    )
+def _split_sql(head: str) -> str:
+    """The raw whitespace split of the trimmed head."""
+    return f"split(trim({head}), {sql_string(_WS_RE)})"
 
 
-def _in_ranges(c: Column, script_key: str) -> Column:
-    cond = None
-    for lo, hi in SCRIPT_RANGES[script_key]:
-        term = (c >= F.lit(lo)) & (c <= F.lit(hi))
-        cond = term if cond is None else cond | term
-    return cond
+def _tokens_sql(split: str) -> str:
+    """Lowercased, edge-punctuation-stripped non-empty tokens."""
+    return (f"transform(filter({split}, w -> length(w) > 0), "
+            f"w -> lower(regexp_replace(w, {sql_string(_EDGE_PUNCT_RE)}, '')))")
 
 
-def _script_ratio(nl: Column, head: Column, script_key: str) -> Column:
+def _nl_sql(head: str, scripts: list) -> str:
+    """Every script char of the head in ONE regex pass (usually empty)."""
+    if not scripts:
+        return "CAST(array() AS array<string>)"
+    return f"regexp_extract_all({head}, {sql_string(_union_class(scripts))}, 0)"
+
+
+def _script_ratio_sql(nl: str, head: str, script_key: str) -> str:
     """Count of this script's chars in the pre-extracted non-Latin char
     array, over the head length."""
+    in_ranges = " OR ".join(
+        f"(c >= {sql_string(lo)} AND c <= {sql_string(hi)})"
+        for lo, hi in SCRIPT_RANGES[script_key])
+    return (f"CAST(size(filter({nl}, c -> {in_ranges})) AS DOUBLE)"
+            f" / CAST(greatest(length({head}), 1) AS DOUBLE)")
+
+
+def _best_sql(pack: LangPack, hits, n_tokens: str, script_cols: dict) -> str:
+    """The argmax struct<score, lang> over the pack, as ONE
+    ``array_max(array(named_struct...))``; ties break on the language
+    name.  Per language, score = hits/n_tokens + Σ w×ratio, terms
+    added left-to-right in spec order (the DuckDB twin mirrors the
+    exact operation order for bit-equality).  ``hits(spec)`` is the SQL
+    of that language's integer stopword hit count."""
+    ntf = f"CAST(greatest({n_tokens}, 1) AS DOUBLE)"
+    structs = []
+    for spec in sorted(pack, key=lambda s: s.lang):
+        terms = []
+        if spec.stopwords:
+            terms.append(f"CAST({hits(spec)} AS DOUBLE) / {ntf}")
+        terms += [f"{sql_literal(float(w))} * {script_cols[key]}"
+                  for key, w in spec.scripts]
+        score = " + ".join(terms) if terms else "0.0D"
+        structs.append(f"named_struct('score', {score}, "
+                       f"'lang', {sql_string(spec.lang)})")
+    return "array_max(array(" + ", ".join(structs) + "))"
+
+
+def _decision_sql(text: str, n_tokens: str, script_cols: dict, best: str, *,
+                  min_tokens: int, min_score: float, min_script: float) -> str:
+    """struct<lang, score>: ``und`` for NULL/blank text, for a short
+    head without script evidence, and below ``min_score``."""
+    cols = list(script_cols.values())
+    smax = (cols[0] if len(cols) == 1 else f"greatest({', '.join(cols)})"
+            ) if cols else "0.0D"
     return (
-        F.size(F.filter(nl, lambda c: _in_ranges(c, script_key)))
-        .cast("double")
-        / F.greatest(F.length(head), F.lit(1)).cast("double")
-    )
-
-
-def _spec_score(spec: LangSpec, toks: Column, n_tokens_f: Column,
-                script_cols: dict, hits: Optional[Column] = None) -> Column:
-    """token_hits/n + Σ w×ratio, terms added left-to-right in spec order
-    (the SQL twin mirrors the exact operation order for bit-equality).
-
-    ``hits`` (optional) supplies a pre-computed integer hit count for
-    this spec (the fused one-pass kernel below); when absent the count
-    is the original per-language ``isin`` filter pass.  Both are the
-    same integer, so the score expression is bit-identical."""
-    score = None
-    if spec.stopwords:
-        if hits is None:
-            hits = F.size(F.filter(toks, lambda w: w.isin(*spec.stopwords)))
-        score = hits.cast("double") / n_tokens_f
-    for key, w in spec.scripts:
-        term = F.lit(float(w)) * script_cols[key]
-        score = term if score is None else score + term
-    return score if score is not None else F.lit(0.0)
+        f"CASE WHEN coalesce(length(trim({text})), 0) = 0"
+        f" OR ({n_tokens} < {sql_literal(min_tokens)}"
+        f" AND {smax} < {sql_literal(float(min_script))})"
+        f" OR {best}.score < {sql_literal(float(min_score))}"
+        f" THEN named_struct('lang', {sql_string(UNKNOWN)}, 'score', 0.0D)"
+        f" ELSE named_struct('lang', {best}.lang, 'score', {best}.score) END")
 
 
 def _stopword_counts_udf(specs: tuple):
@@ -350,50 +373,27 @@ def _stopword_counts_udf(specs: tuple):
     return counts
 
 
-def _scored_structs(pack: LangPack, toks: Column, n_tokens_f: Column,
-                    script_cols: dict) -> list:
-    return [
-        F.struct(
-            _spec_score(spec, toks, n_tokens_f, script_cols).alias("score"),
-            F.lit(spec.lang).alias("lang"),
-        )
-        for spec in sorted(pack, key=lambda s: s.lang)
-    ]
-
-
-def _script_max(script_cols: dict) -> Column:
-    cols = list(script_cols.values())
-    if not cols:
-        return F.lit(0.0)
-    return cols[0] if len(cols) == 1 else F.greatest(*cols)
-
-
-def _blank(text: Column) -> Column:
-    """NULL, empty or whitespace-only text: language unknown."""
-    return F.coalesce(F.length(F.trim(text)), F.lit(0)) == 0
-
-
-def langid_struct(text: Column, pack: LangPack = BUILTIN_PACK, *,
+def langid_struct(text: str, pack: LangPack = BUILTIN_PACK, *,
                   prefix_chars: int = LANGID_PREFIX_CHARS,
                   min_tokens: int = 4, min_score: float = 0.05,
                   min_script: float = MIN_SCRIPT_RATIO) -> Column:
-    """Returns struct<lang:string, score:double> for a text column."""
-    head = F.substring(text, 1, prefix_chars)
-    n_tokens = F.size(F.split(F.trim(head), r"\s+"))
-    n_tokens_f = F.greatest(n_tokens, F.lit(1)).cast("double")
+    """struct<lang:string, score:double> for the column named ``text``,
+    as one expression (it re-derives the tokens per language; the
+    staged :func:`with_langid` is the fast form of the same result)."""
+    text = sql_ident(text)
+    head = f"substring({text}, 1, {prefix_chars})"
+    split = _split_sql(head)
+    toks = _tokens_sql(split)
     scripts = pack_scripts(pack)
-    nl = (F.regexp_extract_all(head, F.lit(_union_class(scripts)), 0)
-          if scripts else F.array().cast("array<string>"))
-    script_cols = {k: _script_ratio(nl, head, k) for k in scripts}
-    best = F.array_max(F.array(*_scored_structs(pack, _tokens(head),
-                                                n_tokens_f, script_cols)))
-    return F.when(
-        _blank(text)
-        | ((n_tokens < min_tokens) & (_script_max(script_cols)
-                                      < F.lit(min_script)))
-        | (best["score"] < min_score),
-        F.struct(F.lit(UNKNOWN).alias("lang"), F.lit(0.0).alias("score")),
-    ).otherwise(F.struct(best["lang"].alias("lang"), best["score"].alias("score")))
+    nl = _nl_sql(head, scripts)
+    script_cols = {k: _script_ratio_sql(nl, head, k) for k in scripts}
+    best = _best_sql(
+        pack, lambda spec: f"size(filter({toks}, w -> w IN ("
+        + ", ".join(sql_string(w) for w in spec.stopwords) + ")))",
+        f"size({split})", script_cols)
+    return F.expr(_decision_sql(
+        text, f"size({split})", script_cols, best, min_tokens=min_tokens,
+        min_score=min_score, min_script=min_script))
 
 
 def with_langid(df: DataFrame, text_col: str = "text",
@@ -402,103 +402,66 @@ def with_langid(df: DataFrame, text_col: str = "text",
                 *, prefix_chars: int = LANGID_PREFIX_CHARS,
                 min_tokens: int = 4, min_score: float = 0.05,
                 min_script: float = MIN_SCRIPT_RATIO) -> DataFrame:
-    """Staged evaluation of :func:`langid_struct`'s exact semantics.
+    """Staged evaluation of :func:`langid_struct`'s exact semantics, one
+    projection per dependency level.
 
     The single-expression form re-evaluates the argmax struct array
     (and with it all per-language token scans — plus the token array
     itself, which is referenced once per language) once per field
-    reference — ``best["lang"]``, ``best["score"]``, and the guard each
+    reference — ``best.lang``, ``best.score``, and the guard each
     inline a copy (observed 2.9× wall-clock on a 20k-doc corpus).
     Materializing ``head`` / ``toks`` / ``n_tokens`` / per-script ratios
     / ``best`` as intermediate columns pins each to one evaluation;
     results are row-identical to ``langid_struct`` (asserted in
-    tests)."""
-    head_c, sp_c, toks_c, nt_c, best_c, nl_c, cnt_c = (
+    tests).  The levels are SQL text; only the stopword-count kernel
+    is a Column (a Python UDF has no SQL name)."""
+    head_c, sp_c, toks_c, nt_c, best_c, nl_c, cnt_c, dec_c = (
         "__lid_head", "__lid_sp", "__lid_toks", "__lid_nt", "__lid_best",
-        "__lid_nl", "__lid_cnt")
+        "__lid_nl", "__lid_cnt", "__lid_dec")
     scripts = pack_scripts(pack)
     script_c = {k: f"__lid_s_{k}" for k in scripts}
-    out = df.withColumn(head_c, F.substring(F.col(text_col), 1, prefix_chars))
-    h = F.col(head_c)
+    out = with_sql_columns(df, {
+        head_c: f"substring({sql_ident(text_col)}, 1, {prefix_chars})"})
     # the raw whitespace split is materialized ONCE and feeds both the
     # token array and the raw token count (round-6: previously two
-    # independent regex split passes; identical arrays by construction)
-    out = out.withColumn(sp_c, F.split(F.trim(h), r"\s+"))
-    out = out.withColumn(
-        toks_c,
-        F.transform(
-            F.filter(F.col(sp_c), lambda w: F.length(w) > 0),
-            lambda w: F.lower(F.regexp_replace(w, _EDGE_PUNCT_RE, "")),
-        ))
-    out = out.withColumn(nt_c, F.size(F.col(sp_c)))
-    # ONE regex pass pulls every script char; per-script ratios are
+    # independent regex split passes; identical arrays by construction);
+    # ONE regex pass pulls every script char, and per-script ratios are
     # range filters over that (usually empty) array
-    out = out.withColumn(
-        nl_c,
-        F.regexp_extract_all(h, F.lit(_union_class(scripts)), 0)
-        if scripts else F.array().cast("array<string>"),
-    )
-    for k in scripts:
-        out = out.withColumn(script_c[k], _script_ratio(F.col(nl_c), h, k))
-    script_cols = {k: F.col(script_c[k]) for k in scripts}
+    out = with_sql_columns(out, {sp_c: _split_sql(head_c),
+                                 nl_c: _nl_sql(head_c, scripts)})
+    out = with_sql_columns(out, {
+        toks_c: _tokens_sql(sp_c), nt_c: f"size({sp_c})",
+        **{script_c[k]: _script_ratio_sql(nl_c, head_c, k) for k in scripts}})
     # ONE fused Arrow kernel yields every language's stopword hit count
     # (integer-identical to the per-language isin passes — see
     # _stopword_counts_udf); the scored structs then reference the
     # counts array instead of re-scanning the token array per language
-    ordered = sorted(pack, key=lambda s: s.lang)
-    sw_specs = [s for s in ordered if s.stopwords]
+    sw_specs = [s for s in sorted(pack, key=lambda s: s.lang) if s.stopwords]
     sw_idx = {s.lang: i + 1 for i, s in enumerate(sw_specs)}
     if sw_specs:
-        out = out.withColumn(
-            cnt_c,
-            _stopword_counts_udf(tuple(
-                (s.lang, tuple(s.stopwords)) for s in sw_specs
-            ))(F.col(toks_c)))
-    # The 34-struct argmax array is assembled as ONE SQL string parsed
-    # by a single F.expr (round-6): building it through the Column API
-    # cost ~0.9 s of DRIVER time per call in py4j round-trips — and the
-    # pipeline constructs this plan on every invocation.  The parsed
-    # tree is operator-identical (double literals via the D suffix,
-    # terms added in the same left-to-right spec order), so scores and
-    # oracle hashes are unchanged.
-    ntf_sql = f"CAST(greatest({nt_c}, 1) AS DOUBLE)"
-    struct_sqls = []
-    for spec in ordered:
-        terms = []
-        if spec.stopwords:
-            terms.append(
-                f"CAST(element_at({cnt_c}, {sw_idx[spec.lang]}) AS DOUBLE)"
-                f" / {ntf_sql}")
-        for key, w in spec.scripts:
-            terms.append(f"{float(w)!r}D * {script_c[key]}")
-        score_sql = " + ".join(terms) if terms else "0.0D"
-        lang_lit = "'" + spec.lang.replace("'", "''") + "'"
-        struct_sqls.append(
-            f"named_struct('score', {score_sql}, 'lang', {lang_lit})")
-    out = out.withColumn(
-        best_c,
-        F.expr("array_max(array(" + ", ".join(struct_sqls) + "))"))
-    final = F.when(
-        _blank(F.col(text_col))
-        | ((F.col(nt_c) < min_tokens) & (_script_max(script_cols)
-                                         < F.lit(min_script)))
-        | (F.col(best_c)["score"] < min_score),
-        F.struct(F.lit(UNKNOWN).alias("lang"), F.lit(0.0).alias("score")),
-    ).otherwise(F.struct(F.col(best_c)["lang"].alias("lang"),
-                         F.col(best_c)["score"].alias("score")))
-    return (
-        out.withColumn(f"{out_prefix}_tmp", final)
-        .withColumn(f"{out_prefix}_lang", F.col(f"{out_prefix}_tmp.lang"))
-        .withColumn(f"{out_prefix}_score", F.col(f"{out_prefix}_tmp.score"))
-        .drop(f"{out_prefix}_tmp", head_c, sp_c, toks_c, nt_c, best_c,
-              nl_c, cnt_c, *script_c.values())
-    )
+        out = out.withColumn(cnt_c, _stopword_counts_udf(tuple(
+            (s.lang, tuple(s.stopwords)) for s in sw_specs))(F.col(toks_c)))
+    # The 34-struct argmax array is ONE SQL string (round-6): built
+    # through the Column API it cost ~0.9 s of DRIVER time per call in
+    # py4j round-trips
+    out = with_sql_columns(out, {best_c: _best_sql(
+        pack, lambda spec: f"element_at({cnt_c}, {sw_idx[spec.lang]})",
+        nt_c, script_c)})
+    out = with_sql_columns(out, {dec_c: _decision_sql(
+        sql_ident(text_col), nt_c, script_c, best_c, min_tokens=min_tokens,
+        min_score=min_score, min_script=min_script)})
+    return with_sql_columns(out, {
+        f"{out_prefix}_lang": f"{dec_c}.lang",
+        f"{out_prefix}_score": f"{dec_c}.score",
+    }).drop(dec_c, head_c, sp_c, toks_c, nt_c, best_c, nl_c, cnt_c,
+            *script_c.values())
 
 
 # ------------------------------------------------------------------ SQL twin
 
 
 def _sql_quote(s: str) -> str:
+    """DuckDB string literal (only ``'`` is special there)."""
     return "'" + s.replace("'", "''") + "'"
 
 

@@ -38,15 +38,14 @@ from metacrafter_spark.corpus.quality import (
 from metacrafter_spark.corpus.scrub import (
     SpanRule,
     default_scrub_rules,
-    total_hits,
+    total_hits_sql,
     with_scrub,
+)
+from metacrafter_spark.util import (
+    sql_ident, sql_literal, sql_string, with_sql_columns,
 )
 
 DEFAULT_N_BUCKETS = 256
-
-#: persisted model-score source frames from prior classify_corpus
-#: calls, released on the next call (see the model branch below)
-_SCORE_CACHES: list = []
 
 
 @dataclass(frozen=True)
@@ -60,8 +59,11 @@ class KeepPolicy:
 DEFAULT_POLICY = KeepPolicy()
 
 
+_DOMAIN_RE = r"^[a-z]+://([^/:?#]+)"
+
+
 def domain_of(url: Column) -> Column:
-    return F.lower(F.regexp_extract(url, r"^[a-z]+://([^/:?#]+)", 1))
+    return F.lower(F.regexp_extract(url, _DOMAIN_RE, 1))
 
 
 def classify_corpus(
@@ -169,12 +171,25 @@ def classify_corpus(
 
     All model params default None, keeping the default-path plan and
     its oracles byte-stable.
+
+    With a model stage on, the narrow (key, text) frame the models
+    score from is persisted, and the returned frame carries it as
+    ``score_cache`` (None otherwise).  The caller owns it: unpersist
+    it after the last action on the result, as the CLI and the
+    streaming sinks do.  Building a second pipeline does not release
+    the first one's cache (Spark keeps one cache entry per plan, so two
+    pipelines over the same input share theirs).
+
+    Every stage but the Python UDFs and the optional signal joins is
+    built as Spark SQL text, one projection per dependency level.
     """
     rules = scrub_rules if scrub_rules is not None else default_scrub_rules()
-    out = (
-        df.withColumn("bucket_id", F.pmod(F.xxhash64("url"), F.lit(n_buckets)))
-        .withColumn("domain", domain_of(F.col("url")))
-    )
+    text = sql_ident(text_col)
+    score_cache = None
+    out = with_sql_columns(df, {
+        "bucket_id": f"pmod(xxhash64(url), {sql_literal(int(n_buckets))})",
+        "domain": f"lower(regexp_extract(url, {sql_string(_DOMAIN_RE)}, 1))",
+    })
     if robots_rules is not None:
         from metacrafter_spark.corpus.robots import with_robots_allowed
 
@@ -193,9 +208,9 @@ def classify_corpus(
     if fix_mojibake:
         from metacrafter_spark.corpus.mojibake import with_fixed_text
 
-        out = (with_fixed_text(out, text_col, out_col="__moji_fixed")
-               .withColumn(text_col, F.col("__moji_fixed"))
-               .drop("__moji_fixed"))
+        out = with_sql_columns(
+            with_fixed_text(out, text_col, out_col="__moji_fixed"),
+            {text_col: "__moji_fixed"}).drop("__moji_fixed")
     out = with_langid(out, text_col)
     out = with_perplexity(out, text_col)
     out = with_quality(out, text_col, policy.quality)
@@ -214,24 +229,11 @@ def classify_corpus(
         # with distinct texts per row this join cannot broadcast).
         from pyspark.storagelevel import StorageLevel
 
-        mid = F.concat_ws(
-            "\x00", F.col("url"),
-            F.sha2(F.coalesce(F.col(text_col), F.lit("")), 256))
-        # ADVICE r5: this persisted frame used to leak (one cached
-        # frame per call — and per micro-batch under foreachBatch).
-        # Release the previous call's cache here (sequential callers,
-        # e.g. bench repeats, now hold at most one), and hand the
-        # handle to the caller via ``out._mc_score_cache`` so batch
-        # sinks can release it deterministically after their write.  A
-        # concurrent pipeline whose cache is released early just
-        # recomputes — correctness is unaffected.
-        for prev in _SCORE_CACHES:
-            prev.unpersist(blocking=False)
-        _SCORE_CACHES.clear()
-        score_src = (out.select(mid.alias("__mid"), text_col)
-                     .dropDuplicates(["__mid"])
-                     .persist(StorageLevel.MEMORY_AND_DISK))
-        _SCORE_CACHES.append(score_src)
+        mid = (f"concat_ws({sql_string(chr(0))}, url, "
+               f"sha2(coalesce({text}, ''), 256))")
+        score_cache = (out.selectExpr(f"{mid} AS __mid", text)
+                       .dropDuplicates(["__mid"])
+                       .persist(StorageLevel.MEMORY_AND_DISK))
         signals = None
         if kenlm_model is not None:
             from metacrafter_spark.corpus.kenlm import (
@@ -239,31 +241,29 @@ def classify_corpus(
 
             score = (score_kn_trigram if hasattr(kenlm_model, "tri")
                      else score_kn_bigram)
-            signals = score(score_src, kenlm_model, id_col="__mid",
+            signals = score(score_cache, kenlm_model, id_col="__mid",
                             text_col=text_col) \
-                .select("__mid", F.col("ppl").alias("kn_ppl"))
+                .selectExpr("__mid", "ppl AS kn_ppl")
         if quality_model is not None:
             from metacrafter_spark.ops.quality_classifier import (
                 score_logreg)
 
-            qm = score_logreg(score_src, quality_model,
+            qm = score_logreg(score_cache, quality_model,
                               id_col="__mid", text_col=text_col) \
-                .select("__mid",
-                        F.col("p").cast("double").alias("q_model_p"))
+                .selectExpr("__mid", "CAST(p AS DOUBLE) AS q_model_p")
             signals = qm if signals is None else \
                 signals.join(qm, "__mid", "full")
         if langid_model is not None:
             from metacrafter_spark.corpus.langid_ft import (
                 predict_langid_ft)
 
-            lf = predict_langid_ft(score_src, langid_model,
+            lf = predict_langid_ft(score_cache, langid_model,
                                    id_col="__mid", text_col=text_col) \
-                .select("__mid",
-                        F.col("pred_lang").alias("ft_lang"),
-                        F.col("score").alias("ft_score"))
+                .selectExpr("__mid", "pred_lang AS ft_lang",
+                            "score AS ft_score")
             signals = lf if signals is None else \
                 signals.join(lf, "__mid", "full")
-        out = (out.withColumn("__mid", mid)
+        out = (with_sql_columns(out, {"__mid": mid})
                .join(signals, "__mid", "left").drop("__mid"))
     if toxicity_wordlist is not None:
         from metacrafter_spark.corpus.toxicity import scrub_toxic, with_toxicity
@@ -274,57 +274,50 @@ def classify_corpus(
         out = with_scrub(out, "__tox_masked", rules).drop("__tox_masked")
     else:
         out = with_scrub(out, text_col, rules)
-    pii_total = total_hits("pii_hits", rules)
-    pii_per_kchar = pii_total.cast("double") * 1000.0 / F.greatest(
-        F.length(F.col(text_col)), F.lit(1)
-    ).cast("double")
-    lang_known = F.col("langid_lang") != UNKNOWN
-    ppl_ok = F.when(F.col("langid_lang").isin("en", "fr", "de", "es"),
-                    F.col("ppl") <= policy.max_ppl).otherwise(F.lit(True))
-    pii_ok = pii_per_kchar <= policy.max_pii_per_kchar
-    q_ok = F.col("q_pass")
-    reason = F.when(F.lit(False), "never")  # chain seed, never fires
+    # the drop_reason chain: the first firing condition names the reason
+    reasons = []
     if robots_rules is not None:
-        reason = reason.when(~F.col("robots_allowed"),
-                             "robots_disallowed")
+        reasons.append(("NOT robots_allowed", "robots_disallowed"))
     if drop_noindex:
-        reason = reason.when(F.col("noindex"), "robots_noindex")
+        reasons.append(("noindex", "robots_noindex"))
     if url_seen_col is not None:
         # exact-URL revisit (cross-dump Bloom probe upstream): drops
         # before near-dup — no fuzzy work for a byte-identical revisit
-        reason = reason.when(F.col(url_seen_col), "url_revisit")
+        reasons.append((sql_ident(url_seen_col), "url_revisit"))
     if near_dup_col is not None:
         # a pre-computed near-dup verdict (e.g. incremental_keep_decisions
         # on the ingest CLI): dedup precedes content judgement — a page
         # already kept in a prior dump drops here regardless of quality
-        reason = reason.when(F.col(near_dup_col), "near_dup")
-    reason = (
-        reason
-        .when(~lang_known if policy.require_known_lang else F.lit(False), "lang_unknown")
-        .when(~q_ok, "quality")
-    )
+        reasons.append((sql_ident(near_dup_col), "near_dup"))
+    if policy.require_known_lang:
+        reasons.append((f"NOT (langid_lang <> {sql_string(UNKNOWN)})",
+                        "lang_unknown"))
+    reasons.append(("NOT q_pass", "quality"))
     if quality_model is not None and quality_min_p is not None:
         # NULL-safe: only an affirmative below-threshold score drops
-        reason = reason.when(
-            F.col("q_model_p") < F.lit(float(quality_min_p)),
-            "model_quality")
+        reasons.append((f"q_model_p < {sql_literal(float(quality_min_p))}",
+                        "model_quality"))
     if toxicity_wordlist is not None:
-        reason = reason.when(F.col("tox_any"), "toxicity")
-    reason = reason.when(~ppl_ok, "perplexity")
+        reasons.append(("tox_any", "toxicity"))
+    reasons.append((
+        "NOT (CASE WHEN langid_lang IN ('en', 'fr', 'de', 'es') "
+        f"THEN ppl <= {sql_literal(policy.max_ppl)} ELSE true END)",
+        "perplexity"))
     if kenlm_model is not None and kenlm_ppl_max is not None:
-        reason = reason.when(
-            F.col("kn_ppl") > F.lit(float(kenlm_ppl_max)),
-            "lm_perplexity")
-    reason = reason.when(~pii_ok, "pii_density")
-    out = (
-        out.withColumn("pii_total", pii_total)
-        .withColumn("pii_per_kchar", pii_per_kchar)
-        .withColumn("drop_reason", reason)
-        .withColumn("keep", reason.isNull())
-    )
-    if _SCORE_CACHES:
-        # caller-releasable handle to the model-score cache (see above)
-        out._mc_score_cache = _SCORE_CACHES[-1]
+        reasons.append((f"kn_ppl > {sql_literal(float(kenlm_ppl_max))}",
+                        "lm_perplexity"))
+    reasons.append((
+        f"NOT (pii_per_kchar <= {sql_literal(policy.max_pii_per_kchar)})",
+        "pii_density"))
+    out = with_sql_columns(
+        out, {"pii_total": total_hits_sql("pii_hits", rules)})
+    out = with_sql_columns(out, {
+        "pii_per_kchar": "CAST(pii_total AS DOUBLE) * 1000.0D / "
+                         f"CAST(greatest(length({text}), 1) AS DOUBLE)"})
+    out = with_sql_columns(out, {"drop_reason": "CASE " + " ".join(
+        f"WHEN {cond} THEN {sql_string(r)}" for cond, r in reasons) + " END"})
+    out = with_sql_columns(out, {"keep": "drop_reason IS NULL"})
+    out.score_cache = score_cache
     return out
 
 
@@ -340,24 +333,23 @@ def bucket_metrics(
     :func:`metacrafter_spark.io.iceberg.flatten_struct_columns` writes,
     so the metrics can be read off a written table."""
     rules = rules if rules is not None else default_scrub_rules()
-    hits = ("pii_hits.`{}`" if "pii_hits" in classified.columns
-            else "`pii_hits_{}`")
+    def hits(name: str) -> str:
+        if "pii_hits" in columns:
+            return f"pii_hits.{sql_ident(name)}"
+        return sql_ident(f"pii_hits_{name}")
+
+    columns = classified.columns
     aggs = [
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.col("keep").cast("long")).alias("n_keep"),
-        F.min("warc_ts").alias("min_warc_ts"),
-        F.max("warc_ts").alias("max_warc_ts"),
-        F.sum("pii_total").alias("pii_spans"),
-    ]
-    aggs += [
-        F.sum(F.col(hits.format(r.name))).alias(f"hits_{r.name}") for r in rules
-    ]
-    return (
-        classified.groupBy("bucket_id")
-        .agg(*aggs)
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("completed", F.lit(True))
-    )
+        "count(1) AS n_docs",
+        "sum(CAST(keep AS BIGINT)) AS n_keep",
+        "min(warc_ts) AS min_warc_ts",
+        "max(warc_ts) AS max_warc_ts",
+        "sum(pii_total) AS pii_spans",
+    ] + [f"sum({hits(r.name)}) AS {sql_ident('hits_' + r.name)}"
+         for r in rules]
+    return with_sql_columns(
+        classified.groupBy("bucket_id").agg(*map(F.expr, aggs)),
+        {"run_id": sql_string(run_id), "completed": "true"})
 
 
 def salted_agg(

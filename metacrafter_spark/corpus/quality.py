@@ -1,10 +1,12 @@
-"""Gopher/C4-style heuristic quality rules as native Column expressions.
+"""Gopher/C4-style heuristic quality rules as native SQL expressions.
 
 Every metric and flag below is a pure JVM expression (split/filter/
 regexp over the text column) — whole-stage codegen, no Python in the
-hot path.  Thresholds follow the published Gopher (Rae et al. 2021,
-§A1.1) and C4 (Raffel et al. 2020, §2.2) heuristics, adapted to
-per-document columns.
+hot path.  The metrics are Spark SQL text, each defined once, so the
+staged :func:`with_quality` costs a few py4j round trips per
+projection instead of dozens per Column-API call.  Thresholds follow
+the published Gopher (Rae et al. 2021, §A1.1) and C4 (Raffel et al.
+2020, §2.2) heuristics, adapted to per-document columns.
 """
 
 from __future__ import annotations
@@ -12,7 +14,9 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, functions as F
-from metacrafter_spark.util import appended_schema
+from metacrafter_spark.util import (
+    appended_schema, sql_ident, sql_literal, sql_string, with_sql_columns,
+)
 
 
 @dataclass(frozen=True)
@@ -66,7 +70,18 @@ _CJK_CLASS = "[㐀-䶿一-鿿぀-ヿ가-힣฀-๿]"
 _LETTER_RE = r"[\p{L}]"
 
 
-def _dup_2gram_frac(words: Column, n_words: Column, sep: str = " ") -> Column:
+_WS_RE = r"\s+"
+_LINE_RE = r"\n"
+_PARA_RE = r"\n\n+"
+_SYMBOL_RE = r"[#…]|\.{3}"
+_STOPWORD_LIST = ", ".join(sql_string(w) for w in _STOPWORDS)
+
+
+def _ratio(num: str, den: str) -> str:
+    return f"CAST({num} AS DOUBLE) / CAST({den} AS DOUBLE)"
+
+
+def _dup_2gram_frac(words: str, n_words: str, sep: str = " ") -> str:
     """1 - distinct(2-grams)/total — repeated-phrase signal (over
     whitespace words, or over CJK chars with ``sep=""``).
 
@@ -74,142 +89,141 @@ def _dup_2gram_frac(words: Column, n_words: Column, sep: str = " ") -> Column:
     (`slice(words, i, 2)` inside a per-element lambda re-evaluates the
     whole words expression per gram — O(n²), observed 4× pipeline
     wall-clock)."""
-    k = F.greatest(n_words - 1, F.lit(0))
-    grams = F.zip_with(
-        F.slice(words, 1, k), F.slice(words, 2, k),
-        (lambda x, y: F.concat(x, y)) if sep == "" else
-        (lambda x, y: F.concat(x, F.lit(sep), y)),
-    )
-    return F.when(
-        k > 0,
-        F.lit(1.0) - F.size(F.array_distinct(grams)).cast("double")
-        / k.cast("double"),
-    ).otherwise(F.lit(0.0))
+    k = f"greatest({n_words} - 1, 0)"
+    gram = "concat(x, y)" if sep == "" else f"concat(x, {sql_string(sep)}, y)"
+    grams = (f"zip_with(slice({words}, 1, {k}), slice({words}, 2, {k}), "
+             f"(x, y) -> {gram})")
+    distinct = f"size(array_distinct({grams}))"
+    return f"CASE WHEN {k} > 0 THEN 1.0D - {_ratio(distinct, k)} ELSE 0.0D END"
 
 
-def quality_columns(
-    text: Column,
-    *,
-    words: Column | None = None,
-    lines: Column | None = None,
-    paras: Column | None = None,
-    cjk_chars: Column | None = None,
-) -> dict[str, Column]:
-    """Metric expressions; pass pre-materialized ``words``/``lines``/
-    ``paras``/``cjk_chars`` array columns to pin each split to ONE
-    evaluation — the bare form re-derives them inside every metric
-    expression (a dozen re-splits of the text per row), which
-    :func:`with_quality` avoids."""
-    if words is None:
-        words = F.filter(F.split(text, r"\s+"), lambda w: F.length(w) > 0)
-    if lines is None:
-        lines = F.split(text, r"\n")
-    if paras is None:
-        paras = F.split(text, r"\n\n+")
-    if cjk_chars is None:
-        cjk_chars = F.regexp_extract_all(text, F.lit(_CJK_CLASS), 0)
-    n_words = F.size(words)
-    n_cjk = F.size(cjk_chars)
-    n_words_f = F.greatest(n_words, F.lit(1)).cast("double")
-    n_lines_f = F.greatest(F.size(lines), F.lit(1)).cast("double")
-    alpha_chars = F.regexp_count(text, F.lit(_WORD_ALPHA_RE))
+def _count_frac(arr: str, lam: str, den: str) -> str:
+    """Fraction of ``arr`` elements the SQL lambda ``lam`` accepts."""
+    return _ratio(f"size(filter({arr}, {lam}))", den)
+
+
+def _rlike(var: str, pattern: str) -> str:
+    return f"{var} -> {var} RLIKE {sql_string(pattern)}"
+
+
+def _splits(text: str) -> dict[str, str]:
+    """The four arrays the metrics read, as SQL over ``text``: words
+    (non-empty whitespace tokens), lines, paragraphs and CJK chars."""
     return {
-        "n_chars": F.length(text),
-        "n_words": n_words,
-        "mean_word_len": (
-            F.length(F.regexp_replace(text, r"\s+", "")).cast("double") / n_words_f
-        ),
-        "symbol_word_ratio": (
-            F.regexp_count(text, F.lit(r"[#…]|\.{3}")).cast("double") / n_words_f
-        ),
-        "bullet_line_frac": (
-            F.size(F.filter(lines, lambda l: l.rlike(_BULLET_RE))).cast("double")
-            / n_lines_f
-        ),
-        "ellipsis_line_frac": (
-            F.size(F.filter(lines, lambda l: l.rlike(r"(?:\.{3}|…)\s*$"))).cast("double")
-            / n_lines_f
-        ),
-        "alpha_word_frac": (
-            F.size(F.filter(words, lambda w: w.rlike(_WORD_ALPHA_RE))).cast("double")
-            / n_words_f
-        ),
-        "stopword_hits": F.size(F.filter(
-            words,
-            lambda w: F.lower(F.regexp_replace(w, _EDGE_PUNCT_RE, ""))
-            .isin(*_STOPWORDS),
-        )),
-        "dup_line_frac": (
-            F.lit(1.0)
-            - F.size(F.array_distinct(lines)).cast("double") / n_lines_f
-        ),
-        # Gopher-style repetition metrics (Rae et al. §A1.1): duplicate
-        # paragraph fraction and duplicate word-2-gram fraction
-        # (1 - distinct/total; linear-time via array ops)
-        "dup_para_frac": (
-            F.lit(1.0)
-            - F.size(F.array_distinct(paras)).cast("double")
-            / F.greatest(F.size(paras), F.lit(1)).cast("double")
-        ),
-        "dup_2gram_frac": _dup_2gram_frac(words, n_words),
-        "terminal_punct_line_frac": (
-            F.size(F.filter(lines, lambda l: l.rlike(r'[.!?"]\s*$'))).cast("double")
-            / n_lines_f
-        ),
-        "alpha_char_frac": (
-            alpha_chars.cast("double") / F.greatest(F.length(text), F.lit(1)).cast("double")
-        ),
-        # CJK-mode metrics (round 5): char-unit replacements for the
-        # whitespace-word metrics on whitespace-free scripts
-        "cjk_char_frac": (
-            n_cjk.cast("double")
-            / F.greatest(F.length(text), F.lit(1)).cast("double")
-        ),
-        "n_units": n_words + n_cjk,
-        "dup_cjk_2gram_frac": _dup_2gram_frac(cjk_chars, n_cjk, sep=""),
-        "letter_char_frac": (
-            F.regexp_count(text, F.lit(_LETTER_RE)).cast("double")
-            / F.greatest(F.length(text), F.lit(1)).cast("double")
-        ),
-        "has_lorem": text.rlike(r"(?i)lorem ipsum"),
-        "has_curly": text.contains("{"),
+        "words": f"filter(split({text}, {sql_string(_WS_RE)}), "
+                 "w -> length(w) > 0)",
+        "lines": f"split({text}, {sql_string(_LINE_RE)})",
+        "paras": f"split({text}, {sql_string(_PARA_RE)})",
+        "cjk_chars": f"regexp_extract_all({text}, {sql_string(_CJK_CLASS)}, 0)",
     }
 
 
-def quality_pass(q: dict[str, Column], t: QualityThresholds = DEFAULT_THRESHOLDS) -> Column:
-    """Gopher-style document keep decision from the metric columns.
+def quality_columns(
+    text: str,
+    *,
+    words: str | None = None,
+    lines: str | None = None,
+    paras: str | None = None,
+    cjk_chars: str | None = None,
+) -> dict[str, str]:
+    """Metric name → Spark SQL expression over the SQL expression
+    ``text`` (a backquoted column name, say).  Pass pre-materialized
+    ``words``/``lines``/``paras``/``cjk_chars`` array columns to pin
+    each split to ONE evaluation — the bare form re-derives them
+    (:func:`_splits`) inside every metric expression (a dozen
+    re-splits of the text per row), which :func:`with_quality`
+    avoids."""
+    splits = _splits(text)
+    words = words or splits["words"]
+    lines = lines or splits["lines"]
+    paras = paras or splits["paras"]
+    cjk_chars = cjk_chars or splits["cjk_chars"]
+    n_words, n_cjk = f"size({words})", f"size({cjk_chars})"
+    n_words_1 = f"greatest({n_words}, 1)"
+    n_lines_1 = f"greatest(size({lines}), 1)"
+    n_chars_1 = f"greatest(length({text}), 1)"
+    edge = sql_string(_EDGE_PUNCT_RE)
+    return {
+        "n_chars": f"length({text})",
+        "n_words": n_words,
+        "mean_word_len": _ratio(
+            f"length(regexp_replace({text}, {sql_string(_WS_RE)}, ''))",
+            n_words_1),
+        "symbol_word_ratio": _ratio(
+            f"regexp_count({text}, {sql_string(_SYMBOL_RE)})", n_words_1),
+        "bullet_line_frac": _count_frac(
+            lines, _rlike("l", _BULLET_RE), n_lines_1),
+        "ellipsis_line_frac": _count_frac(
+            lines, _rlike("l", r"(?:\.{3}|…)\s*$"), n_lines_1),
+        "alpha_word_frac": _count_frac(
+            words, _rlike("w", _WORD_ALPHA_RE), n_words_1),
+        "stopword_hits": (
+            f"size(filter({words}, w -> lower(regexp_replace(w, {edge}, ''))"
+            f" IN ({_STOPWORD_LIST})))"),
+        "dup_line_frac": "1.0D - " + _ratio(
+            f"size(array_distinct({lines}))", n_lines_1),
+        # Gopher-style repetition metrics (Rae et al. §A1.1): duplicate
+        # paragraph fraction and duplicate word-2-gram fraction
+        # (1 - distinct/total; linear-time via array ops)
+        "dup_para_frac": "1.0D - " + _ratio(
+            f"size(array_distinct({paras}))", f"greatest(size({paras}), 1)"),
+        "dup_2gram_frac": _dup_2gram_frac(words, n_words),
+        "terminal_punct_line_frac": _count_frac(
+            lines, _rlike("l", r'[.!?"]\s*$'), n_lines_1),
+        "alpha_char_frac": _ratio(
+            f"regexp_count({text}, {sql_string(_WORD_ALPHA_RE)})", n_chars_1),
+        # CJK-mode metrics (round 5): char-unit replacements for the
+        # whitespace-word metrics on whitespace-free scripts
+        "cjk_char_frac": _ratio(n_cjk, n_chars_1),
+        "n_units": f"{n_words} + {n_cjk}",
+        "dup_cjk_2gram_frac": _dup_2gram_frac(cjk_chars, n_cjk, sep=""),
+        "letter_char_frac": _ratio(
+            f"regexp_count({text}, {sql_string(_LETTER_RE)})", n_chars_1),
+        "has_lorem": f"{text} RLIKE {sql_string('(?i)lorem ipsum')}",
+        "has_curly": f"contains({text}, '{{')",
+    }
+
+
+def quality_pass(q: dict[str, str],
+                 t: QualityThresholds = DEFAULT_THRESHOLDS) -> str:
+    """Gopher-style document keep decision, as a Spark SQL expression
+    over the metric expressions ``q`` (metric name → SQL, e.g. the
+    materialized metric columns).
 
     Script-aware (round 5): documents whose CJK-char ratio clears
     ``t.cjk_mode_char_frac`` are judged by char-unit gates instead of
     the whitespace-word gates (which a zh/ja/th document always fails —
     it tokenizes to a handful of huge "words").  Line/paragraph gates
     and the boilerplate flags apply in both modes."""
-    latin = (
-        q["n_words"].between(t.min_words, t.max_words)
-        & q["mean_word_len"].between(t.min_mean_word_len, t.max_mean_word_len)
-        & (q["symbol_word_ratio"] < t.max_symbol_word_ratio)
-        & (q["alpha_word_frac"] > t.min_alpha_word_frac)
-        & (q["stopword_hits"] >= t.min_stopword_hits)
-        & (q["dup_2gram_frac"] < t.max_dup_2gram_frac)
-    )
-    cjk = (
-        q["n_units"].between(t.min_words, t.max_words)
-        & (q["letter_char_frac"] > t.min_letter_char_frac)
-        & (q["dup_cjk_2gram_frac"] < t.max_dup_cjk_2gram_frac)
-    )
-    both = (
-        (q["bullet_line_frac"] < t.max_bullet_line_frac)
-        & (q["ellipsis_line_frac"] < t.max_ellipsis_line_frac)
-        & (q["dup_line_frac"] < t.max_dup_line_frac)
-        & (q["dup_para_frac"] < t.max_dup_para_frac)
-        & ~q["has_lorem"]
-        & ~q["has_curly"]
-    )
-    return (
-        F.when(q["cjk_char_frac"] >= F.lit(t.cjk_mode_char_frac), cjk)
-        .otherwise(latin)
-        & both
-    )
+    L = sql_literal
+    q = {m: f"({e})" for m, e in q.items()}
+
+    def between(m: str, lo, hi) -> str:
+        return f"({q[m]} >= {L(lo)} AND {q[m]} <= {L(hi)})"
+
+    latin = " AND ".join([
+        between("n_words", t.min_words, t.max_words),
+        between("mean_word_len", t.min_mean_word_len, t.max_mean_word_len),
+        f"{q['symbol_word_ratio']} < {L(t.max_symbol_word_ratio)}",
+        f"{q['alpha_word_frac']} > {L(t.min_alpha_word_frac)}",
+        f"{q['stopword_hits']} >= {L(t.min_stopword_hits)}",
+        f"{q['dup_2gram_frac']} < {L(t.max_dup_2gram_frac)}",
+    ])
+    cjk = " AND ".join([
+        between("n_units", t.min_words, t.max_words),
+        f"{q['letter_char_frac']} > {L(t.min_letter_char_frac)}",
+        f"{q['dup_cjk_2gram_frac']} < {L(t.max_dup_cjk_2gram_frac)}",
+    ])
+    both = " AND ".join([
+        f"{q['bullet_line_frac']} < {L(t.max_bullet_line_frac)}",
+        f"{q['ellipsis_line_frac']} < {L(t.max_ellipsis_line_frac)}",
+        f"{q['dup_line_frac']} < {L(t.max_dup_line_frac)}",
+        f"{q['dup_para_frac']} < {L(t.max_dup_para_frac)}",
+        f"NOT {q['has_lorem']}",
+        f"NOT {q['has_curly']}",
+    ])
+    return (f"(CASE WHEN {q['cjk_char_frac']} >= {L(t.cjk_mode_char_frac)} "
+            f"THEN {cjk} ELSE {latin} END) AND {both}")
 
 
 def c4_line_filter(
@@ -241,27 +255,21 @@ def c4_line_filter(
 def with_quality(df: DataFrame, text_col: str = "text",
                  thresholds: QualityThresholds = DEFAULT_THRESHOLDS,
                  prefix: str = "q") -> DataFrame:
-    """Staged: words/lines/paras are materialized ONCE as tmp columns —
-    the metric expressions then reference them cheaply instead of each
-    re-splitting the text (same re-evaluation trap as langid's argmax;
-    row-identical results, asserted by the quality_flags oracle)."""
-    text = F.col(text_col)
-    w_c, l_c, p_c, c_c = "__q_words", "__q_lines", "__q_paras", "__q_cjk"
-    df = (
-        df.withColumn(w_c, F.filter(F.split(text, r"\s+"),
-                                    lambda w: F.length(w) > 0))
-        .withColumn(l_c, F.split(text, r"\n"))
-        .withColumn(p_c, F.split(text, r"\n\n+"))
-        .withColumn(c_c, F.regexp_extract_all(text, F.lit(_CJK_CLASS), 0))
-    )
-    q = quality_columns(text, words=F.col(w_c), lines=F.col(l_c),
-                        paras=F.col(p_c), cjk_chars=F.col(c_c))
-    for name, col in q.items():
-        df = df.withColumn(f"{prefix}_{name}", col)
-    named = {name: F.col(f"{prefix}_{name}") for name in q}
-    return df.withColumn(f"{prefix}_pass",
-                         quality_pass(named, thresholds)).drop(w_c, l_c, p_c,
-                                                               c_c)
+    """Staged, one projection per dependency level: words/lines/paras/
+    CJK chars are materialized ONCE as tmp columns, the metrics
+    reference them instead of each re-splitting the text (same
+    re-evaluation trap as langid's argmax), and the pass decision reads
+    the metric columns (asserted by the quality_flags oracle)."""
+    text = sql_ident(text_col)
+    tmp = {k: f"__q_{k}" for k in ("words", "lines", "paras", "cjk_chars")}
+    df = with_sql_columns(
+        df, {tmp[k]: e for k, e in _splits(text).items()})
+    q = quality_columns(text, **tmp)
+    df = with_sql_columns(df, {f"{prefix}_{n}": e for n, e in q.items()})
+    named = {n: sql_ident(f"{prefix}_{n}") for n in q}
+    return with_sql_columns(
+        df, {f"{prefix}_pass": quality_pass(named, thresholds)}
+    ).drop(*tmp.values())
 
 
 def dedup_paragraphs_from(paras: Column) -> Column:

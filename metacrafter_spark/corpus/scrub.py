@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
 from metacrafter_spark.rules.model import CompiledRulePack, load_builtin_pack
+from metacrafter_spark.util import sql_ident, sql_string, with_sql_columns
 
 
 @dataclass(frozen=True)
@@ -268,19 +269,21 @@ def with_scrub(
     hits_col: str = "pii_hits",
 ) -> DataFrame:
     rules = rules if rules is not None else default_scrub_rules()
-    kernel = fused_scrub_udf(rules)
     tmp = "__scrub_tmp"
-    df = df.withColumn(tmp, kernel(F.col(text_col)))
-    df = df.withColumn(scrubbed_col, F.col(f"{tmp}.scrubbed")).withColumn(
-        hits_col,
-        F.struct(*[F.col(f"{tmp}.`{r.name}`").alias(r.name) for r in rules]),
-    )
-    return df.drop(tmp)
+    df = df.withColumn(tmp, fused_scrub_udf(rules)(F.col(text_col)))
+    hits = ", ".join(f"{sql_string(r.name)}, {tmp}.{sql_ident(r.name)}"
+                     for r in rules)
+    return with_sql_columns(df, {
+        scrubbed_col: f"{tmp}.scrubbed",
+        hits_col: f"named_struct({hits})",
+    }).drop(tmp)
+
+
+def total_hits_sql(hits_col: str, rules: tuple[SpanRule, ...]) -> str:
+    """Spark SQL sum of every rule's count in the ``hits_col`` struct."""
+    return " + ".join(f"{sql_ident(hits_col)}.{sql_ident(r.name)}"
+                      for r in rules)
 
 
 def total_hits(hits_col: str, rules: tuple[SpanRule, ...]) -> Column:
-    cols = [F.col(f"{hits_col}.`{r.name}`") for r in rules]
-    total = cols[0]
-    for c in cols[1:]:
-        total = total + c
-    return total
+    return F.expr(total_hits_sql(hits_col, rules))

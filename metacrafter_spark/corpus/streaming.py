@@ -403,10 +403,10 @@ def stream_warc_ingest(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if model_kw:
             batch_df = _classify(batch_df)
-        # model-score cache handle (ADVICE r5): released after this
-        # batch's writes so foreachBatch no longer accumulates one
-        # persisted frame per micro-batch
-        score_cache = getattr(batch_df, "_mc_score_cache", None)
+        # the model-score cache this batch's pipeline persisted (None
+        # without models): released after this batch's writes, so
+        # foreachBatch does not accumulate one cached frame per batch
+        score_cache = batch_df.score_cache if model_kw else None
         try:
             io.overwrite_partitions(
                 flatten_struct_columns(

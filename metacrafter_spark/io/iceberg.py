@@ -83,6 +83,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from metacrafter_spark.io.avro_codec import read_ocf, write_ocf
+from metacrafter_spark.util import sql_ident, sql_literal, with_sql_columns
 
 # manifest_entry.status (spec: Manifests)
 STATUS_EXISTING = 0
@@ -126,18 +127,17 @@ _ICEBERG_TO_SPARK = {
 
 def flatten_struct_columns(df: DataFrame) -> DataFrame:
     """Expand every top-level struct column into ``{col}_{field}``
-    scalar columns (this layer is scalar-typed by design — nested
-    columns go through the jar-backed path)."""
-    from pyspark.sql import functions as F
-
-    for f in df.schema.fields:
-        if isinstance(f.dataType, T.StructType):
-            for sub_f in f.dataType.fields:
-                df = df.withColumn(
-                    f"{f.name}_{sub_f.name}",
-                    F.col(f"{f.name}.`{sub_f.name}`"))
-            df = df.drop(f.name)
-    return df
+    scalar columns, appended after the others in one projection (this
+    layer is scalar-typed by design — nested columns go through the
+    jar-backed path)."""
+    structs = [f for f in df.schema.fields
+               if isinstance(f.dataType, T.StructType)]
+    if not structs:
+        return df
+    return with_sql_columns(df, {
+        f"{f.name}_{sub.name}": f"{sql_ident(f.name)}.{sql_ident(sub.name)}"
+        for f in structs for sub in f.dataType.fields
+    }).drop(*[f.name for f in structs])
 
 
 def spark_schema_to_iceberg(schema: T.StructType) -> dict:
@@ -1540,7 +1540,7 @@ class IcebergTable:
                 f"dataframe columns {sorted(got)} != table columns "
                 f"{sorted(want)}"
             )
-        out = df.select(*[f.name for f in expected.fields])
+        out = df.selectExpr(*[sql_ident(f.name) for f in expected.fields])
         src = self._source_types()
         id_by_src = {f["id"]: f["name"] for f in self.schema["fields"]}
         part_cols = []
@@ -1768,37 +1768,44 @@ class IcebergTable:
             key = (tuple(f["partition"].get(c) for c in part_cols),
                    f.get("_seq", 0))
             groups.setdefault(key, []).append(f["file_path"])
+        # one small projection per group attaches its partition and
+        # sequence literals (and the delete-join keys); the alias
+        # coalesces and the column order are applied once, after the
+        # union — SQL text, so the read costs a few py4j round trips
+        # per group instead of ~13 per column per group
+        extra = []
+        if pos_dels:
+            extra += ["regexp_replace(_metadata.file_path, '^file:/+', '/')"
+                      " AS __fp", "_metadata.row_index AS __pos"]
         parts = []
         for (key, seq), paths in sorted(groups.items(),
                                         key=lambda kv: str(kv[0])):
-            d = spark.read.schema(data_schema).parquet(*paths)
-            for c, v in zip(part_cols, key):
-                d = d.withColumn(c, F.lit(v).cast(spark_types[c]))
-            for fname, alist in aliases.items():
-                d = d.withColumn(
-                    fname,
-                    F.coalesce(F.col(fname),
-                               *[F.col(a).cast(spark_types[fname])
-                                 for a in alist]))
-            cols = [F.col(f.name) for f in schema.fields]
-            if pos_dels:
-                cols += [
-                    F.regexp_replace(F.col("_metadata.file_path"),
-                                     "^file:/+", "/").alias("__fp"),
-                    F.col("_metadata.row_index").alias("__pos"),
-                ]
+            lits = [f"CAST({sql_literal(v)} AS "
+                    f"{spark_types[c].simpleString()}) AS {sql_ident(c)}"
+                    for c, v in zip(part_cols, key)]
             if eq_dels:
-                cols += [F.lit(seq).alias("__seq")]
-            parts.append(d.select(*cols))
-        # Column order/types are re-applied via .to(); nullability
-        # follows Spark's file-scan convention (all columns nullable —
-        # forcing required flags would need an RDD round-trip, which is
-        # not worth it at scale; Iceberg's required-ness is enforced on
-        # the WRITE side by the schema check in _write_data).
+                lits.append(f"{sql_literal(seq)} AS __seq")
+            parts.append(spark.read.schema(data_schema).parquet(*paths)
+                         .selectExpr("*", *lits, *extra))
+        # Column order/types are re-applied via .to(), which also
+        # projects the alias and delete-join helper columns away;
+        # nullability follows Spark's file-scan convention (all columns
+        # nullable — forcing required flags would need an RDD
+        # round-trip, which is not worth it at scale; Iceberg's
+        # required-ness is enforced on the WRITE side by the schema
+        # check in _write_data).
         read_schema = T.StructType(
             [T.StructField(f.name, f.dataType, True)
              for f in schema.fields])
         out = reduce(DataFrame.unionByName, parts)
+        if aliases:
+            out = with_sql_columns(out, {
+                fname: "coalesce(" + ", ".join(
+                    [sql_ident(fname)] + [
+                        f"CAST({sql_ident(a)} AS "
+                        f"{spark_types[fname].simpleString()})"
+                        for a in alist]) + ")"
+                for fname, alist in aliases.items()})
         if pos_dels:
             dels = spark.read.schema(
                 "file_path string, pos long"
@@ -1812,7 +1819,7 @@ class IcebergTable:
                 (out["__fp"] == dels["file_path"])
                 & (out["__pos"] == dels["pos"]),
                 "left_anti",
-            ).drop("__fp", "__pos")
+            )
         if eq_dels:
             id_to_name = {f["id"]: f["name"]
                           for f in ice_schema["fields"]}
@@ -1842,7 +1849,6 @@ class IcebergTable:
                     cond = cond & out[k].eqNullSafe(keys[k])
                 cond = cond & (out["__seq"] < F.lit(f.get("_seq", 0)))
                 out = out.join(keys, cond, "left_anti")
-            out = out.drop("__seq")
         if where is not None:
             # residual row filter: bounds only narrowed the FILE set —
             # exact predicate semantics come from the scan filter (which
@@ -1851,7 +1857,7 @@ class IcebergTable:
                     ">": "__gt__", ">=": "__ge__"}
             for col, op, val in where:
                 out = out.filter(getattr(F.col(col), _OPS[op])(F.lit(val)))
-        return out.select(*[f.name for f in schema.fields]).to(read_schema)
+        return out.to(read_schema)
 
     # ---------------------------------------------------- maintenance
 

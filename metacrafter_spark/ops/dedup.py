@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.functions import pandas_udf
 
+from metacrafter_spark.util import sql_ident, sql_string, with_sql_columns
+
 
 def exact_dedup(df: DataFrame, content_cols: list[str], order_col: str) -> DataFrame:
     """Keep the first row (by order_col) per identical content hash."""
@@ -913,17 +915,20 @@ _ASCII_LOWER = "abcdefghijklmnopqrstuvwxyz"
 _ASCII_JUNK = r"[\x00-\x2f\x3a-\x40\x5b-\x60\x7b-\x7f]+"
 
 
-def _para_norm(p: Column) -> Column:
-    """CCNet-style paragraph normalization for dedup keys: ASCII-only
-    case fold (``translate`` — per-char table, bit-identical in every
-    engine; Unicode case folding deliberately never enters the key) and
-    every ASCII control/whitespace/punctuation run → one space,
-    trimmed.  Non-ASCII codepoints pass through verbatim, so
-    boilerplate in ANY script deduplicates on its exact bytes; the
-    character classes are pure ASCII ranges, so Java regex ≡ RE2 ≡
-    DuckDB."""
-    return F.trim(F.regexp_replace(
-        F.translate(p, _ASCII_UPPER, _ASCII_LOWER), _ASCII_JUNK, " "))
+_PARA_SPLIT_RE = r"\n{2,}"
+
+
+def _para_norm(p: str) -> str:
+    """CCNet-style paragraph normalization for dedup keys, as Spark SQL
+    over the string expression ``p``: ASCII-only case fold
+    (``translate`` — per-char table, bit-identical in every engine;
+    Unicode case folding deliberately never enters the key) and every
+    ASCII control/whitespace/punctuation run → one space, trimmed.
+    Non-ASCII codepoints pass through verbatim, so boilerplate in ANY
+    script deduplicates on its exact bytes; the character classes are
+    pure ASCII ranges, so Java regex ≡ RE2 ≡ DuckDB."""
+    return (f"trim(regexp_replace(translate({p}, {sql_string(_ASCII_UPPER)}, "
+            f"{sql_string(_ASCII_LOWER)}), {sql_string(_ASCII_JUNK)}, ' '))")
 
 
 def remove_global_dup_paragraphs(
@@ -989,12 +994,13 @@ def _para_hash_frame(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     dedup decision stage ever shuffles.  Layout-only paragraphs (empty
     normalized key) are excluded here and re-kept unconditionally at
     rebuild."""
-    paras_col = F.split(F.col(text_col), r"\n{2,}")
+    id_ = sql_ident(id_col)
     return (
-        df.select(F.col(id_col), F.posexplode(paras_col).alias("__i", "__p"))
-        .select(id_col, "__i", _para_norm(F.col("__p")).alias("__k"))
-        .filter(F.col("__k") != "")
-        .select(id_col, "__i", F.sha2(F.col("__k"), 256).alias("__h"))
+        df.selectExpr(id_, f"posexplode(split({sql_ident(text_col)}, "
+                           f"{sql_string(_PARA_SPLIT_RE)})) AS (__i, __p)")
+        .selectExpr(id_, "__i", f"{_para_norm('__p')} AS __k")
+        .filter(F.expr("__k != ''"))
+        .selectExpr(id_, "__i", "sha2(__k, 256) AS __h")
     )
 
 
@@ -1002,40 +1008,38 @@ def _keep_first_winners(hashed: DataFrame, id_col: str) -> DataFrame:
     """The winner struct IS the surviving row — project it straight out
     of the agg (joining back onto the exploded frame would re-shuffle
     the largest intermediate for no semantic effect)."""
+    id_ = sql_ident(id_col)
     return hashed.groupBy("__h").agg(
-        F.min(F.struct(F.col(id_col), F.col("__i"))).alias("__w")
-    ).select(F.col(f"__w.{id_col}").alias(id_col),
-             F.col("__w.__i").alias("__i"))
+        F.expr(f"min(struct({id_}, __i)) AS __w")
+    ).selectExpr(f"__w.{id_} AS {id_}", "__w.__i AS __i")
 
 
 def _rebuild_from_keep(df: DataFrame, kept: DataFrame, id_col: str,
                        text_col: str, out_col: str) -> DataFrame:
     keep_idx = kept.groupBy(id_col).agg(
-        F.array_sort(F.collect_list("__i")).alias("__keep"))
-
-    def _survives(p, i):
-        return (_para_norm(p) == "") | F.array_contains(F.col("__keep"), i)
-
-    return (
-        df.join(keep_idx, id_col, "left")
-        .withColumn("__keep",
-                    F.coalesce(F.col("__keep"), F.array().cast("array<int>")))
+        F.expr("array_sort(collect_list(__i)) AS __keep"))
+    out = with_sql_columns(df.join(keep_idx, id_col, "left"), {
+        "__keep": "coalesce(__keep, CAST(array() AS array<int>))",
         # split AFTER the rebuild join: the id-keyed Exchange carries
         # the text once, never the doubled (text + split array) form
-        .withColumn("__paras", F.split(F.col(text_col), r"\n{2,}"))
-        .withColumn("__kept", F.filter(F.col("__paras"), _survives))
-        .withColumn(out_col, F.array_join(F.col("__kept"), "\n\n"))
-        .withColumn("n_paras",
-                    F.coalesce(F.size("__paras"), F.lit(-1))
-                    .cast("long"))
-        .withColumn("n_removed",
-                    (F.col("n_paras") - F.size("__kept")).cast("long"))
-        # NULL text: NULL out_col (array_join of NULL), zero counts —
-        # size() on a NULL array reports -1, not a count
-        .withColumn("n_paras", F.greatest("n_paras", F.lit(0)))
-        .withColumn("n_removed", F.greatest("n_removed", F.lit(0)))
-        .drop("__paras", "__keep", "__kept")
-    )
+        "__paras": f"split({sql_ident(text_col)}, "
+                   f"{sql_string(_PARA_SPLIT_RE)})",
+    })
+    out = with_sql_columns(out, {"__kept": (
+        f"filter(__paras, (p, i) -> {_para_norm('p')} = '' "
+        "OR array_contains(__keep, i))")})
+    out = with_sql_columns(out, {
+        out_col: f"array_join(__kept, {sql_string(chr(10) * 2)})",
+        "n_paras": "CAST(coalesce(size(__paras), -1) AS BIGINT)",
+    })
+    out = with_sql_columns(
+        out, {"n_removed": "CAST(n_paras - size(__kept) AS BIGINT)"})
+    # NULL text: NULL out_col (array_join of NULL), zero counts —
+    # size() on a NULL array reports -1, not a count
+    return with_sql_columns(out, {
+        "n_paras": "greatest(n_paras, 0)",
+        "n_removed": "greatest(n_removed, 0)",
+    }).drop("__paras", "__keep", "__kept")
 
 
 def para_keys(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -180,6 +180,15 @@ def pagerank(
     per-iteration truncation; guide §7.3 "very large plans").
     ``checkpoint_every=0`` restores the lazy single-action form.
 
+    Fault-tolerance trade-off of the default: ``localCheckpoint``
+    blocks live in executor storage only, unreplicated, and the
+    lineage behind them is cut.  On a cluster, losing an executor that
+    holds a checkpointed rank partition fails the job; it cannot be
+    recomputed.  The call is also eager: it runs one job per
+    checkpoint before returning.  Under a local master (one JVM) this
+    risks nothing; on a cluster where executor loss is likely, pass
+    ``checkpoint_every=0`` and accept the larger plan.
+
     ``persist=True`` (default) persists the loop-invariant frames —
     edges, nodes, out-degrees — since every iteration references them:
     without it the whole upstream lineage (e.g. html outlink

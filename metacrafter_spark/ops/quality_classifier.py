@@ -53,7 +53,14 @@ def featurize(df: DataFrame, *, id_col: str = "doc_id",
     explode plus one aggregation keyed (id, bucket).  ``binary=True``
     yields presence features (x = 1), which train better on
     short-document classes (the fastText default is counts; CCNet-
-    style quality filters often binarize)."""
+    style quality filters often binarize).
+
+    Precondition: ``id_col`` is unique per row.  The binary branch
+    dedups buckets within one row only, so two rows sharing an id each
+    emit the bucket with x = 1, and per-doc sums count it twice.  The
+    counted branch's (id, bucket) aggregation merges such rows into
+    one count instead.  Training and scoring key on unique ids
+    (``classify_corpus`` scores distinct (url, text-hash) keys)."""
     if binary:
         # Round-6: presence features need no (id, bucket) aggregation
         # at all — a document's grams live in ONE array, so the

@@ -41,6 +41,8 @@ import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from metacrafter_spark.util import sql_ident, sql_literal
+
 #: total hash bits (15 hex chars of sha256 — fits a signed 64-bit int)
 HASH_BITS = 60
 
@@ -148,27 +150,26 @@ def hll_estimate(
     r_max = HASH_BITS - p + 1
     c_lit = hll_alpha(m) * m * m * float(2**r_max)
     agg = regs.groupBy(*group_cols).agg(
-        F.count("*").cast("long").alias("__nb"),
+        F.expr("CAST(count(*) AS BIGINT) AS __nb"),
         # coalesce: a grand-total agg over an EMPTY register table
         # yields one row with a NULL sum — an empty corpus must
         # estimate 0 (all m buckets empty -> pure linear counting),
         # not NULL
-        F.coalesce(
-            F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {r_max} - reg)")),
-            F.lit(0),
-        ).cast("long").alias("__sp"),
+        F.expr(f"CAST(coalesce(sum(shiftleft(CAST(1 AS BIGINT), "
+               f"{r_max} - reg)), 0) AS BIGINT) AS __sp"),
     )
-    v = F.lit(m).cast("long") - F.col("__nb")
-    s = F.col("__sp") + v * F.lit(2**r_max).cast("long")
-    raw = F.lit(c_lit) / s.cast("double")
-    lc_used = (raw <= F.lit(2.5 * m)) & (v > 0)
-    lc = F.lit(float(m)) * F.log(F.lit(float(m)) / v.cast("double"))
-    est = F.round(F.when(lc_used, lc).otherwise(raw), 6)
-    return agg.select(
-        *group_cols,
-        F.col("__nb").alias("n_buckets_set"),
-        lc_used.alias("lc_used"),
-        est.cast("decimal(28,6)").alias("est_distinct"),
+    v = f"(CAST({m} AS BIGINT) - __nb)"
+    s = f"(__sp + {v} * CAST({2**r_max} AS BIGINT))"
+    raw = f"({sql_literal(c_lit)} / CAST({s} AS DOUBLE))"
+    lc_used = f"({raw} <= {sql_literal(2.5 * m)} AND {v} > 0)"
+    lc = (f"({sql_literal(float(m))} * "
+          f"ln({sql_literal(float(m))} / CAST({v} AS DOUBLE)))")
+    est = f"round(CASE WHEN {lc_used} THEN {lc} ELSE {raw} END, 6)"
+    return agg.selectExpr(
+        *map(sql_ident, group_cols),
+        "__nb AS n_buckets_set",
+        f"{lc_used} AS lc_used",
+        f"CAST({est} AS DECIMAL(28,6)) AS est_distinct",
     )
 
 

@@ -195,7 +195,7 @@ def test_with_langid_matches_single_expression(spark):
         .withColumn("text", F.lit(None).cast("string")))
     staged = with_langid(corpus).select("url", "langid_lang", "langid_score")
     single = (
-        corpus.withColumn("s", langid_struct(F.col("text")))
+        corpus.withColumn("s", langid_struct("text"))
         .select("url", F.col("s.lang").alias("langid_lang"),
                 F.col("s.score").alias("langid_score"))
     )
@@ -505,7 +505,7 @@ def test_langid_custom_pack_and_guards(spark):
     assert got[3] == "und" and got[4] == "und" and got[6] == "und"
     # single-expression form agrees with the staged form on this pack
     single = {r.doc_id: r.lang for r in df.select(
-        "doc_id", langid_struct(F.col("text"), pack=tiny).alias("s")
+        "doc_id", langid_struct("text", pack=tiny).alias("s")
     ).select("doc_id", "s.lang").collect()}
     assert single == got
 

@@ -134,7 +134,7 @@ def test_para_norm_cross_engine_differential(spark):
     df = spark.createDataFrame([(i, s) for i, s in enumerate(samples)],
                                "i long, s string")
     got_spark = [r["k"] for r in
-                 df.select("i", _para_norm(F.col("s")).alias("k"))
+                 df.select("i", F.expr(_para_norm("s")).alias("k"))
                  .orderBy("i").collect()]
     con = duckdb.connect()
     got_duck = [

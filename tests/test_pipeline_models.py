@@ -159,3 +159,32 @@ def test_langid_model_signal_columns(spark, corpus):
             .select("url", "keep", "drop_reason").collect()}
     assert {r["url"]: (r["keep"], r["drop_reason"])
             for r in rows} == base
+
+
+def test_two_model_pipelines_keep_their_own_caches(spark, corpus):
+    """Each model-scored pipeline hands its persisted score source to
+    its caller as ``score_cache``.  Building a second pipeline in the
+    same session must not release the first one's cache (a process-wide
+    release list used to unpersist it), and releasing one cache leaves
+    the other in place."""
+    from pyspark.storagelevel import StorageLevel
+
+    m = train_kn_bigram(corpus.withColumnRenamed("url", "doc_id"),
+                        vocab_size=2048)
+    a = classify_corpus(corpus, kenlm_model=m)
+    # another input: plan-identical score sources share one cache entry
+    b = classify_corpus(corpus.filter("url NOT LIKE '%7'"), kenlm_model=m)
+    try:
+        assert a.score_cache is not None and b.score_cache is not None
+        assert a.score_cache.storageLevel != StorageLevel.NONE
+        assert b.score_cache.storageLevel != StorageLevel.NONE
+        want = {r["url"]: r["kn_ppl"]
+                for r in a.select("url", "kn_ppl").collect()}
+        b.score_cache.unpersist(blocking=True)
+        assert a.score_cache.storageLevel != StorageLevel.NONE
+        assert {r["url"]: r["kn_ppl"]
+                for r in a.select("url", "kn_ppl").collect()} == want
+    finally:
+        a.score_cache.unpersist()
+        b.score_cache.unpersist()
+    assert classify_corpus(corpus).score_cache is None

@@ -146,6 +146,32 @@ def test_binary_featurize_mapside_matches_groupby(spark, two_pool):
     assert "Exchange" not in plan
 
 
+def test_binary_featurize_requires_unique_ids(spark):
+    """The documented precondition of binary featurize: ids are unique.
+    With unique ids every (id, bucket) pair appears once, x = 1.  Two
+    rows sharing an id each emit their buckets, so a per-doc sum counts
+    them twice, while the counted branch merges the rows into one
+    (id, bucket) count."""
+    docs = spark.createDataFrame(
+        [(1, "alpha bravo charlie"), (2, "delta echo foxtrot")],
+        "doc_id long, text string")
+    dup = docs.unionByName(docs.filter("doc_id = 1"))
+    unique = featurize(docs, buckets=64, max_words=50, binary=True)
+    pairs = [(r.doc_id, r.bucket) for r in unique.collect()]
+    assert len(pairs) == len(set(pairs))
+    binary = featurize(dup, buckets=64, max_words=50, binary=True)
+    counted = featurize(dup, buckets=64, max_words=50)
+    per_doc = {r.doc_id: r.s for r in
+               binary.groupBy("doc_id").agg(F.sum("x").alias("s")).collect()}
+    n1 = unique.filter("doc_id = 1").count()
+    assert per_doc[1] == 2 * n1 and per_doc[2] == n1
+    once = {r.bucket: r.x for r in featurize(docs, buckets=64, max_words=50)
+            .filter("doc_id = 1").collect()}
+    assert {r.bucket: r.x for r in counted.filter("doc_id = 1").collect()} \
+        == {b: 2 * x for b, x in once.items()}
+    assert len(once) == n1
+
+
 def test_distills_junk_markers_on_webcorpus(spark):
     """The driver-query configuration: junk labels from lorem-ipsum /
     code markers, 50x minority upweighting — the trained model must
