@@ -215,10 +215,12 @@ def main() -> None:
         best = float("inf")
         for _ in range(2):
             t0 = time.perf_counter()
-            classify_corpus(corpus, kenlm_model=lm_loaded,
-                            quality_model=qc_loaded).write.format(
-                "noop").mode("overwrite").save()
+            scored = classify_corpus(corpus, kenlm_model=lm_loaded,
+                                     quality_model=qc_loaded)
+            scored.write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)
+            # release the score source so the next repeat builds it cold
+            scored.score_cache.unpersist(blocking=True)
         qtimes["model_scored_pipeline"] = round(best, 3)
     finally:
         shutil.rmtree(mdir, ignore_errors=True)

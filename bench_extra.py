@@ -329,9 +329,15 @@ def main() -> None:
             max_words=100, iterations=3, lr=2.0,
             class_weights=(50.0, 1.0), binary=True)
         sc.setJobDescription("soak:model_scored_pipeline")
-        out["model_scored_pipeline"] = _best(
-            lambda: _noop(classify_corpus(corpus, kenlm_model=lm,
-                                          quality_model=qc)), 2)
+
+        def _model_scored():
+            scored = classify_corpus(corpus, kenlm_model=lm,
+                                     quality_model=qc)
+            _noop(scored)
+            # release the score source so the next repeat builds it cold
+            scored.score_cache.unpersist(blocking=False)
+
+        out["model_scored_pipeline"] = _best(_model_scored, 2)
 
         sc.setJobDescription("soak:corpus_pipeline")
         out["corpus_pipeline"] = _best(

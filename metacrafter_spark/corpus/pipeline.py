@@ -62,8 +62,15 @@ DEFAULT_POLICY = KeepPolicy()
 _DOMAIN_RE = r"^[a-z]+://([^/:?#]+)"
 
 
-def domain_of(url: Column) -> Column:
-    return F.lower(F.regexp_extract(url, _DOMAIN_RE, 1))
+def domain_sql(url_col: str) -> str:
+    """SQL text of the lower-cased host of the column named ``url_col``
+    (the ``domain`` column :func:`classify_corpus` writes)."""
+    return f"lower(regexp_extract({sql_ident(url_col)}, {sql_string(_DOMAIN_RE)}, 1))"
+
+
+def domain_of(url_col: str) -> Column:
+    """:func:`domain_sql` as a Column."""
+    return F.expr(domain_sql(url_col))
 
 
 def classify_corpus(
@@ -188,7 +195,7 @@ def classify_corpus(
     score_cache = None
     out = with_sql_columns(df, {
         "bucket_id": f"pmod(xxhash64(url), {sql_literal(int(n_buckets))})",
-        "domain": f"lower(regexp_extract(url, {sql_string(_DOMAIN_RE)}, 1))",
+        "domain": domain_sql("url"),
     })
     if robots_rules is not None:
         from metacrafter_spark.corpus.robots import with_robots_allowed

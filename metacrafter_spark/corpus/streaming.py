@@ -213,7 +213,7 @@ def stream_domain_windows(
 
     stream = read_webpage_stream(spark, input_path)
     agg = (
-        stream.withColumn("domain", domain_of(F.col("url")))
+        stream.withColumn("domain", domain_of("url"))
         .withWatermark("warc_ts", watermark)
         .groupBy(F.window("warc_ts", window).alias("win"), "domain")
         .agg(
@@ -263,7 +263,7 @@ def stream_enrich_domains(
     from metacrafter_spark.corpus.pipeline import domain_of
 
     stream = read_webpage_stream(spark, input_path).withColumn(
-        "domain", domain_of(F.col("url"))
+        "domain", domain_of("url")
     )
     enriched = (
         stream.join(F.broadcast(domains_df), "domain", "left")

@@ -1359,36 +1359,15 @@ class IcebergTable:
         rule real readers apply is recorded correctly but redundant
         here)."""
         import datetime as _dt
-        from functools import reduce
         from pyspark.sql import functions as F
 
         data_files = self.plan_files()
         if not data_files:
             return None
-        schema = self.spark_schema
-        id_cols = self.identity_partition_columns
-        data_schema = T.StructType(
-            [f for f in schema.fields if f.name not in id_cols])
-        spark_types = {f.name: f.dataType for f in schema.fields}
-        groups: dict[tuple, list[str]] = {}
-        for f in data_files:
-            key = tuple(f["partition"].get(c) for c in id_cols)
-            groups.setdefault(key, []).append(f["file_path"])
-        parts = []
-        for key, paths in sorted(groups.items(), key=lambda kv: str(kv[0])):
-            d = spark.read.schema(data_schema).parquet(*paths)
-            for c, v in zip(id_cols, key):
-                d = d.withColumn(c, F.lit(v).cast(spark_types[c]))
-            parts.append(d.select(
-                *[f.name for f in schema.fields],
-                F.col("_metadata.file_path").alias("__fp"),
-                F.col("_metadata.row_index").alias("__pos")))
-        full = reduce(DataFrame.unionByName, parts)
+        full = self._scan(spark, data_files, self.schema, positions=True)
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        matched = full.filter(cond).select(
-            F.regexp_replace(F.col("__fp"), "^file:/+", "/")
-            .alias("file_path"),
-            F.col("__pos").alias("pos"))
+        matched = full.filter(cond).selectExpr("__fp AS file_path",
+                                               "__pos AS pos")
 
         part_cols = self.partition_field_names
         job_dir = os.path.join(
@@ -1732,7 +1711,6 @@ class IcebergTable:
         hidden ``_metadata`` columns — broadcast when the delete set
         is small, shuffled otherwise."""
         from pyspark.sql import functions as F
-        from functools import reduce
 
         if ref is not None:
             if snapshot_id is not None:
@@ -1752,41 +1730,15 @@ class IcebergTable:
             ice_schema = next(
                 s for s in self.metadata["schemas"]
                 if s.get("schema-id", 0) == snap.schema_id)
-        schema, part_cols, aliases, data_schema, spark_types = \
-            self._scan_shapes(ice_schema)
+        schema, _, aliases, _, spark_types = self._scan_shapes(ice_schema)
         if not files:
             return spark.createDataFrame(
                 [], T.StructType([T.StructField(f.name, f.dataType, True)
                                   for f in schema.fields]))
         pos_dels = [f for f in deletes if f["content"] == 1]
         eq_dels = [f for f in deletes if f["content"] == 2]
-        # group by (identity key, file sequence): sequence literals are
-        # what the equality-delete applicability rule (delete.seq >
-        # data.seq, strictly) keys on
-        groups: dict[tuple, list[str]] = {}
-        for f in files:
-            key = (tuple(f["partition"].get(c) for c in part_cols),
-                   f.get("_seq", 0))
-            groups.setdefault(key, []).append(f["file_path"])
-        # one small projection per group attaches its partition and
-        # sequence literals (and the delete-join keys); the alias
-        # coalesces and the column order are applied once, after the
-        # union — SQL text, so the read costs a few py4j round trips
-        # per group instead of ~13 per column per group
-        extra = []
-        if pos_dels:
-            extra += ["regexp_replace(_metadata.file_path, '^file:/+', '/')"
-                      " AS __fp", "_metadata.row_index AS __pos"]
-        parts = []
-        for (key, seq), paths in sorted(groups.items(),
-                                        key=lambda kv: str(kv[0])):
-            lits = [f"CAST({sql_literal(v)} AS "
-                    f"{spark_types[c].simpleString()}) AS {sql_ident(c)}"
-                    for c, v in zip(part_cols, key)]
-            if eq_dels:
-                lits.append(f"{sql_literal(seq)} AS __seq")
-            parts.append(spark.read.schema(data_schema).parquet(*paths)
-                         .selectExpr("*", *lits, *extra))
+        out = self._scan(spark, files, ice_schema, seq=bool(eq_dels),
+                         positions=bool(pos_dels))
         # Column order/types are re-applied via .to(), which also
         # projects the alias and delete-join helper columns away;
         # nullability follows Spark's file-scan convention (all columns
@@ -1797,15 +1749,6 @@ class IcebergTable:
         read_schema = T.StructType(
             [T.StructField(f.name, f.dataType, True)
              for f in schema.fields])
-        out = reduce(DataFrame.unionByName, parts)
-        if aliases:
-            out = with_sql_columns(out, {
-                fname: "coalesce(" + ", ".join(
-                    [sql_ident(fname)] + [
-                        f"CAST({sql_ident(a)} AS "
-                        f"{spark_types[fname].simpleString()})"
-                        for a in alist]) + ")"
-                for fname, alist in aliases.items()})
         if pos_dels:
             dels = spark.read.schema(
                 "file_path string, pos long"
@@ -2051,7 +1994,8 @@ class IcebergTable:
         rename aliases, the widened data-read schema that projects the
         historical names too (Parquet widening covers promoted
         renames), and the per-column Spark types.  One definition so
-        the full and incremental read paths cannot drift."""
+        the read paths (:meth:`_scan` and :meth:`read`'s equality-delete
+        keys) cannot drift."""
         schema = iceberg_schema_to_spark(ice_schema)
         part_cols = self.identity_partition_columns
         aliases = {k: v for k, v in self._field_aliases(ice_schema).items()
@@ -2063,6 +2007,56 @@ class IcebergTable:
                            for a in aliases.get(f.name, [])])
         spark_types = {f.name: f.dataType for f in schema.fields}
         return schema, part_cols, aliases, data_schema, spark_types
+
+    def _scan(self, spark: SparkSession, files: list[dict],
+              ice_schema: dict, *, seq: bool = False,
+              positions: bool = False) -> DataFrame:
+        """The rows of ``files`` (non-empty) under schema version
+        ``ice_schema``, before any delete applies: one parquet read per
+        identity-partition group, the group's partition values attached
+        as literals, and renamed columns coalesced from their historical
+        names.  ``seq`` also splits the groups by file sequence number
+        and adds it as ``__seq`` (the equality-delete rule keys on it);
+        ``positions`` adds the file path and row index as ``__fp`` /
+        ``__pos`` (the position-delete keys).  The historical-name and
+        helper columns ride along for the caller to project away.  The
+        projections are SQL text, a few py4j round trips per group
+        instead of ~13 per column per group; :meth:`read`,
+        :meth:`read_incremental` and :meth:`delete_where` all scan
+        through here."""
+        from functools import reduce
+
+        _, part_cols, aliases, data_schema, spark_types = \
+            self._scan_shapes(ice_schema)
+        groups: dict[tuple, list[str]] = {}
+        for f in files:
+            key = (tuple(f["partition"].get(c) for c in part_cols),
+                   f.get("_seq", 0) if seq else 0)
+            groups.setdefault(key, []).append(f["file_path"])
+        extra = []
+        if positions:
+            extra += ["regexp_replace(_metadata.file_path, '^file:/+', '/')"
+                      " AS __fp", "_metadata.row_index AS __pos"]
+        parts = []
+        for (key, fseq), paths in sorted(groups.items(),
+                                         key=lambda kv: str(kv[0])):
+            lits = [f"CAST({sql_literal(v)} AS "
+                    f"{spark_types[c].simpleString()}) AS {sql_ident(c)}"
+                    for c, v in zip(part_cols, key)]
+            if seq:
+                lits.append(f"{sql_literal(fseq)} AS __seq")
+            parts.append(spark.read.schema(data_schema).parquet(*paths)
+                         .selectExpr("*", *lits, *extra))
+        out = reduce(DataFrame.unionByName, parts)
+        if aliases:
+            out = with_sql_columns(out, {
+                fname: "coalesce(" + ", ".join(
+                    [sql_ident(fname)] + [
+                        f"CAST({sql_ident(a)} AS "
+                        f"{spark_types[fname].simpleString()})"
+                        for a in alist]) + ")"
+                for fname, alist in aliases.items()})
+        return out
 
     # ---------------------------------------------------- incremental
 
@@ -2117,40 +2111,16 @@ class IcebergTable:
                          ) -> DataFrame:
         """Distributed read of :meth:`plan_incremental`'s file set, with
         identity partition values re-attached and rename aliases
-        resolved — the same :meth:`_scan_shapes` mechanics as
-        :meth:`read` (append-only ranges have no delete files by
-        construction)."""
-        from functools import reduce
-
-        from pyspark.sql import functions as F
-
+        resolved — the same :meth:`_scan` as :meth:`read` (append-only
+        ranges have no delete files by construction)."""
         files = self.plan_incremental(from_snapshot_id=from_snapshot_id,
                                       to_snapshot_id=to_snapshot_id)
-        schema, part_cols, aliases, data_schema, spark_types = \
-            self._scan_shapes(self.schema)
-        if not files:
-            return spark.createDataFrame(
-                [], T.StructType([T.StructField(f.name, f.dataType, True)
-                                  for f in schema.fields]))
-        groups: dict[tuple, list[str]] = {}
-        for f in files:
-            key = tuple(f["partition"].get(c) for c in part_cols)
-            groups.setdefault(key, []).append(f["file_path"])
-        parts = []
-        for key, paths in sorted(groups.items(), key=lambda kv: str(kv[0])):
-            d = spark.read.schema(data_schema).parquet(*paths)
-            for c, v in zip(part_cols, key):
-                d = d.withColumn(c, F.lit(v).cast(spark_types[c]))
-            for fname, alist in aliases.items():
-                d = d.withColumn(
-                    fname,
-                    F.coalesce(F.col(fname),
-                               *[F.col(a).cast(spark_types[fname])
-                                 for a in alist]))
-            parts.append(d.select(*[f.name for f in schema.fields]))
-        return reduce(DataFrame.unionByName, parts).to(T.StructType(
+        read_schema = T.StructType(
             [T.StructField(f.name, f.dataType, True)
-             for f in schema.fields]))
+             for f in self.spark_schema.fields])
+        if not files:
+            return spark.createDataFrame([], read_schema)
+        return self._scan(spark, files, self.schema).to(read_schema)
 
     # ------------------------------------------------- schema evolution
 

@@ -975,8 +975,9 @@ def main() -> None:
         "text")
     knm = train_kn_bigram(pages.withColumnRenamed("url", "doc_id"),
                           vocab_size=256, max_words=100)
-    mplan = plan_of(classify_corpus(pages, kenlm_model=knm)
-                    .select("url", "kn_ppl", "keep"))
+    scored = classify_corpus(pages, kenlm_model=knm)
+    mplan = plan_of(scored.select("url", "kn_ppl", "keep"))
+    scored.score_cache.unpersist()
     sections.append((
         "Trained-model pipeline stage (KN model tables broadcast; "
         "composite-key score join, no cartesian)",

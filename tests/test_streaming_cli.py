@@ -66,7 +66,7 @@ def test_stream_domain_windows_watermark(spark, tmp_path):
     assert got.count() == got.select("win_start", "domain").distinct().count()
     domains = {r["domain"] for r in got.select("domain").distinct().collect()}
     true_domains = {
-        r["d"] for r in corpus.select(domain_of(F.col("url")).alias("d"))
+        r["d"] for r in corpus.select(domain_of("url").alias("d"))
         .distinct().collect()
     }
     assert domains <= true_domains and len(domains) > 1
@@ -79,7 +79,7 @@ def test_stream_domain_windows_watermark(spark, tmp_path):
         (r["w"], r["d"]): r["n"]
         for r in corpus.select(
             F.window("warc_ts", "10 minutes").alias("win"),
-            domain_of(F.col("url")).alias("d"),
+            domain_of("url").alias("d"),
         ).select(F.col("win.start").alias("w"), "d")
         .groupBy("w", "d").agg(F.count(F.lit(1)).alias("n")).collect()
     }
@@ -199,7 +199,7 @@ def test_stream_enrich_domains_static_join(spark, tmp_path):
     corpus.write.parquet(src)
     domains = sorted(
         r["d"] for r in corpus.select(
-            domain_of(F.col("url")).alias("d")).distinct().collect()
+            domain_of("url").alias("d")).distinct().collect()
     )
     assert len(domains) >= 3
     static = spark.createDataFrame(
@@ -210,7 +210,7 @@ def test_stream_enrich_domains_static_join(spark, tmp_path):
     got = spark.read.parquet(out)
     got_domains = {r["domain"] for r in got.select("domain").distinct().collect()}
     assert domains[0] not in got_domains          # blocked dropped
-    n_blocked = corpus.filter(domain_of(F.col("url")) == domains[0]).count()
+    n_blocked = corpus.filter(domain_of("url") == domains[0]).count()
     assert got.count() == 200 - n_blocked
     rep = {r["domain"]: r["reputation"]
            for r in got.select("domain", "reputation").distinct().collect()}
