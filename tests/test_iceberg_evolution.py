@@ -183,3 +183,19 @@ def test_equality_delete_keys_survive_rename(spark, table):
               .withColumn("body", F.lit("body-a-5")),
               now_ms=1_700_000_003_000)
     assert IcebergTable.load(t.location).read(spark).count() == 21
+
+
+def test_delete_where_on_renamed_column(spark, table):
+    """A position delete whose condition names a renamed column matches
+    rows in files written before the rename too."""
+    table.rename_column("text", "body")
+    t = IcebergTable.load(table.location)
+    t.append(_docs(spark, 20, 30, "b").withColumnRenamed("text", "body"),
+             now_ms=1_700_000_002_000)
+    t.delete_where(spark, "body IN ('body-a-5', 'body-b-25')",
+                   now_ms=1_700_000_003_000)
+    got = {r["url"] for r in
+           IcebergTable.load(t.location).read(spark).collect()}
+    assert len(got) == 28
+    assert "https://a.example.com/p5" not in got
+    assert "https://b.example.com/p25" not in got
