@@ -1358,30 +1358,33 @@ def main(argv=None) -> int:
                     sha_minhash_signatures(
                         src.filter(~F.col("nd_dup")), "url"))
 
-            store_update = None
+            winners = None
             if args.para_dedup_store:
+                from pyspark import StorageLevel
+
                 from metacrafter_spark.ops.dedup import (
-                    incremental_para_dedup, para_keys,
+                    incremental_para_dedup,
                 )
                 from metacrafter_spark.util import with_sql_columns
 
                 phase("warc-ingest: read stores")
                 seen = read_key_store(spark, args.para_dedup_store)
-                # keys of the ORIGINAL batch text (everything this dump
-                # contributes to the store), captured before dedup
-                batch_keys = para_keys(src, "text")
+                deduped = incremental_para_dedup(
+                    src, seen, id_col="url", text_col="text")
+                # one row per batch key not yet stored: persisted so
+                # the output write fills the cache and the store
+                # advance reads it, never rescanning the batch
+                winners = deduped.winners.persist(
+                    StorageLevel.MEMORY_AND_DISK)
                 src = with_sql_columns(
-                    incremental_para_dedup(
-                        src, seen, id_col="url", text_col="text"),
-                    {"text": "text_dedup"},
+                    deduped, {"text": "text_dedup"},
                 ).drop("text_dedup").withColumnsRenamed(
                     {"n_paras": "para_n", "n_removed": "para_removed"})
-                para_new_store = (seen.unionByName(batch_keys).distinct()
-                                  if seen is not None else batch_keys)
-
-                def store_update() -> None:
-                    advance_key_store(para_new_store,
-                                      args.para_dedup_store)
+                new_keys = winners.selectExpr("__h AS key")
+                # disjoint from the store (anti-join) and distinct
+                # (group-by), so the union needs no distinct()
+                para_new_store = (seen.unionByName(new_keys)
+                                  if seen is not None else new_keys)
 
             classified = classify_corpus(src, toxicity_wordlist=wl, **kw)
             # persisted by the model stages (None without them); the
@@ -1395,31 +1398,38 @@ def main(argv=None) -> int:
             # pii_hits struct to per-rule count columns for the write
             from metacrafter_spark.io.iceberg import flatten_struct_columns
             classified = flatten_struct_columns(classified)
+            sums = ("para_removed",) if winners is not None else ()
             try:
-                totals = run_with_resume(
-                    classified, io, args.output, args.metrics,
-                    sums=("para_removed",) if store_update else (),
-                    label="warc-ingest")
+                try:
+                    totals = run_with_resume(
+                        classified, io, args.output, args.metrics,
+                        sums=sums, label="warc-ingest")
+                finally:
+                    if score_cache is not None:
+                        score_cache.unpersist(blocking=False)
+                summary = {"processed": totals["processed"],
+                           "kept_total": totals["kept_total"]}
+                if n_edges is not None:
+                    summary["edges"] = n_edges
+                if nd_counts is not None:
+                    # near-dup store advances only after a successful
+                    # ingest: a crashed run re-dedups against the OLD
+                    # store and the resume anti-join prevents
+                    # duplicate writes
+                    phase("warc-ingest: advance minhash store")
+                    advance_key_store(minhash_new_store,
+                                      args.minhash_store)
+                    summary["minhash_seen"] = int(nd_counts["n"] or 0)
+                    summary["minhash_dropped"] = int(nd_counts["d"] or 0)
+                if winners is not None:
+                    # same contract for the paragraph-key store
+                    phase("warc-ingest: advance para store")
+                    advance_key_store(para_new_store,
+                                      args.para_dedup_store)
+                    summary["para_removed"] = totals["para_removed"]
             finally:
-                if score_cache is not None:
-                    score_cache.unpersist(blocking=False)
-            summary = {"processed": totals["processed"],
-                       "kept_total": totals["kept_total"]}
-            if n_edges is not None:
-                summary["edges"] = n_edges
-            if nd_counts is not None:
-                # near-dup store advances only after a successful
-                # ingest: a crashed run re-dedups against the OLD store
-                # and the resume anti-join prevents duplicate writes
-                phase("warc-ingest: advance minhash store")
-                advance_key_store(minhash_new_store, args.minhash_store)
-                summary["minhash_seen"] = int(nd_counts["n"] or 0)
-                summary["minhash_dropped"] = int(nd_counts["d"] or 0)
-            if store_update is not None:
-                # same contract for the paragraph-key store
-                phase("warc-ingest: advance para store")
-                store_update()
-                summary["para_removed"] = totals["para_removed"]
+                if winners is not None:
+                    winners.unpersist(blocking=False)
             if args.url_hll_store:
                 from metacrafter_spark.ops.sketches import (
                     hll_estimate, hll_merge, hll_registers)

@@ -184,8 +184,10 @@ def classify_corpus(
     ``score_cache`` (None otherwise).  The caller owns it: unpersist
     it after the last action on the result, as the CLI and the
     streaming sinks do.  Building a second pipeline does not release
-    the first one's cache (Spark keeps one cache entry per plan, so two
-    pipelines over the same input share theirs).
+    the first one's cache.  Spark's CacheManager keys cached data by
+    plan, so two pipelines over the same input share one entry, and
+    the first ``unpersist`` releases it for both (the other then
+    recomputes its scores).
 
     Every stage but the Python UDFs and the optional signal joins is
     built as Spark SQL text, one projection per dependency level.

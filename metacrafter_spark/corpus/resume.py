@@ -28,6 +28,8 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from metacrafter_spark.util import sql_ident, sql_literal
+
 
 class TableIO:
     """Thin table abstraction: parquet dirs now, Iceberg later."""
@@ -146,8 +148,8 @@ def observed_write(df: DataFrame,
     """Run ``write`` on ``df`` and return ``(rows, bucket_ids)`` it
     wrote, observed during that same pass (no second action)."""
     seen = Observation()
-    write(df.observe(seen, F.count(F.lit(1)).alias("rows"),
-                     F.collect_set("bucket_id").alias("buckets")))
+    write(df.observe(seen, F.expr("count(1) AS rows"),
+                     F.expr("collect_set(bucket_id) AS buckets")))
     # read only after the write ran: get blocks until an action on the
     # observed frame has finished
     got = seen.get
@@ -191,13 +193,14 @@ def run_with_resume(
     table = io.read(out_path)
     if table is None:  # a parquet table no row was ever written to
         return out
-    totals = [F.sum(F.col("keep").cast("long")).alias("kept_total"),
-              *[F.sum(c).alias(c) for c in sums]]
+    totals = [F.expr("sum(CAST(keep AS BIGINT)) AS kept_total"),
+              *[F.expr(f"sum({sql_ident(c)}) AS {sql_ident(c)}")
+                for c in sums]]
     with job_phase(spark, label and f"{label}: metrics"):
         if buckets:
             seen = Observation()
             written = table.observe(seen, *totals).filter(
-                F.col("bucket_id").isin(buckets))
+                f"bucket_id IN ({', '.join(map(sql_literal, buckets))})")
             io.overwrite_partitions(
                 pipeline.bucket_metrics(written, rules), metrics_path,
                 partition_by=["bucket_id"])

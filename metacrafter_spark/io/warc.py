@@ -51,10 +51,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from metacrafter_spark.util import sql_string
+
 SCAN_SCHEMA = ("file string, offset long, url string, warc_ts timestamp, "
                "http_status int, mime string, html binary, "
                "x_robots string")
 
+_CDX_LINE_RE = r"^\S+ (\d{14}) (\{.*\})$"
 _CDX_JSON_SCHEMA = ("url string, filename string, offset string, "
                     "length string, status string, mime string, "
                     "digest string")
@@ -468,14 +471,13 @@ def cdx_parse(lines: DataFrame) -> DataFrame:
     """CDXJ text lines → (url, filename, offset, length), parsed
     JVM-side (``from_json``) — works on batch AND streaming frames."""
     return (lines
-            .select(F.regexp_extract("value", r"^\S+ (\d{14}) (\{.*\})$",
-                                     2).alias("js"))
-            .filter(F.col("js") != "")
-            .select(F.from_json("js", _CDX_JSON_SCHEMA).alias("c"))
-            .select(F.col("c.url").alias("url"),
-                    F.col("c.filename").alias("filename"),
-                    F.col("c.offset").cast("long").alias("offset"),
-                    F.col("c.length").cast("long").alias("length")))
+            .selectExpr("regexp_extract(value, "
+                        f"{sql_string(_CDX_LINE_RE)}, 2) AS js")
+            .filter("js != ''")
+            .selectExpr(f"from_json(js, {sql_string(_CDX_JSON_SCHEMA)}) AS c")
+            .selectExpr("c.url AS url", "c.filename AS filename",
+                        "CAST(c.offset AS BIGINT) AS offset",
+                        "CAST(c.length AS BIGINT) AS length"))
 
 
 def cdx_fetch(parsed: DataFrame, warc_dir: str, *,

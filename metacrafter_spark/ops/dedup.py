@@ -1005,13 +1005,15 @@ def _para_hash_frame(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def _keep_first_winners(hashed: DataFrame, id_col: str) -> DataFrame:
-    """The winner struct IS the surviving row — project it straight out
-    of the agg (joining back onto the exploded frame would re-shuffle
-    the largest intermediate for no semantic effect)."""
+    """One row per paragraph key: ``(id, __i, __h)``.  The winner
+    struct IS the surviving row — project it straight out of the agg
+    (joining back onto the exploded frame would re-shuffle the largest
+    intermediate for no semantic effect); the key rides along, so the
+    rows are also the batch's distinct keys."""
     id_ = sql_ident(id_col)
     return hashed.groupBy("__h").agg(
         F.expr(f"min(struct({id_}, __i)) AS __w")
-    ).selectExpr(f"__w.{id_} AS {id_}", "__w.__i AS __i")
+    ).selectExpr(f"__w.{id_} AS {id_}", "__w.__i AS __i", "__h")
 
 
 def _rebuild_from_keep(df: DataFrame, kept: DataFrame, id_col: str,
@@ -1051,7 +1053,8 @@ def para_keys(df: DataFrame, text_col: str = "text") -> DataFrame:
     re-reading prior text (the CCNet sequential-shard shape; the
     MinHash sibling is :func:`sha_minhash_signatures`).  Union it with
     the prior store (and ``distinct()`` or anti-join on append) after
-    each ingested batch."""
+    each ingested batch — or, after :func:`incremental_para_dedup` of
+    the batch, union its ``winners`` keys, which needs no rescan."""
     return _para_hash_frame(
         df.select(F.lit(0).alias("__z"), F.col(text_col)), "__z", text_col
     ).select(F.col("__h").alias("key")).distinct()
@@ -1081,14 +1084,29 @@ def incremental_para_dedup(
     ``out_col`` + ``n_paras`` + ``n_removed``, NULL text passes
     through.  Scale shape: the store anti-join is fixed-width on both
     sides ((id, idx, hash) vs (hash)); everything else is the batch
-    op's plan.  The caller appends :func:`para_keys` of the batch to
-    the store afterwards."""
+    op's plan.
+
+    The returned frame carries ``winners``: the keep-first survivors,
+    one row per batch key NOT in ``seen_keys`` (``id_col``, paragraph
+    index ``__i``, key ``__h``).  Those keys are exactly what the batch
+    adds to the store, so the next store is ``seen_keys`` union
+    ``winners.selectExpr("__h AS key")`` — disjoint by the anti-join
+    and distinct by the group-by, so no ``distinct()`` and no
+    :func:`para_keys` rescan of the batch.  The library persists
+    nothing: a caller that persists ``winners`` before the first action
+    on the result has that action fill the cache and the store advance
+    read it, and owns the ``unpersist``.  Spark's CacheManager keys
+    cached data by plan, so two dedups of the same input against the
+    same store share one cache entry, and the first ``unpersist``
+    releases it for both."""
     hashed = _para_hash_frame(new_df, id_col, text_col)
     if seen_keys is not None:
         hashed = hashed.join(
             seen_keys.select(F.col("key").alias("__h")), "__h", "left_anti")
     kept = _keep_first_winners(hashed, id_col)
-    return _rebuild_from_keep(new_df, kept, id_col, text_col, out_col)
+    out = _rebuild_from_keep(new_df, kept, id_col, text_col, out_col)
+    out.winners = kept
+    return out
 
 
 def shingles_positional(words: Column, n: int) -> Column:

@@ -41,7 +41,7 @@ import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from metacrafter_spark.util import sql_ident, sql_literal
+from metacrafter_spark.util import sql_ident, sql_literal, sql_string
 
 #: total hash bits (15 hex chars of sha256 — fits a signed 64-bit int)
 HASH_BITS = 60
@@ -50,11 +50,20 @@ HASH_BITS = 60
 HLL_P_DEFAULT = 12
 
 
-def _hash60(col: Column) -> Column:
-    """Portable 60-bit hash: first 15 hex chars of sha256, as a long.
-    Identical primitives in DuckDB: ``('0x' || substr(sha256(x), 1,
-    15))::BIGINT``."""
-    return F.conv(F.substring(F.sha2(col, 256), 1, 15), 16, 10).cast("long")
+def _hash60_sql(expr: str) -> str:
+    """Portable 60-bit hash of the string expression ``expr`` as Spark
+    SQL text: first 15 hex chars of sha256, as a long.  Identical
+    primitives in DuckDB: ``('0x' || substr(sha256(x), 1, 15))::BIGINT``."""
+    return f"CAST(conv(substring(sha2({expr}, 256), 1, 15), 16, 10) AS BIGINT)"
+
+
+def _as_string(col_name: str) -> str:
+    return f"CAST({sql_ident(col_name)} AS STRING)"
+
+
+def _hash60(col_name: str) -> Column:
+    """:func:`_hash60_sql` of column ``col_name`` as a string."""
+    return F.expr(_hash60_sql(_as_string(col_name)))
 
 
 def hll_alpha(m: int) -> float:
@@ -91,19 +100,18 @@ def hll_registers(
     engines, and two tables merge by ``max`` (:func:`hll_merge`).
     At most ``2^p`` rows per group regardless of input size."""
     _check_p(p)
-    m = 1 << p
     w_bits = HASH_BITS - p
-    h = _hash60(F.col(item_col).cast("string"))
-    w = F.shiftright(h, p)  # exact bit shift (h < 2^60 exceeds 2^53)
-    rho = F.when(w == 0, F.lit(w_bits + 1)).otherwise(
-        F.lit(w_bits) - F.length(F.bin(w)) + 1
-    )
-    gcols = [F.col(c) for c in group_cols]
+    item = sql_ident(item_col)
+    h = _hash60_sql(_as_string(item_col))
+    w = f"shiftright({h}, {p})"  # exact bit shift (h < 2^60 exceeds 2^53)
+    rho = (f"CASE WHEN {w} = 0 THEN {w_bits + 1} "
+           f"ELSE {w_bits} - length(bin({w})) + 1 END")
     return (
-        df.filter(F.col(item_col).isNotNull())
-        .select(*gcols, F.pmod(h, F.lit(m)).alias("bucket"), rho.alias("rho"))
+        df.filter(f"{item} IS NOT NULL")
+        .selectExpr(*map(sql_ident, group_cols),
+                    f"pmod({h}, {1 << p}) AS bucket", f"{rho} AS rho")
         .groupBy(*group_cols, "bucket")
-        .agg(F.max("rho").cast("int").alias("reg"))
+        .agg(F.expr("CAST(max(rho) AS INT) AS reg"))
     )
 
 
@@ -121,7 +129,7 @@ def hll_merge(
         out = out.unionByName(t)
     return (
         out.groupBy(*group_cols, "bucket")
-        .agg(F.max("reg").cast("int").alias("reg"))
+        .agg(F.expr("CAST(max(reg) AS INT) AS reg"))
     )
 
 
@@ -219,10 +227,11 @@ def hll_sql_snippets(p: int = HLL_P_DEFAULT) -> dict[str, str]:
 # Count-min sketch
 
 
-def _cms_bucket(item: Column, d: int, width: int) -> Column:
+def _cms_bucket(item_col: str, d: int, width: int) -> Column:
     """Row-d hash bucket: the minhash-family salt convention
     (``sha2("cms{d}:" + item)``)."""
-    return F.pmod(_hash60(F.concat(F.lit(f"cms{d}:"), item)), F.lit(width))
+    salted = f"concat({sql_string(f'cms{d}:')}, {_as_string(item_col)})"
+    return F.expr(f"pmod({_hash60_sql(salted)}, {width})")
 
 
 def cms_sketch(
@@ -240,10 +249,9 @@ def cms_sketch(
     counters (:func:`cms_merge`) — the per-dump term-frequency memory."""
     if depth < 1 or width < 2:
         raise ValueError("need depth >= 1 and width >= 2")
-    item = F.col(item_col).cast("string")
     rows = F.array(*[
         F.struct(F.lit(d).alias("d"),
-                 _cms_bucket(item, d, width).alias("bucket"))
+                 _cms_bucket(item_col, d, width).alias("bucket"))
         for d in range(depth)
     ])
     gcols = [F.col(c) for c in group_cols]
@@ -301,10 +309,9 @@ def cms_lookup(
     missing = [c for c in group_cols if c not in probes.columns]
     if missing:
         raise ValueError(f"probes lack the sketch group columns {missing}")
-    item = F.col(item_col).cast("string")
     rows = F.array(*[
         F.struct(F.lit(d).alias("d"),
-                 _cms_bucket(item, d, width).alias("bucket"))
+                 _cms_bucket(item_col, d, width).alias("bucket"))
         for d in range(depth)
     ])
     probe_cols = probes.columns
@@ -338,7 +345,7 @@ def kmv_sketch(df: DataFrame, item_col: str, *, k: int = 256) -> DataFrame:
     distinct hash set."""
     if k < 16:
         raise ValueError(f"k must be >= 16, got {k}")
-    h = _hash60(F.col(item_col).cast("string"))
+    h = _hash60(item_col)
     return (
         df.filter(F.col(item_col).isNotNull())
         .select(h.alias("h")).distinct()
@@ -439,7 +446,7 @@ def bottomk_sample(
     break on the id, keeping the sample total-ordered."""
     if k < 1:
         raise ValueError(f"k must be positive, got {k}")
-    h = _hash60(F.col(id_col).cast("string"))
+    h = _hash60(id_col)
     return (
         df.filter(F.col(id_col).isNotNull())
         .select(h.alias("h"), id_col, *keep_cols)
@@ -502,13 +509,14 @@ def _check_bloom(m_bits: int, k: int) -> None:
         raise ValueError(f"k must be in [1, 16], got {k}")
 
 
-def _bloom_positions(item: Column, *, m_bits: int, k: int) -> list[Column]:
+def _bloom_positions(item_col: str, *, m_bits: int,
+                     k: int) -> list[Column]:
     """The k bit positions of one item: Kirsch–Mitzenmacher double
     hashing ``pos_i = (h1 + i*h2) mod m`` over the repo's 60-bit
     sha256-family hash — h1 = low 30 bits, h2 = high 30 bits forced
     odd.  Max operand ``h1 + 15*h2 < 2^30 + 15*2^31 < 2^35``: exact
     long arithmetic, no overflow in any engine."""
-    h = _hash60(item)
+    h = _hash60(item_col)
     h1 = F.pmod(h, F.lit(1 << 30))
     h2 = F.shiftright(h, 30) * F.lit(2) + F.lit(1)
     return [F.pmod(h1 + F.lit(i) * h2, F.lit(m_bits)) for i in range(k)]
@@ -555,8 +563,8 @@ def bloom_sketch(
     output is O(m) **regardless of input size**.  NULL items are
     ignored (consistent with the other sketches)."""
     _check_bloom(m_bits, k)
-    item = F.col(item_col).cast("string")
-    pos = F.explode(F.array(*_bloom_positions(item, m_bits=m_bits, k=k)))
+    pos = F.explode(F.array(*_bloom_positions(item_col, m_bits=m_bits,
+                                              k=k)))
     return (
         df.filter(F.col(item_col).isNotNull())
         .select(pos.alias("__pos"))
@@ -598,8 +606,7 @@ def bloom_contains(
     column and the k hit bits AND together row-local).  EXPLAIN
     audit asserts zero Exchange on the probe side."""
     _check_bloom(m_bits, k)
-    item = F.col(item_col).cast("string")
-    positions = _bloom_positions(item, m_bits=m_bits, k=k)
+    positions = _bloom_positions(item_col, m_bits=m_bits, k=k)
     out = df
     hits = []
     for i, pos in enumerate(positions):

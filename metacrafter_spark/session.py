@@ -46,6 +46,12 @@ def get_spark(
         # killing min/max file skipping on timestamps; INT64 micros is
         # the modern interop type and what Iceberg tables expect
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        # generated-code cache: the default 100 entries is smaller than
+        # one warc-ingest call's working set (~160 classes across the
+        # dump-1 and dump-2 plan shapes; scan-file: 69), and LRU
+        # eviction made every repeat call recompile all of it (~127
+        # classes, 1.6-2.1 s of Janino).  1,000 holds both.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
         .config("spark.executor.extraJavaOptions", "-Duser.timezone=UTC")

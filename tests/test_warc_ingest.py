@@ -298,6 +298,40 @@ def test_warc_ingest_runs_the_pipeline_once(traced_ingest):
     assert counts == []
 
 
+def _outside_cache(plan: str) -> list:
+    """Node names of a physical plan description's tree, leaving out
+    each ``InMemoryRelation`` subtree (the plan that filled a cache)."""
+    names, cached_at = [], None
+    for line in plan.split("\n\n", 1)[0].splitlines()[1:]:
+        name = line.lstrip(" :+-*")
+        depth = len(line) - len(name)
+        if cached_at is not None and depth > cached_at:
+            continue
+        cached_at = depth if name.startswith("InMemoryRelation") else None
+        names.append(name)
+    return names
+
+
+def test_warc_ingest_scans_once(traced_ingest):
+    """The output write is the only execution that decodes WARC
+    records: the paragraph-store advance reads the keep-first winners
+    the write cached instead of re-running the scan and the extraction.
+    A command execution (an ``Execute ...`` root) prints its query as a
+    logical plan and runs it as a nested execution, so only the
+    executions that ran a physical plan are read."""
+    execs, _ = traced_ingest
+    trees = [(desc, _outside_cache(plan)) for desc, plan in execs]
+    ran = [(desc, names) for desc, names in trees
+           if names and not names[0].startswith("Execute ")]
+    decodes = {desc for desc, names in ran
+               if any(n.startswith("MapInPandas") for n in names)}
+    assert decodes == {"warc-ingest: write output"}
+    assert any(n.startswith("InMemoryTableScan")
+               for desc, names in ran
+               if desc == "warc-ingest: advance para store"
+               for n in names)
+
+
 def test_warc_ingest_names_jobs_by_phase(traced_ingest):
     """Every SQL execution of the ingest carries its CLI phase, and the
     caller's own job description is back once the CLI returns."""
@@ -307,6 +341,28 @@ def test_warc_ingest_names_jobs_by_phase(traced_ingest):
             "warc-ingest: advance para store", "warc-ingest: hll"} <= descs
     assert all(desc.startswith("warc-ingest: ") for desc in descs), descs
     assert after == "caller phase"
+
+
+def test_warc_ingest_repeat_call_compiles_nothing(spark, warc_corpus,
+                                                  tmp_path, capsys):
+    """A second identical warc-ingest in one session compiles no
+    generated class.  One call's working set is over 100 classes, the
+    size of Spark's default codegen cache, whose LRU eviction made
+    every repeat call compile all of them again."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def run(i):
+        d = tmp_path / f"call{i}"
+        assert main(["warc-ingest", warc_corpus + "/*.cdx", warc_corpus,
+                     str(d / "out"), str(d / "met"), "--buckets", "8",
+                     "--para-dedup-store", str(d / "para"),
+                     "--url-hll-store", str(d / "hll")]) == 0
+        capsys.readouterr()
+
+    run(1)
+    before = codegen.METRIC_COMPILATION_TIME().getCount()
+    run(2)
+    assert codegen.METRIC_COMPILATION_TIME().getCount() - before == 0
 
 
 def test_stream_warc_ingest_incremental_and_replay(spark, tmp_path):
@@ -404,29 +460,53 @@ def test_cli_warc_ingest_stream(spark, tmp_path):
 
 
 def test_warc_ingest_para_dedup_store(spark, warc_corpus, tmp_path, capsys):
-    """CCNet cross-dump flow on the CLI: dump 1 seeds the paragraph key
-    store; dump 2 (the same pages re-crawled) dedups against it, so
-    every content-bearing paragraph drops and only layout remains."""
+    """CCNet cross-dump flow on the CLI: dump 0 (one of the three WARC
+    shards) seeds the paragraph key store; dump 1 (every shard) keeps
+    the new pages' paragraphs and dedups the seen ones; dump 2 (the
+    same pages re-crawled) dedups against it, so every content-bearing
+    paragraph drops and only layout remains.  After each dump the
+    store holds exactly the prior keys plus ``para_keys`` of the
+    dump's extracted text, each once."""
     import os
 
-    store = str(tmp_path / "parastore")
-    rc = main(["warc-ingest", warc_corpus + "/*.cdx", warc_corpus,
-               str(tmp_path / "d1"), str(tmp_path / "m1"),
-               "--buckets", "8", "--plain-parquet",
-               "--para-dedup-store", store])
-    assert rc == 0
-    p1 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert p1["processed"] == 200 and p1["kept_total"] > 0
-    assert os.path.isdir(store)
-    keys_n = spark.read.parquet(store).count()
-    assert keys_n > 0
+    from metacrafter_spark.corpus.html import with_extracted_text
+    from metacrafter_spark.io.warc import scan_warc_cdx
+    from metacrafter_spark.ops.dedup import para_keys
 
-    rc = main(["warc-ingest", warc_corpus + "/*.cdx", warc_corpus,
-               str(tmp_path / "d2"), str(tmp_path / "m2"),
-               "--buckets", "8", "--plain-parquet",
-               "--para-dedup-store", store])
-    assert rc == 0
-    p2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    store = str(tmp_path / "parastore")
+    one, every = (f"{warc_corpus}/{g}.cdx" for g in ("part-00000", "*"))
+
+    def ingest(i, cdx):
+        assert main(["warc-ingest", cdx, warc_corpus,
+                     str(tmp_path / f"d{i}"), str(tmp_path / f"m{i}"),
+                     "--buckets", "8", "--plain-parquet",
+                     "--para-dedup-store", store]) == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    def batch(cdx):
+        # everything a dump contributes, keyed by the library's rule
+        return {r["key"] for r in para_keys(with_extracted_text(
+            scan_warc_cdx(spark, cdx, warc_corpus),
+            "html", "text")).collect()}
+
+    def stored():
+        keys = [r["key"] for r in spark.read.parquet(store).collect()]
+        assert len(keys) == len(set(keys))
+        return set(keys)
+
+    p0 = ingest(0, one)
+    assert 0 < p0["processed"] < 200
+    assert os.path.isdir(store)
+    seen = stored()
+    assert seen and seen == batch(one)
+
+    p1 = ingest(1, every)
+    assert p1["processed"] == 200 and p1["kept_total"] > 0
+    assert p1["para_removed"] > 0
+    assert stored() == seen | batch(every) != seen
+    seen = stored()
+
+    p2 = ingest(2, every)
     assert p2["para_removed"] > 0
     docs2 = spark.read.parquet(str(tmp_path / "d2"))
     # no content-bearing paragraph survives the second crawl of the
@@ -435,8 +515,8 @@ def test_warc_ingest_para_dedup_store(spark, warc_corpus, tmp_path, capsys):
         F.length(F.regexp_replace("text", "[^a-zA-Z0-9]", "")) > 0)
     assert residue.count() == 0
     assert p2["kept_total"] == 0
-    # the store is stable under an already-seen dump (union-distinct)
-    assert spark.read.parquet(store).count() == keys_n
+    # stable under an already-seen dump
+    assert stored() == seen | batch(every) == seen
 
 
 def test_warc_ingest_para_dedup_store_stream_refused(spark, warc_corpus,
