@@ -2640,7 +2640,7 @@ def q_url_canonical(spark, sf_dir):
     url = F.concat(scheme, hostc, F.lit(".com"), port, F.lit("/page/"),
                    (F.col("doc_id") % 40).cast("string"), track, frag)
     return (docs.select(F.col("doc_id"), url.alias("url"))
-            .select("doc_id", canonicalize_url(F.col("url")).alias("canon"))
+            .select("doc_id", canonicalize_url("url").alias("canon"))
             .groupBy("canon")
             .agg(F.count("*").alias("n_variants"),
                  F.min("doc_id").alias("first_id"))

@@ -7,10 +7,13 @@ as a two-phase LONG-FRAME aggregation instead of a row-at-a-time loop:
    128-bit value hash + map-side per-value facts (display length,
    ``guess_datatype`` class via an Arrow kernel, numeric value,
    char-class flags, empty-marker membership);
-2. ``groupBy(column, h1, h2)`` — map-side combine collapses duplicate
-   values, and the shuffle carries FIXED-WIDTH fact rows, never the
-   value text: a near-unique 100-TB text column shuffles ~60 bytes per
-   distinct value instead of the corpus itself;
+2. ``groupBy(column, h1, h2, k)`` — map-side combine collapses
+   duplicate values, and the shuffle carries FIXED-WIDTH fact rows,
+   never the value text: a near-unique 100-TB text column shuffles ~60
+   bytes per distinct value instead of the corpus itself.  Every
+   aggregation buffer is fixed-width too (the set of value types is a
+   ``bit_or`` bitmask), so both phases run as codegen'd hash
+   aggregates;
 3. per-DISTINCT-value enrichment runs only for short bounded-width
    columns (exact Python ``str()`` formatting for double/timestamp
    display), whose ≤40-char keys ride the shuffle as a carried field;
@@ -23,6 +26,8 @@ The long shape also keeps the plan a FIXED handful of expressions no
 matter how many columns the table has — the wide per-column-agg
 alternative (~12 exprs × N columns + an N-way distinct Expand) showed
 superlinear planning/codegen cost (~10 s for a 27-column 3k-row table).
+The plans are built as SQL text; only the pandas UDFs are Column
+objects, each staged in one projection.
 
 Semantic quirks faithfully reproduced:
 
@@ -47,6 +52,10 @@ from typing import Any, Optional
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 from pyspark.sql.functions import pandas_udf
+
+from metacrafter_spark.util import (
+    sql_ident, sql_in, sql_string, with_sql_columns,
+)
 
 DEFAULT_DICT_SHARE = 10
 # Analyzer's empty-marker list (stats.py:33) — used ONLY for the
@@ -137,6 +146,31 @@ def _classify_string_fn(s: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"vt": vt, "nv": nv})
 
 
+#: every value type the stats can see, one bit each: the stats job
+#: carries a column's set of types as a ``bit_or`` bitmask, a
+#: fixed-width aggregation buffer (a ``collect_set`` of strings is not)
+VT_CODES = ("empty", "str", "numstr", "int", "float", "bool", "datetime",
+            "date", "typed")
+_VT_BIT = {vt: 1 << i for i, vt in enumerate(VT_CODES)}
+
+
+def _vt_names(mask: int) -> set[str]:
+    """The vt strings of a bitmask of :data:`VT_CODES` bits."""
+    if mask >> len(VT_CODES):
+        raise ValueError(f"vt bitmask {mask:#x} has a bit outside VT_CODES")
+    return {vt for vt, b in _VT_BIT.items() if mask & b}
+
+
+def _classify_string_bits_fn(s: pd.Series) -> pd.DataFrame:
+    """:func:`_classify_string_fn` with the vt as its VT_CODES bit."""
+    out = _classify_string_fn(s)
+    vb = out["vt"].map(_VT_BIT)
+    if vb.isna().any():
+        raise ValueError(
+            f"vt without a VT_CODES bit: {sorted(set(out['vt'][vb.isna()]))}")
+    return pd.DataFrame({"vb": vb.astype("int32"), "nv": out["nv"]})
+
+
 def _py_str_double_fn(s: pd.Series) -> pd.Series:
     # Python shortest-repr formatting (str(0.1)='0.1', str(1e-07)='1e-07'),
     # which differs from Spark's Java Double.toString for |x| ≥ 1e7 / < 1e-3.
@@ -153,10 +187,14 @@ def _py_str_timestamp_fn(s: pd.Series) -> pd.Series:
 def _udfs():
     """pandas UDFs are created lazily — registration needs a live session."""
     return {
-        "classify_string": pandas_udf(_classify_string_fn, "struct<vt:string, nv:double>"),
+        "classify_string": pandas_udf(_classify_string_bits_fn,
+                                      "struct<vb:int, nv:double>"),
         "py_str_double": pandas_udf(_py_str_double_fn, "string"),
         "py_str_timestamp": pandas_udf(_py_str_timestamp_fn, "string"),
     }
+
+
+_INT_TYPES = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
 
 
 @dataclass(frozen=True)
@@ -165,6 +203,37 @@ class ColInfo:
     safe: str            # sanitized unique id used for helper column names
     dtype: T.DataType
     is_string: bool
+
+    @property
+    def kind(self) -> str:
+        """string, bool, int, double, timestamp, date, decimal or other
+        (arrays/structs/maps/binary)."""
+        dt = self.dtype
+        if isinstance(dt, T.StringType):
+            return "string"
+        if isinstance(dt, T.BooleanType):
+            return "bool"
+        if isinstance(dt, _INT_TYPES):
+            return "int"
+        if isinstance(dt, (T.DoubleType, T.FloatType)):
+            return "double"
+        if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
+            return "timestamp"
+        if isinstance(dt, T.DateType):
+            return "date"
+        if isinstance(dt, T.DecimalType):
+            return "decimal"
+        return "other"
+
+
+#: guess_datatype of a non-null value of each non-string kind; string
+#: values are classified per value by ``_classify_string_fn``
+#: (arrays/structs/maps/binary/decimal → 'typed', stats.py:121-123)
+_VT_OF_KIND = {"bool": "bool", "int": "int", "double": "float",
+               "timestamp": "datetime", "date": "date",
+               "decimal": "typed", "other": "typed"}
+#: kinds of unbounded length: their raw value never rides a shuffle
+_TEXT_KINDS = ("string", "other")
 
 
 def _first_segment_skipped(key: str) -> bool:
@@ -187,50 +256,54 @@ def analyzed_columns(df: DataFrame, columns: Optional[list[str]] = None) -> list
     return out
 
 
+def with_row_seq(df: DataFrame) -> DataFrame:
+    """``df`` with a ``__row_seq`` column (first-seen order), if it has none."""
+    if ROW_SEQ in df.columns:
+        return df
+    return with_sql_columns(df, {ROW_SEQ: "monotonically_increasing_id()"})
+
+
+def _key_sql(ci: ColInfo) -> str:
+    """SQL text of an injective string form of the column's value, NULL
+    for NULL.  Booleans print as Python does (``True``/``False``); a
+    double's key is Spark's form, which :func:`_display_expr` turns into
+    Python's once per distinct value."""
+    c = sql_ident(ci.name)
+    if ci.kind == "string":
+        return c
+    if ci.kind == "bool":
+        return f"CASE WHEN {c} THEN 'True' WHEN NOT {c} THEN 'False' END"
+    if ci.kind == "double":
+        return f"CAST(CAST({c} AS DOUBLE) AS STRING)"
+    return f"CAST({c} AS STRING)"
+
+
+def _named_struct(fields: dict[str, str]) -> str:
+    return "named_struct(" + ", ".join(
+        f"{sql_string(k)}, {v}" for k, v in fields.items()) + ")"
+
+
 def with_normalized_columns(df: DataFrame, cols: list[ColInfo]) -> DataFrame:
-    """Attach __row_seq plus, per column: {safe}__vs (str(v), null iff v is
-    null), {safe}__vt (guess_datatype base), {safe}__nv (numeric value)."""
-    if ROW_SEQ not in df.columns:
-        df = df.withColumn(ROW_SEQ, F.monotonically_increasing_id())
-    # backticks: flattened dot-path names are literal column names
-    exprs: list[Column] = [F.col(f"`{c}`") for c in df.columns]
+    """Attach __row_seq plus, per column, {safe}__vs: str(v) as Python
+    prints it, null iff v is null.  The Python kernels that format
+    doubles and timestamps are staged in one projection; the other
+    columns are SQL text in the next."""
+    df = with_row_seq(df)
+    kernels: dict[str, Column] = {}
+    exprs: dict[str, str] = {}
     for ci in cols:
-        col = F.col(f"`{ci.name}`")
-        dt = ci.dtype
-        if isinstance(dt, T.StringType):
-            cls = _udfs()["classify_string"](col)
-            vs, vt, nv = col, cls["vt"], cls["nv"]
-        elif isinstance(dt, T.BooleanType):
-            vs = F.when(col, F.lit("True")).when(~col, F.lit("False"))
-            vt, nv = F.when(col.isNotNull(), F.lit("bool")), F.lit(None).cast("double")
-        elif isinstance(dt, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
-            vs = col.cast("string")
-            vt = F.when(col.isNotNull(), F.lit("int"))
-            nv = col.cast("double")
-        elif isinstance(dt, (T.DoubleType, T.FloatType)):
-            vs = _udfs()["py_str_double"](col.cast("double"))
-            vt = F.when(col.isNotNull(), F.lit("float"))
-            nv = col.cast("double")
-        elif isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-            vs = _udfs()["py_str_timestamp"](col)
-            vt = F.when(col.isNotNull(), F.lit("datetime"))
-            nv = F.lit(None).cast("double")
-        elif isinstance(dt, T.DateType):
-            vs = col.cast("string")
-            vt = F.when(col.isNotNull(), F.lit("date"))
-            nv = F.lit(None).cast("double")
-        elif isinstance(dt, T.DecimalType):
-            vs = col.cast("string")  # str(Decimal) == its string form
-            vt = F.when(col.isNotNull(), F.lit("typed"))
-            nv = F.lit(None).cast("double")
-        else:  # arrays/structs/maps/binary → 'typed' (stats.py:121-123)
-            vs = col.cast("string")
-            vt = F.when(col.isNotNull(), F.lit("typed"))
-            nv = F.lit(None).cast("double")
-        exprs.append(vs.alias(f"{ci.safe}__vs"))
-        exprs.append(F.coalesce(vt, F.lit("empty")).alias(f"{ci.safe}__vt"))
-        exprs.append(nv.alias(f"{ci.safe}__nv"))
-    return df.select(*exprs)
+        c = sql_ident(ci.name)
+        out = f"{ci.safe}__vs"
+        if ci.kind == "double":
+            kernels[out] = _udfs()["py_str_double"](
+                F.expr(f"CAST({c} AS DOUBLE)"))
+        elif ci.kind == "timestamp":
+            kernels[out] = _udfs()["py_str_timestamp"](F.expr(c))
+        else:  # str(Decimal) is its string form, like the other casts
+            exprs[out] = _key_sql(ci)
+    if kernels:
+        df = df.withColumns(kernels)
+    return with_sql_columns(df, exprs)
 
 
 # Unicode-aware analogues of Python's per-char isdigit/isalpha/isalnum
@@ -240,147 +313,132 @@ _RE_ALPHA = r"[\p{L}]"
 _RE_SPECIAL = r"[^\p{L}\p{N}\s]"
 
 
-def _key_exprs(ci: ColInfo):
-    """Native exprs for one column: (key, vt_typed, nv, rawlen, is_text).
-
-    ``key`` is an injective string form of the value (pre-coalesce);
-    ``is_text`` marks unbounded-length columns (strings + complex casts)
-    whose raw value must NOT ride a shuffle — they group by hash.
-    Bool/int/float/date/timestamp/decimal stringify to ≤ ~40 chars, so
-    their raw keys stay (the Python str() display formatting for
-    double/timestamp then runs post-group, once per distinct value).
-    """
-    col = F.col(f"`{ci.name}`")
-    dt = ci.dtype
-    vt_typed = F.lit(None).cast("string")  # strings classify per row
-    nv = F.lit(None).cast("double")
-    rawlen = F.lit(None).cast("int")
-    is_text = False
-    if isinstance(dt, T.StringType):
-        key = col
-        rawlen = F.length(col)
-        is_text = True
-    elif isinstance(dt, T.BooleanType):
-        key = F.when(col, F.lit("True")).when(~col, F.lit("False"))
-        vt_typed = F.lit("bool")
-    elif isinstance(dt, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
-        key = col.cast("string")
-        vt_typed = F.lit("int")
-        nv = col.cast("double")
-    elif isinstance(dt, (T.DoubleType, T.FloatType)):
-        key = col.cast("double").cast("string")  # injective; py-formatted later
-        vt_typed = F.lit("float")
-        nv = col.cast("double")
-    elif isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        key = col.cast("string")
-        vt_typed = F.lit("datetime")
-    elif isinstance(dt, T.DateType):
-        key = col.cast("string")
-        vt_typed = F.lit("date")
-    elif isinstance(dt, T.DecimalType):
-        key = col.cast("string")
-        vt_typed = F.lit("typed")
-    else:  # arrays/structs/maps/binary → 'typed' (stats.py:121-123)
-        key = col.cast("string")
-        vt_typed = F.lit("typed")
-        is_text = True
-    return col, key, vt_typed, nv, rawlen, is_text
-
-
 def _raw_long_frame(
     df: DataFrame, cols: list[ColInfo], empty_values: list[str]
 ) -> DataFrame:
-    """Explode the RAW frame to one row per (column, value) with a
-    HASH group key and map-side per-value facts.
+    """Explode the RAW frame (with its ``__row_seq``) to one row per
+    (column, value) with a HASH group key and map-side per-value facts.
 
     The long shape keeps the aggregation plan a FIXED handful of
     expressions no matter how many columns the table has — the wide
     per-column agg alternative needs ~12 expressions × N columns plus an
     N-way distinct Expand, whose planning/codegen cost grows superlinearly
-    (observed: ~10s to aggregate a 27-column table of 3k rows).
+    (observed: ~10s to aggregate a 27-column table of 3k rows).  The
+    string columns' ``guess_datatype`` kernel is staged in one
+    projection; the explode is one SQL ``inline(array(named_struct(...)))``.
 
-    Scale contract: the shuffle key is ``(c, h1, h2)`` — a 128-bit
+    Scale contract: the shuffle key is ``(c, h1, h2, k)`` — a 128-bit
     xxhash64 pair of the stringified value — and every per-value fact
-    (display length, guess_datatype class, numeric value, char-class
-    flags, empty-marker membership) is computed MAP-SIDE, so unbounded
-    text never rides a shuffle.  A near-unique 100-TB text column
-    shuffles ~60 bytes per distinct value instead of the corpus itself.
-    ``n_uniq`` counts distinct 128-bit hashes — exact up to collision
-    odds ~n²/2¹²⁹ (≪1e-15 even at 10¹² rows; documented trade).
+    (display length, guess_datatype class as a :data:`VT_CODES` bit,
+    numeric value, char-class flags, empty-marker membership) is
+    computed MAP-SIDE, so unbounded text never rides a shuffle.  A
+    near-unique 100-TB text column shuffles ~60 bytes per distinct value
+    instead of the corpus itself.  ``n_uniq`` counts distinct 128-bit
+    hashes — exact up to collision odds ~n²/2¹²⁹ (≪1e-15 even at 10¹²
+    rows; documented trade).
 
-    Short, bounded-width columns (bool/int/float/date/timestamp/decimal)
-    additionally carry their ≤40-char key string ``k`` so the exact
-    Python ``str()`` display formatting can run post-group, once per
-    distinct value (``k`` is constant within a hash group by
-    construction, aggregated with ``max``).
+    ``k`` is NULL for text columns; short, bounded-width columns
+    (bool/int/float/date/timestamp/decimal) carry their ≤40-char key
+    string there, so the exact Python ``str()`` display formatting can
+    run post-group, once per distinct value.  ``k`` is a function of the
+    hashed value, so grouping by it too leaves the groups unchanged.
     """
+    cls = {ci.name: f"{ci.safe}__cls" for ci in cols if ci.kind == "string"}
+    if cls:
+        # guess_datatype per row (Arrow-vectorized), one projection
+        df = df.withColumns({
+            out: _udfs()["classify_string"](F.expr(sql_ident(name)))
+            for name, out in cls.items()})
     structs = []
     for ci in cols:
-        col, key, vt_typed, nv, rawlen, is_text = _key_exprs(ci)
-        v = F.coalesce(key, F.lit("None"))  # str(None)
-        if isinstance(ci.dtype, T.StringType):
-            # guess_datatype per row (Arrow-vectorized); duplicate
-            # classify-UDF expressions are collapsed by the optimizer
-            cls = _udfs()["classify_string"](col)
-            vt = F.when(col.isNotNull(), cls["vt"])
-            nv = F.when(
-                col.isNotNull() & cls["vt"].isin("int", "float"), cls["nv"]
-            )
-            live = col.isNotNull() & (F.length(col) > 0)
-            dn = F.when(live & col.rlike(_RE_DIGIT), 1).otherwise(0)
-            an = F.when(live & col.rlike(_RE_ALPHA), 1).otherwise(0)
-            sn = F.when(live & col.rlike(_RE_SPECIAL), 1).otherwise(0)
+        c = sql_ident(ci.name)
+        v = f"coalesce({_key_sql(ci)}, 'None')"  # str(None)
+        if ci.kind == "string":
+            vb = f"CASE WHEN {c} IS NOT NULL THEN {cls[ci.name]}.vb END"
+            nv = (f"CASE WHEN {c} IS NOT NULL AND ({cls[ci.name]}.vb & "
+                  f"{_VT_BIT['int'] | _VT_BIT['float']}) != 0 "
+                  f"THEN {cls[ci.name]}.nv END")
+            rawlen = f"length({c})"
+            dn, an, sn = (
+                f"CASE WHEN {c} IS NOT NULL AND length({c}) > 0 AND {c} "
+                f"RLIKE {sql_string(rx)} THEN 1 ELSE 0 END"
+                for rx in (_RE_DIGIT, _RE_ALPHA, _RE_SPECIAL))
         else:
-            vt = F.when(col.isNotNull(), vt_typed)
+            bit = _VT_BIT[_VT_OF_KIND[ci.kind]]
+            vb = f"CASE WHEN {c} IS NOT NULL THEN {bit} END"
+            nv = (f"CAST({c} AS DOUBLE)" if ci.kind in ("int", "double")
+                  else "CAST(NULL AS DOUBLE)")
+            rawlen = "CAST(NULL AS INT)"
             # char-class counts apply to str values only (stats.py:409-423)
-            dn = F.lit(0)
-            an = F.lit(0)
-            sn = F.lit(0)
-        if is_text:
-            k = F.lit(None).cast("string")
-            ln = F.length(v)
-            mk = ~v.isin(*empty_values) if empty_values else F.lit(True)
+            dn = an = sn = "0"
+        if ci.kind in _TEXT_KINDS:
+            k = "CAST(NULL AS STRING)"
+            ln = f"length({v})"
+            mk = f"NOT {sql_in(v, empty_values)}"
         else:
             k = v
-            ln = F.lit(None).cast("int")        # from display form, post-group
-            mk = F.lit(None).cast("boolean")    # from display form, post-group
-        structs.append(
-            F.struct(
-                F.lit(ci.name).alias("c"),
-                F.xxhash64(v).alias("h1"),
-                F.xxhash64(v, F.lit(1)).alias("h2"),
-                k.alias("k"),
-                ln.alias("ln"),
-                vt.alias("vt"),
-                nv.alias("nv"),
-                col.isNull().alias("isnull"),
-                rawlen.alias("rawlen"),
-                dn.cast("int").alias("dn"),
-                an.cast("int").alias("an"),
-                sn.cast("int").alias("sn"),
-                mk.alias("mk"),
-            )
-        )
-    return df.select(
-        F.col(ROW_SEQ), F.explode(F.array(*structs)).alias("kv")
-    ).select(F.col(ROW_SEQ).alias("seq"), F.col("kv.*"))
+            ln = "CAST(NULL AS INT)"        # from display form, post-group
+            mk = "CAST(NULL AS BOOLEAN)"    # from display form, post-group
+        structs.append(_named_struct({
+            "c": sql_string(ci.name), "h1": f"xxhash64({v})",
+            "h2": f"xxhash64({v}, 1)", "k": k, "ln": ln, "vb": vb, "nv": nv,
+            "isnull": f"{c} IS NULL", "rawlen": rawlen, "dn": dn, "an": an,
+            "sn": sn, "mk": mk}))
+    return df.selectExpr(f"{ROW_SEQ} AS seq",
+                         f"inline(array({', '.join(structs)}))")
 
 
 def _display_expr(
-    v: Column, any_null: Column, is_dbl: Column, is_ts: Column
-) -> Column:
-    """Exact Python ``str()`` display formatting for double/timestamp
-    distinct values (str(0.1)='0.1', trailing-zero microseconds kept)."""
-    return (
+    df: DataFrame, v: str, double_cols: list[str], ts_cols: list[str]
+) -> tuple[DataFrame, str]:
+    """Exact Python ``str()`` display formatting of the key ``v`` of
+    double/timestamp distinct values (str(0.1)='0.1', trailing-zero
+    microseconds kept); other values display as they are.  ``df`` has
+    columns ``c`` (the column name) and ``any_null``.
+
+    Returns ``df`` with each needed Python kernel staged as a column,
+    and the SQL text of the display value over them."""
+    kernels: dict[str, Column] = {}
+    whens = []
+    for names, udf, typ, out in (
+            (double_cols, "py_str_double", "DOUBLE", "__py_dbl"),
+            (ts_cols, "py_str_timestamp", "TIMESTAMP", "__py_ts")):
+        if not names:
+            continue
+        gate = sql_in("c", names)
         # the gate must sit INSIDE the UDF argument: Python-UDF extraction
-        # evaluates the argument for every row, so non-timestamp strings
+        # evaluates the argument for every row, so other columns' values
         # must become null before the cast (ANSI + Arrow overflow safety)
-        F.when(is_dbl & (any_null == 0),
-               _udfs()["py_str_double"](F.when(is_dbl, v).try_cast("double")))
-        .when(is_ts & (any_null == 0),
-              _udfs()["py_str_timestamp"](F.when(is_ts, v).try_cast("timestamp")))
-        .otherwise(v)
-    )
+        kernels[out] = _udfs()[udf](
+            F.expr(f"TRY_CAST(CASE WHEN {gate} THEN {v} END AS {typ})"))
+        whens.append(f"WHEN {gate} AND any_null = 0 THEN {out}")
+    if not kernels:
+        return df, v
+    return df.withColumns(kernels), f"CASE {' '.join(whens)} ELSE {v} END"
+
+
+# phase 1, per (column, value hash): every buffer is fixed-width, so the
+# job runs as a codegen'd HashAggregate (a string max or collect_set
+# would force ObjectHashAggregate, which sorts past 128 keys)
+_VALUE_AGGS = (
+    "count(1) AS n", "max(ln) AS t_ln", "bit_or(vb) AS vb",
+    "max(nv) AS nv0", "max(CAST(isnull AS INT)) AS any_null",
+    "min(rawlen) AS raw_minlen", "max(rawlen) AS raw_maxlen",
+    "sum(dn) AS dn", "sum(an) AS an", "sum(sn) AS sn", "max(mk) AS mk",
+)
+# phase 2, per column
+_COLUMN_AGGS = (
+    "sum(n) AS total", "count(1) AS n_uniq", "min(ln) AS minlen",
+    "max(ln) AS maxlen", "sum(n * ln) AS totallen", "min(nv0) AS minval",
+    "max(nv0) AS maxval", "bit_or(vb) AS vtypes",
+    "sum(CASE WHEN mk THEN n ELSE 0 END) AS nonempty_markers",
+    "max(any_null) AS has_null", "min(raw_minlen) AS raw_minlen",
+    "max(raw_maxlen) AS raw_maxlen",
+    # char-composition counts (string columns only): per-row flags
+    # summed map-side; a matching distinct value contributes its
+    # non-null copies (stats.py:409-423 semantics)
+    "sum(dn) AS has_digit", "sum(an) AS has_alphas", "sum(sn) AS has_special",
+)
 
 
 def compute_stats(
@@ -391,7 +449,7 @@ def compute_stats(
     empty_values: Optional[list[str]] = None,
     with_dictvalues: bool = True,
     max_dictvalues: Optional[int] = 10_000,
-) -> dict[str, ColumnStats]:
+) -> tuple[dict[str, ColumnStats], dict[str, dict[str, Any]]]:
     """Two-phase stats over the RAW frame: groupBy(col, hash128(value))
     with map-side per-value facts → groupBy(col) rollup, then a separate
     bounded dict-values pass over only the dict-candidate columns.
@@ -406,84 +464,35 @@ def compute_stats(
     """
     empty_values = empty_values if empty_values is not None else DEFAULT_EMPTY_VALUES
     # Drop the None marker: v is str(raw) (never null here), and a None in
-    # an isin() list would poison the three-valued logic of the negation.
+    # an IN list would poison the three-valued logic of the negation.
     empty_values = [e for e in empty_values if e is not None]
     kept = [ci for ci in cols if not _first_segment_skipped(ci.name)]
     if not cols:
         return {}, {}
-    if ROW_SEQ not in df.columns:
-        df = df.withColumn(ROW_SEQ, F.monotonically_increasing_id())
-    double_cols = [ci.name for ci in cols
-                   if isinstance(ci.dtype, (T.DoubleType, T.FloatType))]
-    ts_cols = [ci.name for ci in cols
-               if isinstance(ci.dtype, (T.TimestampType, T.TimestampNTZType))]
-
-    def _isin(names):
-        return F.col("c").isin(*names) if names else F.lit(False)
+    df = with_row_seq(df)
+    double_cols = [ci.name for ci in cols if ci.kind == "double"]
+    ts_cols = [ci.name for ci in cols if ci.kind == "timestamp"]
 
     long = _raw_long_frame(df, cols, empty_values)
     # phase 1: per distinct (column, 128-bit value hash).  Map-side
     # combine collapses duplicate values before the shuffle; the shuffle
-    # rows are fixed-width facts, never the value text itself.  ``k``
-    # (the raw key of SHORT columns only, ≤ ~40 chars) is constant
-    # within a group, so max() reconstructs it.
-    g0 = long.groupBy("c", "h1", "h2").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max("k").alias("k"),
-        F.max("ln").alias("t_ln"),
-        F.collect_set("vt").alias("vts0"),
-        F.max("nv").alias("nv0"),
-        F.max(F.col("isnull").cast("int")).alias("any_null"),
-        F.min("rawlen").alias("raw_minlen"),
-        F.max("rawlen").alias("raw_maxlen"),
-        F.sum(F.when(F.col("isnull"), 0).otherwise(1)).alias("n_nonnull"),
-        F.min("seq").alias("first_seen"),
-        F.sum("dn").alias("dn"),
-        F.sum("an").alias("an"),
-        F.sum("sn").alias("sn"),
-        F.max("mk").alias("mk"),
-    )
+    # rows are fixed-width facts plus ``k``, the raw key of SHORT
+    # columns only (≤ ~40 chars).
+    g0 = long.groupBy("c", "h1", "h2", "k").agg(*map(F.expr, _VALUE_AGGS))
     # per-DISTINCT-value enrichment for SHORT columns only: Python str()
     # display formatting decides their length/marker facts.  TEXT columns
     # (k IS NULL) carry their facts from the map side.
-    is_dbl = _isin(double_cols)
-    is_ts = _isin(ts_cols)
-    is_short = F.col("k").isNotNull()
-    v_disp = _display_expr(F.col("k"), F.col("any_null"), is_dbl, is_ts)
-    empty_arr = F.array().cast("array<string>")
-    g = g0.select(
+    g0, v_disp = _display_expr(g0, "k", double_cols, ts_cols)
+    g = g0.selectExpr(
         "c", "n", "nv0", "any_null", "raw_minlen", "raw_maxlen",
-        "n_nonnull", "first_seen", "dn", "an", "sn",
-        F.when(is_short, F.length(v_disp)).otherwise(F.col("t_ln")).alias("ln"),
-        F.array_union(
-            F.col("vts0"),
-            F.when(F.col("any_null") == 1,
-                   F.array(F.lit("empty"))).otherwise(empty_arr),
-        ).alias("vts"),
-        F.when(is_short,
-               ~v_disp.isin(*empty_values) if empty_values else F.lit(True))
-        .otherwise(F.col("mk")).alias("mk"),
+        "dn", "an", "sn",
+        f"CASE WHEN k IS NOT NULL THEN length({v_disp}) ELSE t_ln END AS ln",
+        f"coalesce(vb, 0) | CASE WHEN any_null = 1 THEN {_VT_BIT['empty']} "
+        "ELSE 0 END AS vb",
+        f"CASE WHEN k IS NOT NULL THEN NOT {sql_in(v_disp, empty_values)} "
+        "ELSE mk END AS mk",
     )
-    percol = g.groupBy("c").agg(
-        F.sum("n").alias("total"),
-        F.count(F.lit(1)).alias("n_uniq"),
-        F.min("ln").alias("minlen"),
-        F.max("ln").alias("maxlen"),
-        F.sum(F.col("n") * F.col("ln")).alias("totallen"),
-        F.min("nv0").alias("minval"),
-        F.max("nv0").alias("maxval"),
-        F.array_distinct(F.flatten(F.collect_set("vts"))).alias("vtypes"),
-        F.sum(F.when(F.col("mk"), F.col("n")).otherwise(0)).alias("nonempty_markers"),
-        F.max("any_null").alias("has_null"),
-        F.min("raw_minlen").alias("raw_minlen"),
-        F.max("raw_maxlen").alias("raw_maxlen"),
-        # char-composition counts (string columns only): per-row flags
-        # summed map-side; a matching distinct value contributes its
-        # n_nonnull copies (stats.py:409-423 semantics)
-        F.sum("dn").alias("has_digit"),
-        F.sum("an").alias("has_alphas"),
-        F.sum("sn").alias("has_special"),
-    ).collect()
+    percol = g.groupBy("c").agg(*map(F.expr, _COLUMN_AGGS)).collect()
     rows = {r["c"]: r.asDict() for r in percol}
 
     aux: dict[str, dict[str, Any]] = {}
@@ -507,7 +516,7 @@ def compute_stats(
             continue
         total, n_uniq = r["total"], r["n_uniq"]
         share_uniq = n_uniq * 100.0 / total
-        vtypes = set(r["vtypes"] or [])
+        vtypes = _vt_names(r["vtypes"])
         vtypes.discard("empty")
         ftype = next(iter(vtypes)) if len(vtypes) == 1 else "str"
         is_dictkey = share_uniq <= dictshare
@@ -532,7 +541,7 @@ def compute_stats(
         )
     if with_dictvalues and dict_cols:
         for name, values in _dictvalues_pass(
-            df, dict_cols, empty_values, max_dictvalues
+            df, dict_cols, max_dictvalues
         ).items():
             out[name].dictvalues = values
     return out, aux
@@ -541,7 +550,6 @@ def compute_stats(
 def _dictvalues_pass(
     df: DataFrame,
     dict_cols: list[ColInfo],
-    empty_values: list[str],
     max_dictvalues: Optional[int],
 ) -> dict[str, list]:
     """Enumerate distinct display values per dict-candidate column in
@@ -551,44 +559,23 @@ def _dictvalues_pass(
     are ≤ dictshare% distinct by definition, so groupBy(c, value)
     collapses map-side to the small distinct set.  ``max_dictvalues``
     caps what reaches the driver (first-seen order kept)."""
-    from pyspark.sql import Window
-
-    double_names = [ci.name for ci in dict_cols
-                    if isinstance(ci.dtype, (T.DoubleType, T.FloatType))]
-    ts_names = [ci.name for ci in dict_cols
-                if isinstance(ci.dtype, (T.TimestampType, T.TimestampNTZType))]
-    structs = []
-    for ci in dict_cols:
-        col, key, _vt, _nv, _rawlen, _is_text = _key_exprs(ci)
-        structs.append(
-            F.struct(
-                F.lit(ci.name).alias("c"),
-                F.coalesce(key, F.lit("None")).alias("v"),
-                col.isNull().alias("isnull"),
-            )
-        )
-    long = df.select(
-        F.col(ROW_SEQ), F.explode(F.array(*structs)).alias("kv")
-    ).select(F.col(ROW_SEQ).alias("seq"), F.col("kv.*"))
+    structs = ", ".join(_named_struct({
+        "c": sql_string(ci.name), "v": f"coalesce({_key_sql(ci)}, 'None')",
+        "isnull": f"{sql_ident(ci.name)} IS NULL"}) for ci in dict_cols)
+    long = df.selectExpr(f"{ROW_SEQ} AS seq", f"inline(array({structs}))")
     g = long.groupBy("c", "v").agg(
-        F.min("seq").alias("first_seen"),
-        F.max(F.col("isnull").cast("int")).alias("any_null"),
-    )
-
-    def _isin(names):
-        return F.col("c").isin(*names) if names else F.lit(False)
-
-    v_disp = _display_expr(
-        F.col("v"), F.col("any_null"), _isin(double_names), _isin(ts_names)
-    )
-    g = g.select("c", v_disp.alias("v"), "first_seen")
+        F.expr("min(seq) AS first_seen"),
+        F.expr("max(CAST(isnull AS INT)) AS any_null"))
+    g, v_disp = _display_expr(
+        g, "v", [ci.name for ci in dict_cols if ci.kind == "double"],
+        [ci.name for ci in dict_cols if ci.kind == "timestamp"])
+    exprs = ["c", f"{v_disp} AS v", "first_seen"]
     if max_dictvalues is not None:
-        w = Window.partitionBy("c").orderBy("first_seen")
-        g = (
-            g.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= max_dictvalues)
-            .drop("__rn")
-        )
+        exprs.append("row_number() OVER (PARTITION BY c ORDER BY first_seen)"
+                     " AS __rn")
+    g = g.selectExpr(*exprs)
+    if max_dictvalues is not None:
+        g = g.where(f"__rn <= {int(max_dictvalues)}")
     byc: dict[str, list] = {}
     for r in g.collect():
         byc.setdefault(r["c"], []).append((r["first_seen"], r["v"]))

@@ -1313,7 +1313,7 @@ def main(argv=None) -> int:
                     # k broadcast joins — the page stream never shuffles
                     src = bloom_contains(
                         src.withColumn(
-                            "__curl", canonicalize_url(F.col("url"))),
+                            "__curl", canonicalize_url("url")),
                         "__curl",
                         bloom_prior.select("word", "bits"),
                         m_bits=args.bloom_bits, k=args.bloom_hashes,
@@ -1443,7 +1443,7 @@ def main(argv=None) -> int:
                 # against a different store state)
                 batch_regs = hll_registers(
                     io.read(args.output).select(
-                        canonicalize_url(F.col("url")).alias("__cu")),
+                        canonicalize_url("url").alias("__cu")),
                     "__cu", p=12)
                 hll_prior = read_key_store(spark, args.url_hll_store)
                 if hll_prior is not None:
@@ -1472,7 +1472,7 @@ def main(argv=None) -> int:
                 # lineage hazard as the HLL branch above
                 batch_bloom = bloom_sketch(
                     io.read(args.output).select(
-                        canonicalize_url(F.col("url")).alias("__cu")),
+                        canonicalize_url("url").alias("__cu")),
                     "__cu", m_bits=args.bloom_bits, k=args.bloom_hashes)
                 new_bloom = (bloom_merge(
                     bloom_prior.select("word", "bits"), batch_bloom)

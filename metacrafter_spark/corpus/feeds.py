@@ -136,11 +136,11 @@ def new_feed_urls(
     broadcast-anti-join that seen set."""
     from metacrafter_spark.ops.urls import canonicalize_url
 
-    canon = canonicalize_url(F.col("link")).alias("__canon")
+    canon = canonicalize_url("link").alias("__canon")
     keyed = entries.select("*", canon)
     urls = keyed.select("__canon").distinct()
     seen = (corpus
-            .select(canonicalize_url(F.col(url_col)).alias("__canon"))
+            .select(canonicalize_url(url_col).alias("__canon"))
             .join(F.broadcast(urls), "__canon", "left_semi")
             .distinct())
     return (keyed.join(F.broadcast(seen), "__canon", "left_anti")

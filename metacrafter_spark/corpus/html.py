@@ -38,7 +38,9 @@ from typing import Iterator, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from metacrafter_spark.util import appended_schema
+from metacrafter_spark.util import (
+    appended_schema, sql_ident, with_sql_columns,
+)
 
 _DROP = {"script", "style", "noscript", "template"}
 _BLOCK = {
@@ -335,7 +337,7 @@ def with_anchor_texts(
     Columns only, RE2-replayable."""
     from pyspark.sql import functions as F
 
-    from metacrafter_spark.ops.urls import canonicalize_url, resolve_url
+    from metacrafter_spark.ops.urls import canonicalize_url_sql, resolve_url
 
     src = F.col(html_col)
     field = dict(zip(df.schema.fieldNames(), df.schema.fields))[html_col]
@@ -343,16 +345,21 @@ def with_anchor_texts(
         src = F.decode(src, encoding)
     hrefs = F.regexp_extract_all(src, F.lit(_HREF_TEXT_RE), 1)
     texts = F.regexp_extract_all(src, F.lit(_HREF_TEXT_RE), 2)
-    link = lambda h: resolve_url(F.col(url_col), h, dot_depth=dot_depth)
     pairs = F.zip_with(
         hrefs, texts,
         lambda h, t: F.struct(
-            (canonicalize_url(link(h)) if canonical else link(h))
+            resolve_url(F.col(url_col), h, dot_depth=dot_depth)
             .alias("link"),
             F.trim(t).alias("text")))
-    return df.withColumn(
+    out = df.withColumn(
         out_col,
         F.filter(pairs, lambda p: p["link"].rlike(r"(?i)^https?://")))
+    if not canonical:
+        return out
+    # canonicalizing keeps an http(s) scheme, so it commutes with the filter
+    return with_sql_columns(out, {out_col: (
+        f"transform({sql_ident(out_col)}, __p -> named_struct('link', "
+        f"{canonicalize_url_sql('__p.link')}, 'text', __p.text))")})
 
 
 # page metadata: <title>, <meta name=description>, OpenGraph
@@ -458,7 +465,7 @@ def with_outlinks(
     shuffle; the html column never leaves the scan stage."""
     from pyspark.sql import functions as F
 
-    from metacrafter_spark.ops.urls import canonicalize_url, resolve_url
+    from metacrafter_spark.ops.urls import canonicalize_url_sql, resolve_url
 
     src = F.col(html_col)
     field = dict(zip(df.schema.fieldNames(), df.schema.fields))[html_col]
@@ -468,10 +475,12 @@ def with_outlinks(
     resolved = F.transform(
         hrefs, lambda h: resolve_url(F.col(url_col), h,
                                      dot_depth=dot_depth))
-    links = F.filter(resolved, lambda u: u.rlike(r"(?i)^https?://"))
+    out = df.withColumn(
+        out_col, F.filter(resolved, lambda u: u.rlike(r"(?i)^https?://")))
+    links = sql_ident(out_col)
     if canonical:
-        links = F.transform(links, canonicalize_url)
-    return df.withColumn(out_col, F.array_distinct(links))
+        links = f"transform({links}, __u -> {canonicalize_url_sql('__u')})"
+    return with_sql_columns(out, {out_col: f"array_distinct({links})"})
 
 
 def with_robots_meta(

@@ -104,12 +104,12 @@ def stale_urls(
     from metacrafter_spark.ops.urls import canonicalize_url
 
     small = (entries
-             .select(canonicalize_url(F.col("loc")).alias("__canon"),
+             .select(canonicalize_url("loc").alias("__canon"),
                      F.col("lastmod_date").alias(lastmod_col))
              .groupBy("__canon")
              .agg(F.max(lastmod_col).alias(lastmod_col)))
     out = (corpus
-           .withColumn("__canon", canonicalize_url(F.col(url_col)))
+           .withColumn("__canon", canonicalize_url(url_col))
            .join(F.broadcast(small), "__canon", "left")
            .drop("__canon"))
     return out.withColumn(

@@ -10,8 +10,10 @@ Reproduces ``metacrafter/classify/processor.py:655-960`` as:
    job's plan only contains predicates that can possibly win;
 3. **one Spark aggregation over the sampled slice** computing, per
    column, the empty count and, per surviving pair, the success count:
-   text rules as native ``lower(col).isin(...)`` (whole-stage codegen),
-   ppr/func rules as Arrow-vectorized pandas-UDF regex flags;
+   text rules as native ``lower(v) IN (...)`` (whole-stage codegen),
+   ppr/func rules as flags from one Arrow-vectorized pandas UDF.  The
+   plan is SQL text (the explode, the flag projection, the gated sums);
+   only the UDF is a Column object, staged in its own projection;
 4. **driver-side confidence math**: ``success*100/(total-empty)``,
    strict ``> confidence`` threshold (processor.py:898-906), rule-seq
    ordering, stop_on_match truncation.
@@ -28,12 +30,13 @@ from functools import lru_cache
 from typing import Any, Optional
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
 from metacrafter_spark.analyzer import ROW_SEQ, ColInfo, ColumnStats
 from metacrafter_spark.rules.model import CompiledRule, CompiledRulePack
 from metacrafter_spark.rules.validators_compat import FUNC_REGISTRY
+from metacrafter_spark.util import sql_ident, sql_in, sql_literal, sql_string
 
 
 @dataclass
@@ -166,6 +169,23 @@ def _prune_data_rules(
     return out
 
 
+# the per-column counts every match job takes: values and empty values
+_TOTAL_SQL = "count(1) AS __total"
+_EMPTY_SQL = "sum(CASE WHEN v IS NULL OR length(v) = 0 THEN 1 ELSE 0 END) AS __empty"
+
+
+def _long_slice(ndf: DataFrame, cols: dict[str, ColInfo],
+                limit: int) -> DataFrame:
+    """The first ``limit`` rows of the normalized frame, exploded to one
+    row ``(seq, c, v)`` per (row, column): ``v`` is the column's
+    ``{safe}__vs``."""
+    structs = ", ".join(
+        f"named_struct('c', {sql_string(name)}, 'v', {ci.safe}__vs)"
+        for name, ci in cols.items())
+    return ndf.orderBy(ROW_SEQ).limit(limit).selectExpr(
+        f"{ROW_SEQ} AS seq", f"inline(array({structs}))")
+
+
 def match_columns(
     ndf: DataFrame,
     cols: list[ColInfo],
@@ -222,16 +242,7 @@ def match_columns(
     pairs = [(n, r) for n, rules in plan.items() for r in rules]
     agg_row: dict[str, Any] = {}
     if plan:
-        sdf = ndf.orderBy(ROW_SEQ).limit(limit)
-        v = F.col("v")
-        structs = [
-            F.struct(F.lit(name).alias("c"),
-                     F.col(f"{by_name[name].safe}__vs").alias("v"))
-            for name in plan
-        ]
-        long = sdf.select(F.explode(F.array(*structs)).alias("kv")).select(
-            F.col("kv.c").alias("c"), F.col("kv.v").alias("v")
-        )
+        long = _long_slice(ndf, {name: by_name[name] for name in plan}, limit)
         distinct_rules: dict[str, CompiledRule] = {}
         for _, rule in pairs:
             distinct_rules.setdefault(rule.id, rule)
@@ -239,47 +250,37 @@ def match_columns(
         # ONE Arrow-batched pandas UDF returning a flag array — a
         # single serialization boundary instead of one UDF column per
         # rule (the builtin pack has ~40 of them); text rules stay
-        # pure-JVM isin predicates.  Flags are unchanged bit-for-bit,
-        # so parity/golden results are identical by construction.
+        # pure-JVM IN predicates.
         py_rules = [r for r in distinct_rules.values()
                     if r.match in ("ppr", "func")]
         py_idx = {r.id: i + 1 for i, r in enumerate(py_rules)}
         if py_rules:
-            fused = _multi_flag_udf(tuple(
+            long = long.withColumns({"__pyflags": _multi_flag_udf(tuple(
                 (r.match, r.pattern if r.match == "ppr"
-                 else r.func_name) for r in py_rules))(v)
-            long = long.select("c", "v", fused.alias("__pyflags"))
-        flag_exprs = []
+                 else r.func_name) for r in py_rules))(F.expr("v"))})
+        flags = {}
         for rid, rule in distinct_rules.items():
             if rule.match == "text":
-                pred = F.lower(v).isin(*sorted(rule.keywords))
+                flags[rid] = sql_in("lower(v)", sorted(rule.keywords))
             else:
-                pred = F.element_at(F.col("__pyflags"), py_idx[rid])
-            flag_exprs.append(pred.alias(f"flag_{rid}"))
-        long = long.select("c", "v", *flag_exprs)
+                flags[rid] = f"element_at(__pyflags, {py_idx[rid]})"
+        long = long.selectExpr("c", "v", *(
+            f"{pred} AS {sql_ident('flag_' + rid)}"
+            for rid, pred in flags.items()))
 
         # groupBy(column) with ONE gated sum per distinct rule — the agg
         # plan stays O(#rules) expressions; (column, rule) pair results
         # are read out driver-side from the per-column rows.
-        ln = F.length(v)
-        live = v.isNotNull() & (ln > 0)
-        aggs: list[Column] = [
-            F.count(F.lit(1)).alias("__total"),
-            F.sum(F.when(v.isNull() | (ln == 0), 1).otherwise(0)).alias("__empty"),
-        ]
-        for rid, rule in distinct_rules.items():
-            aggs.append(
-                F.sum(
-                    F.when(
-                        live
-                        & ln.between(rule.minlen, rule.maxlen)
-                        & F.col(f"flag_{rid}"),
-                        1,
-                    ).otherwise(0)
-                ).alias(f"succ_{rid}")
-            )
+        aggs = [_TOTAL_SQL, _EMPTY_SQL] + [
+            f"sum(CASE WHEN v IS NOT NULL AND length(v) > 0 AND length(v) "
+            f"BETWEEN {sql_literal(rule.minlen)} AND "
+            f"{sql_literal(rule.maxlen)} AND {sql_ident('flag_' + rid)} "
+            f"THEN 1 ELSE 0 END) AS "
+            f"{sql_ident('succ_' + rid)}"
+            for rid, rule in distinct_rules.items()]
         agg_row = {
-            r["c"]: r.asDict() for r in long.groupBy("c").agg(*aggs).collect()
+            r["c"]: r.asDict()
+            for r in long.groupBy("c").agg(*map(F.expr, aggs)).collect()
         }
 
     # -- confidence math + assembly (processor.py:858-916) ----------------
@@ -349,27 +350,13 @@ def _date_fallback(
             lambda v: -1 if v is None else first_match_key_index(v)
         ).astype("int32")
 
-    sdf = ndf.orderBy(ROW_SEQ).limit(limit)
-    structs = [
-        F.struct(F.lit(m.field).alias("c"),
-                 F.col(f"{by_name[m.field].safe}__vs").alias("v"))
-        for m in candidates
-    ]
-    long = sdf.select(
-        F.col(ROW_SEQ).alias("seq"), F.explode(F.array(*structs)).alias("kv")
-    ).select("seq", F.col("kv.c").alias("c"), F.col("kv.v").alias("v"))
-    long = long.withColumn("idx", date_idx(F.col("v")))
-    v = F.col("v")
-    rows = long.groupBy("c").agg(
-        F.count(F.lit(1)).alias("__total"),
-        F.sum(
-            F.when(v.isNull() | (F.length(v) == 0), 1).otherwise(0)
-        ).alias("__empty"),
-        F.sum(F.when(F.col("idx") >= 0, 1).otherwise(0)).alias("__succ"),
-        F.max_by(
-            F.col("idx"), F.when(F.col("idx") >= 0, F.col("seq"))
-        ).alias("__last"),
-    ).collect()
+    long = _long_slice(ndf, {m.field: by_name[m.field] for m in candidates},
+                       limit)
+    long = long.withColumns({"idx": date_idx(F.expr("v"))})
+    rows = long.groupBy("c").agg(*map(F.expr, (
+        _TOTAL_SQL, _EMPTY_SQL,
+        "sum(CASE WHEN idx >= 0 THEN 1 ELSE 0 END) AS __succ",
+        "max_by(idx, CASE WHEN idx >= 0 THEN seq END) AS __last"))).collect()
     row_by_c = {r["c"]: r.asDict() for r in rows}
     for m in candidates:
         r = row_by_c.get(m.field, {})

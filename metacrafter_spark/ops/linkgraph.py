@@ -63,9 +63,7 @@ def page_link_edges(
     are dropped by default: they only recycle rank mass."""
     from metacrafter_spark.ops.urls import canonicalize_url
 
-    src = F.col(url_col)
-    if canonical:
-        src = canonicalize_url(src)
+    src = canonicalize_url(url_col) if canonical else F.col(url_col)
     e = (df.select(src.alias("src"),
                    F.explode(outlinks_col).alias("dst"))
          .distinct())

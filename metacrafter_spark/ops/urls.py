@@ -20,8 +20,9 @@ if exactness matters; the operator shape is identical.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, functions as F
+
+from metacrafter_spark.util import sql_ident, sql_string
 
 # scheme://[userinfo@]host[:port]/... — host stops at : / ? #
 _HOST_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://(?:[^/@?#]*@)?([^/:?#]+)"
@@ -69,46 +70,48 @@ def registered_domain(host: Column) -> Column:
 _TRACKING_PARAM_RE = r"^(utm_[a-z]+|gclid|fbclid|msclkid|mc_cid|mc_eid)="
 
 
-def canonicalize_url(url: Column) -> Column:
-    """RFC-3986-style URL normalization for corpus dedup-by-url:
-    lower-case scheme and host, strip default ports (http:80 /
-    https:443), drop the fragment, sort query parameters and remove
-    pure tracking params (utm_* / gclid / fbclid / …), normalize an
-    empty path to ``/``.  Two spellings of the same page canonicalize
-    to one string, so exact URL dedup stops double-counting.
+def canonicalize_url_sql(url: str) -> str:
+    """RFC-3986-style URL normalization for corpus dedup-by-url, as
+    Spark SQL text over ``url`` (a quoted column reference, a lambda
+    variable or a field of one): lower-case scheme and host, strip
+    default ports (http:80 / https:443), drop the fragment, sort query
+    parameters and remove pure tracking params (utm_* / gclid / fbclid
+    / …), normalize an empty path to ``/``.  Two spellings of the same
+    page canonicalize to one string, so exact URL dedup stops
+    double-counting.
 
     Pure native expressions (regexp + array ops, RE2-compatible
     patterns, binary-collation sort) — zero Python, replayable in SQL,
     map-side only.  Rows without a ``scheme://`` prefix pass through
     unchanged (relative references have no canonical absolute form)."""
-    base = F.regexp_replace(url, r"#.*$", "")  # fragment off first
-    scheme = F.lower(
-        F.regexp_extract(base, r"^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
-    auth = F.regexp_extract(base, r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)",
-                            1)
-    userinfo = F.regexp_extract(auth, r"^([^@]*@)", 1)
-    hostport = F.regexp_replace(auth, r"^[^@]*@", "")
-    host = F.lower(F.regexp_extract(hostport, r"^([^:]*)", 1))
-    port = F.regexp_extract(hostport, r":(\d+)$", 1)
-    keep_port = (
-        (port != "")
-        & ~((scheme == F.lit("http")) & (port == F.lit("80")))
-        & ~((scheme == F.lit("https")) & (port == F.lit("443"))))
-    path = F.regexp_extract(
-        base, r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)", 1)
-    path = F.when(path == "", F.lit("/")).otherwise(path)
-    query = F.regexp_extract(base, r"\?([^#]*)", 1)
-    params = F.array_sort(F.filter(
-        F.split(query, "&"),
-        lambda p: (p != "") & ~p.rlike(_TRACKING_PARAM_RE)))
-    qstr = F.concat_ws("&", params)
-    rebuilt = F.concat(
-        scheme, F.lit("://"), userinfo, host,
-        F.when(keep_port, F.concat(F.lit(":"), port)).otherwise(F.lit("")),
-        path,
-        F.when(qstr != "", F.concat(F.lit("?"), qstr)).otherwise(F.lit("")),
-    )
-    return F.when(scheme == "", url).otherwise(rebuilt)
+    def extract(s: str, rx: str) -> str:
+        return f"regexp_extract({s}, {sql_string(rx)}, 1)"
+
+    base = f"regexp_replace({url}, '#.*$', '')"  # fragment off first
+    scheme = f"lower({extract(base, r'^([A-Za-z][A-Za-z0-9+.-]*)://')})"
+    auth = extract(base, r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)")
+    userinfo = extract(auth, r"^([^@]*@)")
+    hostport = f"regexp_replace({auth}, '^[^@]*@', '')"
+    host = f"lower({extract(hostport, r'^([^:]*)')})"
+    port = extract(hostport, r":(\d+)$")
+    keep_port = (f"{port} != '' AND NOT ({scheme} = 'http' AND {port} = '80')"
+                 f" AND NOT ({scheme} = 'https' AND {port} = '443')")
+    path = extract(base, r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)")
+    query = extract(base, r"\?([^#]*)")
+    qstr = (f"concat_ws('&', array_sort(filter(split({query}, '&'), "
+            f"__q -> __q != '' AND NOT __q RLIKE "
+            f"{sql_string(_TRACKING_PARAM_RE)})))")
+    rebuilt = (
+        f"concat({scheme}, '://', {userinfo}, {host}, "
+        f"CASE WHEN {keep_port} THEN concat(':', {port}) ELSE '' END, "
+        f"CASE WHEN {path} = '' THEN '/' ELSE {path} END, "
+        f"CASE WHEN {qstr} != '' THEN concat('?', {qstr}) ELSE '' END)")
+    return f"CASE WHEN {scheme} = '' THEN {url} ELSE {rebuilt} END"
+
+
+def canonicalize_url(url_col: str) -> Column:
+    """:func:`canonicalize_url_sql` of the column named ``url_col``."""
+    return F.expr(canonicalize_url_sql(sql_ident(url_col)))
 
 
 def remove_dot_segments(path: Column, *, depth: int = 4) -> Column:
@@ -221,7 +224,7 @@ def dedup_url_revisits(
     (downstream joins want it); drop with ``keep_canon=False``."""
     from pyspark.sql import Window
 
-    out = df.withColumn(canon_col, canonicalize_url(F.col(url_col)))
+    out = df.withColumn(canon_col, canonicalize_url(url_col))
     w = (Window.partitionBy(canon_col)
          .orderBy(F.col(ts_col).desc(), F.col(url_col).desc()))
     out = (out.withColumn("__rn", F.row_number().over(w))

@@ -3,8 +3,8 @@
 Mirrors the reference entry point ``CrafterCmd.scan_data``
 (``metacrafter/core.py:1157-1360``) over a Spark DataFrame:
 
-    stats job (one wide agg)  →  driver planning  →  match job (one agg)
-    →  report assembly
+    stats job (two hash aggregates over a long frame)  →  driver
+    planning  →  match job (one agg)  →  report assembly
 
 Returns the same report shape the reference returns — ``results`` rows
 ``[key, ftype, tags, matches, datatype_url]``, per-field ``data``
@@ -20,10 +20,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from metacrafter_spark.analyzer import (
     DEFAULT_DICT_SHARE,
+    ROW_SEQ,
     STATS_HEADERS,
     analyzed_columns,
     compute_stats,
     with_normalized_columns,
+    with_row_seq,
 )
 from metacrafter_spark.matcher import ColumnMatches, RuleHit, match_columns
 from metacrafter_spark.rules.model import (
@@ -111,10 +113,6 @@ def scan_dataframe(
         frame_groups = [(df, cols)]
         order = [ci.name for ci in cols]
 
-    from pyspark.sql import functions as F
-
-    from metacrafter_spark.analyzer import ROW_SEQ
-
     dictshare = dict_share if dict_share is not None else DEFAULT_DICT_SHARE
     llm_active = llm_classifier is not None and llm_mode in ("llm", "hybrid")
     # (frame, cols) per group, kept for the LAZY sample collect below:
@@ -126,8 +124,7 @@ def scan_dataframe(
     stats_dict: dict = {}
     all_matches: list[ColumnMatches] = []
     for frame, cols in frame_groups:
-        if ROW_SEQ not in frame.columns:
-            frame = frame.withColumn(ROW_SEQ, F.monotonically_increasing_id())
+        frame = with_row_seq(frame)
         # stats run on the RAW frame (classification happens per distinct
         # value inside compute_stats); per-row normalization is only ever
         # applied to the bounded match slice below
@@ -226,8 +223,6 @@ def _collect_field_samples(frame, cols, *, rows: int = 100,
     select here must backtick-quote — bare ``user.email`` would resolve
     as struct access on a column that no longer exists."""
     from pyspark.sql import functions as F
-
-    from metacrafter_spark.analyzer import ROW_SEQ
 
     names = [ci.name for ci in cols]
     out: dict[str, list[str]] = {n: [] for n in names}

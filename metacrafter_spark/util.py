@@ -56,6 +56,14 @@ def sql_literal(v) -> str:
     raise TypeError(f"no SQL literal for {type(v).__name__}: {v!r}")
 
 
+def sql_in(expr: str, values) -> str:
+    """``expr IN (...)`` over string values; ``false`` for none (SQL
+    has no empty IN list, and ``Column.isin()`` of none is false)."""
+    if not values:
+        return "false"
+    return f"{expr} IN ({', '.join(map(sql_string, values))})"
+
+
 def with_sql_columns(df: DataFrame, cols: dict[str, str]) -> DataFrame:
     """``df.withColumns`` for SQL-text expressions, as one projection.
 

@@ -56,10 +56,11 @@ def main() -> None:
         ["PushedFilters: [IsNotNull(lang), EqualTo(lang,en)]", "ReadSchema"],
     ))
 
-    # 2. stats long-frame phase 1: the shuffle key is (c, h1, h2) — the
-    # 128-bit value hash — and the exchange rows are fixed-width partial
-    # aggregates; the raw TEXT column never rides the shuffle (it is
-    # consumed map-side by the per-value fact expressions)
+    # 2. stats long-frame phase 1: the shuffle key is (c, h1, h2, k) —
+    # the 128-bit value hash, and k is NULL for text columns — and the
+    # exchange rows are fixed-width partial aggregates; the raw TEXT
+    # column never rides the shuffle (it is consumed map-side by the
+    # per-value fact expressions)
     from metacrafter_spark.analyzer import ROW_SEQ, _raw_long_frame
 
     stats_src = docs.select("lang", "source", "text").withColumn(
@@ -67,8 +68,8 @@ def main() -> None:
     )
     scols = analyzed_columns(stats_src)
     long = _raw_long_frame(stats_src, scols, ["", "None"])
-    g0 = long.groupBy("c", "h1", "h2").agg(
-        F.count(F.lit(1)).alias("n"), F.max("k").alias("k"),
+    g0 = long.groupBy("c", "h1", "h2", "k").agg(
+        F.count(F.lit(1)).alias("n"),
         F.max("ln").alias("ln"), F.sum("dn").alias("dn"),
     )
     stats_plan = plan_of(g0)
@@ -349,7 +350,7 @@ def main() -> None:
 
     udf_ = spark.range(100).selectExpr(
         "concat('HTTPS://Ex.COM:443/p/', id, '?b=2&a=1#f') as url")
-    uplan = plan_of(udf_.select(canonicalize_url(F.col("url"))
+    uplan = plan_of(udf_.select(canonicalize_url("url")
                                 .alias("canon")))
     sections.append((
         "URL canonicalization (map-side only — no Exchange)",

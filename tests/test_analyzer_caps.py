@@ -43,3 +43,30 @@ def test_stats_invariant_across_partitioning(spark):
                          analyzed_columns(_frame(spark, parts=13)))
     for k in a:
         assert a[k].as_dict() == b[k].as_dict(), k
+
+
+def test_every_value_type_has_a_bitmask_code():
+    """The stats job carries each column's set of value types as a
+    bitmask over ``VT_CODES``: every vt the string classifier or a typed
+    column can give has a bit, and a mask with a bit past the table
+    raises instead of deciding an ftype."""
+    import pandas as pd
+    import pytest
+
+    from metacrafter_spark.analyzer import (
+        _VT_OF_KIND, VT_CODES, _classify_string_bits_fn, _classify_string_fn,
+        _vt_names,
+    )
+
+    values = pd.Series([None, "", "  ", "007", "12", "1.5", "1_000", "nan",
+                        "-NaN", "inf", "1e3", "abc", "T"],
+                       dtype="object")
+    string_vts = set(_classify_string_fn(values)["vt"])
+    assert string_vts == {"empty", "numstr", "int", "float", "str"}
+    assert string_vts | set(_VT_OF_KIND.values()) <= set(VT_CODES)
+    bits = _classify_string_bits_fn(values)["vb"]
+    assert [_vt_names(b) for b in bits] == [
+        {vt} for vt in _classify_string_fn(values)["vt"]]
+    assert _vt_names(0) == set()
+    with pytest.raises(ValueError, match="outside VT_CODES"):
+        _vt_names(1 << len(VT_CODES))

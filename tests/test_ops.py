@@ -666,14 +666,14 @@ def test_canonicalize_url(spark):
     df = spark.createDataFrame(
         [(i, u) for i, (u, _) in enumerate(cases)], "i long, url string")
     got = {r["i"]: r["c"] for r in df.select(
-        "i", canonicalize_url(F.col("url")).alias("c")).collect()}
+        "i", canonicalize_url("url").alias("c")).collect()}
     for i, (_, want) in enumerate(cases):
         assert got[i] == want, (cases[i][0], got[i], want)
     # idempotent: canonicalizing a canonical URL is a no-op
     df2 = spark.createDataFrame(
         [(i, c) for i, (_, c) in enumerate(cases)], "i long, url string")
     got2 = {r["i"]: r["c"] for r in df2.select(
-        "i", canonicalize_url(F.col("url")).alias("c")).collect()}
+        "i", canonicalize_url("url").alias("c")).collect()}
     assert got2 == {i: c for i, (_, c) in enumerate(cases)}
 
 

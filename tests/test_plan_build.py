@@ -4,17 +4,21 @@
 Every Column-API call crosses py4j to the driver JVM at least once (an
 ``F.col`` is 13 round trips, an ``F.filter`` with a Python lambda ~50),
 while a projection of SQL text costs about one per expression.  The
-warc-ingest stages are built as SQL text, one projection per
-dependency level; these ceilings fail if a stage slides back to
-per-column Column-API trees.  Each counts ``send_command`` calls on
-py4j's client-server connection while the lazy frame is BUILT; no
-Spark job runs inside a counted block, except in the whole-call
-``warc-ingest`` ceiling, which counts everything one call sends.
+warc-ingest stages and scan-file's analyzer and matcher are built as
+SQL text, one projection per dependency level; these ceilings fail if
+a stage slides back to per-column Column-API trees.  Each counts
+``send_command`` calls on py4j's client-server connection while the
+lazy frame is BUILT; no Spark job runs inside a counted block, except
+in the whole-call ``warc-ingest`` and ``scan-file`` ceilings, which
+count everything one call sends.
 """
 import contextlib
 import gc
 import datetime as dt
+import gzip
 import shutil
+import sys
+from pathlib import Path
 
 import pytest
 from py4j.clientserver import ClientServerConnection
@@ -27,6 +31,9 @@ from metacrafter_spark.io.iceberg import (
 )
 from metacrafter_spark.io.warc import write_warc_shards
 
+sys.path.insert(0, str(Path(__file__).resolve().parent))
+from fixtures_gen import pii_profiles  # noqa: E402
+
 #: measured 430-610 per build; the Column-API build made ~6,800
 CLASSIFY_CEILING = 1_000
 #: measured ~30; per-column withColumn made ~230-470
@@ -34,9 +41,13 @@ FLATTEN_CEILING = 100
 #: measured ~90 for 4 partition groups; per-column select made ~3,900
 READ_CEILING = 400
 #: a whole warc-ingest call against existing paragraph/URL stores,
-#: Spark jobs included: measured ~2,440; ~3,150 with Column-API trees
-#: in the CDX parse, the HLL registers and the resume observations
-WARC_INGEST_CEILING = 2_900
+#: Spark jobs included: measured ~1,950; ~2,460 with the Column-API
+#: canonicalize_url, ~3,150 with Column-API trees in the CDX parse, the
+#: HLL registers and the resume observations
+WARC_INGEST_CEILING = 2_350
+#: a whole scan-file call on a 27-column gzip CSV, Spark jobs included:
+#: measured 1,130-1,200; the Column-API analyzer and matcher made ~37,700
+SCAN_FILE_CEILING = 1_450
 
 
 @contextlib.contextmanager
@@ -117,3 +128,64 @@ def test_warc_ingest_round_trips(spark, tmp_path):
     with round_trips() as n:
         ingest("second", tmp_path / "copy")
     assert n[0] <= WARC_INGEST_CEILING
+
+
+@pytest.fixture(scope="module")
+def pii_csv(tmp_path_factory):
+    """``pii_profiles`` (27 columns) as a gzip CSV, as scan-file reads
+    a wide PII table."""
+    import pandas as pd
+
+    path = tmp_path_factory.mktemp("pii") / "pii_profiles.csv.gz"
+    with gzip.open(path, "wt", encoding="utf-8", newline="") as f:
+        pd.DataFrame(pii_profiles(400)).to_csv(f, index=False)
+    return str(path)
+
+
+@pytest.fixture(scope="module")
+def scan_file_calls(spark, pii_csv, tmp_path_factory):
+    """Two identical scan-file calls: the py4j round trips, generated
+    classes and SQL executions (description, physical plan) of the
+    second."""
+    d = tmp_path_factory.mktemp("scan_file")
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    def scan(i):
+        assert main(["scan-file", pii_csv,
+                     "-o", str(d / f"report{i}.json")]) == 0
+
+    scan(1)
+    last = max((e.executionId() for e in executions()), default=-1)
+    compiled = codegen.METRIC_COMPILATION_TIME().getCount()
+    with round_trips() as n:
+        scan(2)
+    compiled = codegen.METRIC_COMPILATION_TIME().getCount() - compiled
+    execs = [(e.description(), e.physicalPlanDescription() or "")
+             for e in executions() if e.executionId() > last]
+    return n[0], compiled, execs
+
+
+def test_scan_file_round_trips(scan_file_calls):
+    assert scan_file_calls[0] <= SCAN_FILE_CEILING
+
+
+def test_scan_file_repeat_call_compiles_nothing(scan_file_calls):
+    assert scan_file_calls[1] == 0
+
+
+def test_scan_file_stats_hash_aggregate_only(scan_file_calls):
+    """Every aggregation buffer of the column stats is fixed-width, so
+    they run as HashAggregate: a string ``max`` or a ``collect_set``
+    would force ObjectHashAggregate, which falls back to sorting past
+    128 keys."""
+    plans = [plan for desc, plan in scan_file_calls[2]
+             if desc == "scan-file: scan" and "HashAggregate" in plan]
+    assert plans
+    for plan in plans:
+        assert "ObjectHashAggregate" not in plan
+        assert "SortAggregate" not in plan

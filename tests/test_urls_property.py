@@ -36,7 +36,7 @@ _url = st.builds(
 def _canon(spark, urls: list[str]) -> list[str]:
     df = spark.createDataFrame([(i, u) for i, u in enumerate(urls)],
                                "i long, url string")
-    rows = df.select("i", canonicalize_url(F.col("url")).alias("c")) \
+    rows = df.select("i", canonicalize_url("url").alias("c")) \
         .collect()
     return [r["c"] for r in sorted(rows, key=lambda r: r["i"])]
 
