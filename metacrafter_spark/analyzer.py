@@ -3,10 +3,12 @@
 Reproduces ``metacrafter/classify/stats.py:211-497`` (``Analyzer.analyze``)
 as a two-phase LONG-FRAME aggregation instead of a row-at-a-time loop:
 
-1. explode the raw frame to one row per (column, value) carrying a
-   128-bit value hash + map-side per-value facts (display length,
-   ``guess_datatype`` class via an Arrow kernel, numeric value,
-   char-class flags, empty-marker membership);
+1. explode the raw frame to one row per (column, value), each column
+   contributing only its name, kind code, key text and typed value;
+   one projection over the long rows then computes a 128-bit value
+   hash + map-side per-value facts (display length, ``guess_datatype``
+   class via one Arrow kernel call over every string value, numeric
+   value, char-class flags, empty-marker membership);
 2. ``groupBy(column, h1, h2, k)`` — map-side combine collapses
    duplicate values, and the shuffle carries FIXED-WIDTH fact rows,
    never the value text: a near-unique 100-TB text column shuffles ~60
@@ -26,8 +28,12 @@ The long shape also keeps the plan a FIXED handful of expressions no
 matter how many columns the table has — the wide per-column-agg
 alternative (~12 exprs × N columns + an N-way distinct Expand) showed
 superlinear planning/codegen cost (~10 s for a 27-column 3k-row table).
-The plans are built as SQL text; only the pandas UDFs are Column
-objects, each staged in one projection.
+Exploding before computing the facts extends that to the generated
+code: only the explode itself is written per column, so no stage after
+it grows with the width (writing the 13 facts per column inside the
+explode gave a 58 KB method at 27 columns, past HotSpot's 8,000-byte
+JIT limit).  The plans are built as SQL text; only the pandas UDFs are
+Column objects, each staged in one projection.
 
 Semantic quirks faithfully reproduced:
 
@@ -313,19 +319,41 @@ _RE_ALPHA = r"[\p{L}]"
 _RE_SPECIAL = r"[^\p{L}\p{N}\s]"
 
 
+#: ColInfo.kind by the code each column's struct carries in the explode
+_KIND_CODES = ("string", "bool", "int", "double", "timestamp", "date",
+               "decimal", "other")
+_KIND = {kind: i for i, kind in enumerate(_KIND_CODES)}
+
+
+def _explode(df: DataFrame, cols: list[ColInfo]) -> DataFrame:
+    """One row per (row, column) of ``df`` (which has a ``__row_seq``):
+    ``seq``, the column name ``c``, its ``kind`` code (:data:`_KIND`),
+    its key text ``x`` (:func:`_key_sql`, NULL iff the value is NULL)
+    and ``nv``, the value of an int/double column as a double.
+
+    Each column contributes one small struct, so per-value expressions
+    are written once over the exploded rows, not once per column."""
+    structs = ", ".join(_named_struct({
+        "c": sql_string(ci.name), "kind": str(_KIND[ci.kind]),
+        "x": _key_sql(ci),
+        "nv": (f"CAST({sql_ident(ci.name)} AS DOUBLE)"
+               if ci.kind in ("int", "double") else "CAST(NULL AS DOUBLE)"),
+    }) for ci in cols)
+    return df.selectExpr(f"{ROW_SEQ} AS seq", f"inline(array({structs}))")
+
+
 def _raw_long_frame(
     df: DataFrame, cols: list[ColInfo], empty_values: list[str]
 ) -> DataFrame:
     """Explode the RAW frame (with its ``__row_seq``) to one row per
     (column, value) with a HASH group key and map-side per-value facts.
 
-    The long shape keeps the aggregation plan a FIXED handful of
-    expressions no matter how many columns the table has — the wide
-    per-column agg alternative needs ~12 expressions × N columns plus an
-    N-way distinct Expand, whose planning/codegen cost grows superlinearly
-    (observed: ~10s to aggregate a 27-column table of 3k rows).  The
-    string columns' ``guess_datatype`` kernel is staged in one
-    projection; the explode is one SQL ``inline(array(named_struct(...)))``.
+    The explode comes first (:func:`_explode`); one projection after it
+    computes every fact once, keyed on the column's ``kind``, and the
+    string columns' ``guess_datatype`` kernel runs once over the long
+    frame.  Only the explode's structs are written per column: no
+    expression after it, and no stage's generated code but the
+    explode's own, grows with the table's width.
 
     Scale contract: the shuffle key is ``(c, h1, h2, k)`` — a 128-bit
     xxhash64 pair of the stringified value — and every per-value fact
@@ -343,49 +371,37 @@ def _raw_long_frame(
     run post-group, once per distinct value.  ``k`` is a function of the
     hashed value, so grouping by it too leaves the groups unchanged.
     """
-    cls = {ci.name: f"{ci.safe}__cls" for ci in cols if ci.kind == "string"}
-    if cls:
-        # guess_datatype per row (Arrow-vectorized), one projection
-        df = df.withColumns({
-            out: _udfs()["classify_string"](F.expr(sql_ident(name)))
-            for name, out in cls.items()})
-    structs = []
-    for ci in cols:
-        c = sql_ident(ci.name)
-        v = f"coalesce({_key_sql(ci)}, 'None')"  # str(None)
-        if ci.kind == "string":
-            vb = f"CASE WHEN {c} IS NOT NULL THEN {cls[ci.name]}.vb END"
-            nv = (f"CASE WHEN {c} IS NOT NULL AND ({cls[ci.name]}.vb & "
-                  f"{_VT_BIT['int'] | _VT_BIT['float']}) != 0 "
-                  f"THEN {cls[ci.name]}.nv END")
-            rawlen = f"length({c})"
-            dn, an, sn = (
-                f"CASE WHEN {c} IS NOT NULL AND length({c}) > 0 AND {c} "
-                f"RLIKE {sql_string(rx)} THEN 1 ELSE 0 END"
-                for rx in (_RE_DIGIT, _RE_ALPHA, _RE_SPECIAL))
-        else:
-            bit = _VT_BIT[_VT_OF_KIND[ci.kind]]
-            vb = f"CASE WHEN {c} IS NOT NULL THEN {bit} END"
-            nv = (f"CAST({c} AS DOUBLE)" if ci.kind in ("int", "double")
-                  else "CAST(NULL AS DOUBLE)")
-            rawlen = "CAST(NULL AS INT)"
-            # char-class counts apply to str values only (stats.py:409-423)
-            dn = an = sn = "0"
-        if ci.kind in _TEXT_KINDS:
-            k = "CAST(NULL AS STRING)"
-            ln = f"length({v})"
-            mk = f"NOT {sql_in(v, empty_values)}"
-        else:
-            k = v
-            ln = "CAST(NULL AS INT)"        # from display form, post-group
-            mk = "CAST(NULL AS BOOLEAN)"    # from display form, post-group
-        structs.append(_named_struct({
-            "c": sql_string(ci.name), "h1": f"xxhash64({v})",
-            "h2": f"xxhash64({v}, 1)", "k": k, "ln": ln, "vb": vb, "nv": nv,
-            "isnull": f"{c} IS NULL", "rawlen": rawlen, "dn": dn, "an": an,
-            "sn": sn, "mk": mk}))
-    return df.selectExpr(f"{ROW_SEQ} AS seq",
-                         f"inline(array({', '.join(structs)}))")
+    long = _explode(df, cols)
+    s = _KIND["string"]
+    # a non-null value's vt bit: per value for strings, fixed otherwise
+    bits = " ".join(f"WHEN {_KIND[kind]} THEN {_VT_BIT[vt]}"
+                    for kind, vt in _VT_OF_KIND.items())
+    nv = "nv"
+    if any(ci.kind == "string" for ci in cols):
+        # guess_datatype per string value (Arrow-vectorized), one call
+        # over the long frame; other columns' values reach it as NULL
+        long = long.withColumns({"cls": _udfs()["classify_string"](
+            F.expr(f"CASE WHEN kind = {s} THEN x END"))})
+        bits = f"WHEN {s} THEN cls.vb {bits}"
+        nv = (f"CASE WHEN kind != {s} THEN nv WHEN (cls.vb & "
+              f"{_VT_BIT['int'] | _VT_BIT['float']}) != 0 THEN cls.nv END")
+    text = f"kind IN ({', '.join(str(_KIND[k]) for k in _TEXT_KINDS)})"
+    long = with_sql_columns(long, {"v": "coalesce(x, 'None')"})  # str(None)
+    return long.selectExpr(
+        "c", "xxhash64(v) AS h1", "xxhash64(v, 1) AS h2",
+        f"CASE WHEN NOT {text} THEN v END AS k",
+        # the short kinds take ln and mk from their display form,
+        # post-group
+        f"CASE WHEN {text} THEN length(v) END AS ln",
+        f"CASE WHEN x IS NOT NULL THEN CASE kind {bits} END END AS vb",
+        f"{nv} AS nv", "x IS NULL AS isnull",
+        f"CASE WHEN kind = {s} THEN length(x) END AS rawlen",
+        # char-class counts apply to str values only (stats.py:409-423)
+        *(f"CASE WHEN kind = {s} AND length(x) > 0 AND x RLIKE "
+          f"{sql_string(rx)} THEN 1 ELSE 0 END AS {name}"
+          for name, rx in (("dn", _RE_DIGIT), ("an", _RE_ALPHA),
+                           ("sn", _RE_SPECIAL))),
+        f"CASE WHEN {text} THEN NOT {sql_in('v', empty_values)} END AS mk")
 
 
 def _display_expr(
@@ -441,6 +457,37 @@ _COLUMN_AGGS = (
 )
 
 
+def _stats_frame(
+    df: DataFrame, cols: list[ColInfo], empty_values: list[str]
+) -> DataFrame:
+    """The per-column stats rollup of ``df`` (which has a ``__row_seq``),
+    one row per column: phase 1 per (column, value hash), the display
+    enrichment of short columns' distinct values, then phase 2."""
+    double_cols = [ci.name for ci in cols if ci.kind == "double"]
+    ts_cols = [ci.name for ci in cols if ci.kind == "timestamp"]
+
+    long = _raw_long_frame(df, cols, empty_values)
+    # phase 1: per distinct (column, 128-bit value hash).  Map-side
+    # combine collapses duplicate values before the shuffle; the shuffle
+    # rows are fixed-width facts plus ``k``, the raw key of SHORT
+    # columns only (≤ ~40 chars).
+    g0 = long.groupBy("c", "h1", "h2", "k").agg(*map(F.expr, _VALUE_AGGS))
+    # per-DISTINCT-value enrichment for SHORT columns only: Python str()
+    # display formatting decides their length/marker facts.  TEXT columns
+    # (k IS NULL) carry their facts from the map side.
+    g0, v_disp = _display_expr(g0, "k", double_cols, ts_cols)
+    g = g0.selectExpr(
+        "c", "n", "nv0", "any_null", "raw_minlen", "raw_maxlen",
+        "dn", "an", "sn",
+        f"CASE WHEN k IS NOT NULL THEN length({v_disp}) ELSE t_ln END AS ln",
+        f"coalesce(vb, 0) | CASE WHEN any_null = 1 THEN {_VT_BIT['empty']} "
+        "ELSE 0 END AS vb",
+        f"CASE WHEN k IS NOT NULL THEN NOT {sql_in(v_disp, empty_values)} "
+        "ELSE mk END AS mk",
+    )
+    return g.groupBy("c").agg(*map(F.expr, _COLUMN_AGGS))
+
+
 def compute_stats(
     df: DataFrame,
     cols: list[ColInfo],
@@ -470,29 +517,7 @@ def compute_stats(
     if not cols:
         return {}, {}
     df = with_row_seq(df)
-    double_cols = [ci.name for ci in cols if ci.kind == "double"]
-    ts_cols = [ci.name for ci in cols if ci.kind == "timestamp"]
-
-    long = _raw_long_frame(df, cols, empty_values)
-    # phase 1: per distinct (column, 128-bit value hash).  Map-side
-    # combine collapses duplicate values before the shuffle; the shuffle
-    # rows are fixed-width facts plus ``k``, the raw key of SHORT
-    # columns only (≤ ~40 chars).
-    g0 = long.groupBy("c", "h1", "h2", "k").agg(*map(F.expr, _VALUE_AGGS))
-    # per-DISTINCT-value enrichment for SHORT columns only: Python str()
-    # display formatting decides their length/marker facts.  TEXT columns
-    # (k IS NULL) carry their facts from the map side.
-    g0, v_disp = _display_expr(g0, "k", double_cols, ts_cols)
-    g = g0.selectExpr(
-        "c", "n", "nv0", "any_null", "raw_minlen", "raw_maxlen",
-        "dn", "an", "sn",
-        f"CASE WHEN k IS NOT NULL THEN length({v_disp}) ELSE t_ln END AS ln",
-        f"coalesce(vb, 0) | CASE WHEN any_null = 1 THEN {_VT_BIT['empty']} "
-        "ELSE 0 END AS vb",
-        f"CASE WHEN k IS NOT NULL THEN NOT {sql_in(v_disp, empty_values)} "
-        "ELSE mk END AS mk",
-    )
-    percol = g.groupBy("c").agg(*map(F.expr, _COLUMN_AGGS)).collect()
+    percol = _stats_frame(df, cols, empty_values).collect()
     rows = {r["c"]: r.asDict() for r in percol}
 
     aux: dict[str, dict[str, Any]] = {}
@@ -559,10 +584,8 @@ def _dictvalues_pass(
     are ≤ dictshare% distinct by definition, so groupBy(c, value)
     collapses map-side to the small distinct set.  ``max_dictvalues``
     caps what reaches the driver (first-seen order kept)."""
-    structs = ", ".join(_named_struct({
-        "c": sql_string(ci.name), "v": f"coalesce({_key_sql(ci)}, 'None')",
-        "isnull": f"{sql_ident(ci.name)} IS NULL"}) for ci in dict_cols)
-    long = df.selectExpr(f"{ROW_SEQ} AS seq", f"inline(array({structs}))")
+    long = _explode(df, dict_cols).selectExpr(
+        "seq", "c", "coalesce(x, 'None') AS v", "x IS NULL AS isnull")
     g = long.groupBy("c", "v").agg(
         F.expr("min(seq) AS first_seen"),
         F.expr("max(CAST(isnull AS INT)) AS any_null"))

@@ -3,6 +3,12 @@ stats equivalence across partitionings."""
 
 from __future__ import annotations
 
+import datetime as dt
+import decimal
+import json
+import math
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from metacrafter_spark.analyzer import analyzed_columns, compute_stats
@@ -70,3 +76,71 @@ def test_every_value_type_has_a_bitmask_code():
     assert _vt_names(0) == set()
     with pytest.raises(ValueError, match="outside VT_CODES"):
         _vt_names(1 << len(VT_CODES))
+
+
+TYPED_GOLDEN = Path(__file__).parent / "golden" / "typed_stats.json"
+
+
+def _typed_frame(spark):
+    """One column per ``ColInfo.kind`` (int and double twice, at two
+    widths), an all-NULL string column and one of empty markers."""
+    strings = ["", "None", "NaN", "-", "N/A", " ", "007", "12", "1.5",
+               "abc", "x_y", "1_000", "nan", "inf", "ümlaut", None]
+    doubles = [None, 0.1, 1e-07, 1.5e7, float("nan"), float("inf"), -0.0,
+               123456789.125, 3.0]
+    rows = [(
+        strings[i % len(strings)],
+        None if i % 7 == 0 else bool(i % 3),
+        None if i % 5 == 0 else (i % 9) * 10 ** (i % 19),
+        None if i % 11 == 0 else i % 4,
+        doubles[i % len(doubles)],
+        None if i % 10 == 0 else i / 8,
+        None if i % 6 == 0 else dt.datetime(2024, 1, 1 + i % 3, 5, i % 60,
+                                            0, (i % 2) * 500_000),
+        None if i % 4 == 0 else dt.date(2020, 1 + i % 2, 1),
+        None if i % 8 == 0 else decimal.Decimal(i % 5) / 4,
+        None if i % 3 == 0 else [i % 2, i % 3],
+        None if i % 9 == 0 else f"b{i % 4}".encode(),
+        None, f"u{i}", ["N/A", "-", ""][i % 3],
+    ) for i in range(240)]
+    return spark.createDataFrame(
+        rows,
+        "str_col string, bool_col boolean, long_col long, int_col int, "
+        "dbl_col double, flt_col float, ts_col timestamp, date_col date, "
+        "dec_col decimal(10,2), arr_col array<int>, bin_col binary, "
+        "null_col string, uniq_col string, mark_col string")
+
+
+def _typed_stats(spark) -> dict:
+    """``compute_stats`` results and aux of :func:`_typed_frame`, as
+    JSON values (NaN spelled ``"NaN"`` so that it compares equal)."""
+    def plain(o):
+        if isinstance(o, float) and math.isnan(o):
+            return "NaN"
+        if isinstance(o, dict):
+            return {k: plain(v) for k, v in o.items()}
+        if isinstance(o, (list, tuple)):
+            return [plain(v) for v in o]
+        return o
+
+    df = _typed_frame(spark)
+    stats, aux = compute_stats(df, analyzed_columns(df))
+    return plain({"stats": {k: v.as_dict() for k, v in stats.items()},
+                  "aux": aux})
+
+
+def test_typed_stats_match_golden(spark):
+    """Every column kind's stats and aux, pinned from the per-column
+    explode the stats plan had before it exploded first.  Regenerate
+    with ``python tests/test_analyzer_caps.py`` only for a change that
+    means to move them."""
+    got = json.loads(json.dumps(_typed_stats(spark)))
+    assert got == json.loads(TYPED_GOLDEN.read_text())
+
+
+if __name__ == "__main__":
+    from metacrafter_spark.session import get_spark
+
+    TYPED_GOLDEN.write_text(json.dumps(
+        _typed_stats(get_spark(app_name="typed-golden", cores=2)),
+        indent=1, sort_keys=True) + "\n")

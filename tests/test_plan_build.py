@@ -16,6 +16,7 @@ import contextlib
 import gc
 import datetime as dt
 import gzip
+import re
 import shutil
 import sys
 import time
@@ -24,6 +25,9 @@ from pathlib import Path
 import pytest
 from py4j.clientserver import ClientServerConnection
 
+from metacrafter_spark.analyzer import (
+    _stats_frame, analyzed_columns, with_row_seq,
+)
 from metacrafter_spark.cli import main
 from metacrafter_spark.corpus.pipeline import classify_corpus
 from metacrafter_spark.corpus.webpages import synth_webpages
@@ -46,6 +50,10 @@ READ_CEILING = 400
 #: canonicalize_url, ~3,150 with Column-API trees in the CDX parse, the
 #: HLL registers and the resume observations
 WARC_INGEST_CEILING = 2_350
+#: HotSpot compiles no method of more bytecode bytes than this
+#: (``-XX:-DontCompileHugeMethods`` is off by default): a larger
+#: generated method runs interpreted
+HUGE_METHOD_BYTES = 8_000
 #: a whole scan-file call on a 27-column gzip CSV, Spark jobs included:
 #: measured 1,130-1,250 alone and 2,236 late in the full suite; the
 #: Column-API analyzer and matcher made ~37,700
@@ -205,3 +213,48 @@ def test_scan_file_stats_hash_aggregate_only(scan_file_calls):
     for plan in plans:
         assert "ObjectHashAggregate" not in plan
         assert "SortAggregate" not in plan
+
+
+@pytest.fixture
+def aqe_off(spark):
+    """AQE off for the test: ``codegenStringSeq`` reads the stages of a
+    plan that is not adaptive."""
+    key = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    yield
+    spark.conf.set(key, old)
+
+
+def _stats_method_bytes(spark, ncols: int) -> dict[str, int]:
+    """The largest generated method of each whole-stage subtree of the
+    column-stats frame over ``ncols`` string columns, by the subtree's
+    root operator (expression ids stripped)."""
+    df = with_row_seq(spark.range(50).selectExpr(*(
+        f"CAST(id % 7 AS STRING) AS col{i:03d}" for i in range(ncols))))
+    plan = _stats_frame(df, analyzed_columns(df), ["", "None"]) \
+        ._jdf.queryExecution().executedPlan()
+    debug = spark._jvm.org.apache.spark.sql.execution.debug.package
+    stages = debug.codegenStringSeq(plan)
+    out = {}
+    for i in range(stages.size()):
+        stage = stages.apply(i)
+        root = re.sub(r"#\d+L?", "", stage._1().strip().splitlines()[0])
+        out[root] = stage._3().maxMethodCodeSize()
+    return out
+
+
+def test_stats_generated_methods_do_not_grow_with_columns(spark, aqe_off):
+    """The stats explode comes first and each per-value fact is written
+    once after it, so only the explode's own stage grows with the
+    column count; every stage after it generates the same code at 10
+    and 100 columns, and no method passes HotSpot's JIT limit at the
+    benchmark's 27."""
+    def after_explode(sizes):
+        return {root: n for root, n in sizes.items()
+                if "Generate" not in root}
+
+    narrow = after_explode(_stats_method_bytes(spark, 10))
+    assert narrow
+    assert after_explode(_stats_method_bytes(spark, 100)) == narrow
+    assert max(_stats_method_bytes(spark, 27).values()) <= HUGE_METHOD_BYTES
