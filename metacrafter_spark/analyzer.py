@@ -125,6 +125,15 @@ def _python_float_series(s: pd.Series) -> pd.Series:
     return nv.astype("float64")
 
 
+def _python_int(v: str) -> float:
+    """``int(v)`` as a float; NaN where it raises (``str.isdigit``
+    accepts superscripts such as '²', which ``int`` rejects)."""
+    try:
+        return float(int(v))
+    except (ValueError, OverflowError):
+        return float("nan")
+
+
 def _classify_string_fn(s: pd.Series) -> pd.DataFrame:
     """guess_datatype for string values (stats.py:125-146), vectorized."""
     vt = pd.Series("str", index=s.index, dtype="object")
@@ -137,8 +146,15 @@ def _classify_string_fn(s: pd.Series) -> pd.DataFrame:
     digits = st.str.isdigit().fillna(False) & live
     leading0 = st.str.startswith("0").fillna(False)
     vt[digits & leading0] = "numstr"
-    vt[digits & ~leading0] = "int"
-    nv[digits & ~leading0] = pd.to_numeric(st[digits & ~leading0], errors="coerce")
+    ints = digits & ~leading0
+    vt[ints] = "int"
+    iv = pd.to_numeric(st[ints], errors="coerce").astype("float64")
+    # int() also reads other scripts' decimal digits ('٣', '１２'),
+    # which to_numeric does not
+    other = iv.isna()
+    if other.any():
+        iv[other] = st[ints][other].map(_python_int).astype("float64")
+    nv[ints] = iv
     floaty = live & ~digits
     if floaty.any():
         fv = _python_float_series(s[floaty])

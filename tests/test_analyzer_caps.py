@@ -144,3 +144,27 @@ if __name__ == "__main__":
     TYPED_GOLDEN.write_text(json.dumps(
         _typed_stats(get_spark(app_name="typed-golden", cores=2)),
         indent=1, sort_keys=True) + "\n")
+
+
+def test_unicode_digits_take_their_int_value(spark):
+    """``int()`` reads every script's decimal digits, so '٣' and '１２'
+    are ints 3 and 12 in ``minval``/``maxval``, as in the reference;
+    and the kernel assigns no value of another dtype into its float
+    column (pandas warns that this will raise)."""
+    import warnings
+
+    import pandas as pd
+
+    from metacrafter_spark.analyzer import _classify_string_fn
+
+    values = pd.Series(["٣", "１２", "7", "²", None], dtype="object")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        out = _classify_string_fn(values)
+    assert list(out["vt"]) == ["int", "int", "int", "int", "empty"]
+    assert out["nv"][:3].tolist() == [3.0, 12.0, 7.0]
+    assert out["nv"][3:].isna().all()  # int('²') raises
+
+    df = spark.createDataFrame([(v,) for v in values], "digits string")
+    stats, _ = compute_stats(df, analyzed_columns(df))
+    assert (stats["digits"].minval, stats["digits"].maxval) == (3.0, 12.0)
