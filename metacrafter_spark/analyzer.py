@@ -335,10 +335,11 @@ _RE_ALPHA = r"[\p{L}]"
 _RE_SPECIAL = r"[^\p{L}\p{N}\s]"
 
 
-#: ColInfo.kind by the code each column's struct carries in the explode
-_KIND_CODES = ("string", "bool", "int", "double", "timestamp", "date",
-               "decimal", "other")
-_KIND = {kind: i for i, kind in enumerate(_KIND_CODES)}
+#: the code of each ColInfo.kind, as a column's struct carries it in
+#: the explode
+_KIND = {kind: i for i, kind in enumerate((
+    "string", "bool", "int", "double", "timestamp", "date", "decimal",
+    "other"))}
 
 
 def _explode(df: DataFrame, cols: list[ColInfo]) -> DataFrame:

@@ -132,8 +132,8 @@ def _typed_stats(spark) -> dict:
 def test_typed_stats_match_golden(spark):
     """Every column kind's stats and aux, pinned from the per-column
     explode the stats plan had before it exploded first.  Regenerate
-    with ``python tests/test_analyzer_caps.py`` only for a change that
-    means to move them."""
+    with ``PYTHONPATH=. python tests/test_analyzer_caps.py`` only for a
+    change that means to move them."""
     got = json.loads(json.dumps(_typed_stats(spark)))
     assert got == json.loads(TYPED_GOLDEN.read_text())
 

@@ -11,6 +11,9 @@ a stage slides back to per-column Column-API trees.  Each counts
 lazy frame is BUILT; no Spark job runs inside a counted block, except
 in the whole-call ``warc-ingest`` and ``scan-file`` ceilings, which
 count everything one call sends.
+
+The column stats are also held to generated code that does not grow
+with the table's width past the explode.
 """
 import contextlib
 import gc
@@ -51,8 +54,8 @@ READ_CEILING = 400
 #: HLL registers and the resume observations
 WARC_INGEST_CEILING = 2_350
 #: HotSpot compiles no method of more bytecode bytes than this
-#: (``-XX:-DontCompileHugeMethods`` is off by default): a larger
-#: generated method runs interpreted
+#: (``DontCompileHugeMethods`` is on by default): a larger generated
+#: method runs interpreted
 HUGE_METHOD_BYTES = 8_000
 #: a whole scan-file call on a 27-column gzip CSV, Spark jobs included:
 #: measured 1,130-1,250 alone and 2,236 late in the full suite; the
